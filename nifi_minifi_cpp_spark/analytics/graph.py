@@ -1,5 +1,16 @@
-"""Distributed connected components — transitive closure for dedup.
+"""Iterative graph operators as barriered rounds of DataFrame joins.
 
+Every operator starts from ONE materialized edge table
+(``_edge_table``: distinct ``(_s, _d)`` rows, both orientations for
+the undirected algorithms) and reads each dial it needs — the edge or
+node count behind ``BROADCAST_MAX_NODES``/``BARRIER_MAX_EDGES``, a
+round's changed-row count, pagerank's |S| — through
+``util.observed_barrier``: the figure is computed by the barrier's own
+materializing job, so no builder fires a separate count action. The
+barriers themselves are eager: a builder blocks the driver while they
+run, before it returns its (lazy) result frame.
+
+Distributed connected components — transitive closure for dedup.
 The pairwise dedup family (MinHash/SimHash/embedding/semantic) drops
 near-duplicates against a kept exemplar; when duplicate relations
 CHAIN (A~B, B~C, but A!~C), cluster-consistent dedup needs the
@@ -18,8 +29,10 @@ round is two shuffles on (node, label) pairs — 16 bytes a row at
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
+
+from ..util import observed_barrier, reliable_barrier
 
 # Node-frame broadcast dial shared by the iterative operators
 # (optimization r16, guide §3.1): every per-round join here pairs the
@@ -33,11 +46,13 @@ from pyspark.sql import functions as F
 # frame makes every round a map-side hash join over the stationary
 # edge table: the only per-round shuffle left is the small partial-agg
 # exchange. Past the dial the plans fall back to the shuffled joins,
-# which is the right shape for billion-node graphs.
+# which is the right shape for billion-node graphs. triangle_count's
+# adjacency table (m neighbor longs plus n keys, so its edge count IS
+# its size: 8M edges ~ 64 MB of array payload) uses the same dial.
 BROADCAST_MAX_NODES = 8_000_000  # (long, double) rows ~ 128 MB built
 
-# Materialize-vs-recompute dial for the symmetric-pagerank weighted
-# edge table (optimization r17): barriering (src, dst, deg) costs
+# Materialize-vs-recompute dial for pagerank's weighted edge table
+# (optimization r17): barriering (src, dst, deg) costs
 # ~24 B x |E| through the executor storage layer but saves one
 # degree re-aggregation per round; the 100x probe measured the
 # crossover — at 1.2M edges the barrier wins (~0.7x), at 120M edges
@@ -48,9 +63,25 @@ BROADCAST_MAX_NODES = 8_000_000  # (long, double) rows ~ 128 MB built
 # billion-edge graphs.
 BARRIER_MAX_EDGES = 16_000_000
 
+# pagerank cuts its rank lineage every this many rounds so long runs
+# do not stack unbounded plan depth
+_RANK_BARRIER_EVERY = 4
+
 
 def _maybe_broadcast(df: DataFrame, fits: bool) -> DataFrame:
     return F.broadcast(df) if fits else df
+
+
+def _edge_table(
+    edges: DataFrame, src: str, dst: str, undirected: bool
+) -> tuple[DataFrame, int]:
+    """Distinct ``(_s, _d)`` edges behind one barrier — both
+    orientations when ``undirected`` — and their observed row count."""
+    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    if undirected:
+        e = e.unionByName(edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d")))
+    e, size = observed_barrier(e.distinct())
+    return e, size["n"]
 
 
 def connected_components(
@@ -67,38 +98,26 @@ def connected_components(
     Raises if the fixpoint is not reached in ``max_iterations`` rounds
     (log2 of the longest path; 30 covers any graph a real corpus
     produces) rather than returning silently-wrong labels.
-    
-    NOTE: the builder runs one eager count at plan-construction
-    time (a cached-RDD count on the barriered edge/node frame) to
-    set the broadcast dial — a driver-blocking action inside a
-    builder API, cheap because the frame is already barriered.
     """
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
-    from ..util import reliable_barrier
-
-    sym = reliable_barrier(sym)
+    sym, m = _edge_table(edges, src, dst, undirected=True)
     # broadcast dial (module note): the (node, label) frame is node-
-    # sized (<= 2|E| via the cheap barriered edge count); when it fits,
-    # the neighbor-min join and the pointer jump are map-side and the
-    # symmetric edge table never shuffles per round
-    fits = 2 * sym.count() <= BROADCAST_MAX_NODES
+    # sized (<= 2|E|); when it fits, the neighbor-min join and the
+    # pointer jump are map-side and the symmetric edge table never
+    # shuffles per round
+    fits = 2 * m <= BROADCAST_MAX_NODES
     labels = reliable_barrier(
-        sym.groupBy("a")
-        .agg(F.min("b").alias("nmin"))
-        .select(F.col("a").alias("node"), F.least("a", "nmin").alias("label"))
+        sym.groupBy("_s")
+        .agg(F.min("_d").alias("nmin"))
+        .select(F.col("_s").alias("node"), F.least("_s", "nmin").alias("label"))
     )
 
     for _ in range(max_iterations):
         # neighbor-min: the smallest label among my neighbors and me
         nbr = (
-            sym.join(_maybe_broadcast(labels.withColumnRenamed("node", "b"), fits), "b")
-            .groupBy("a")
+            sym.join(_maybe_broadcast(labels.withColumnRenamed("node", "_d"), fits), "_d")
+            .groupBy("_s")
             .agg(F.min("label").alias("nmin"))
-            .select(F.col("a").alias("node"), "nmin")
+            .select(F.col("_s").alias("node"), "nmin")
         )
         # carry the round-entry label as `old` so convergence is an
         # exact changed-row COUNT, not a sum of labels: with 64-bit
@@ -125,18 +144,16 @@ def connected_components(
         # barrier each round: an iterative plan otherwise compounds
         # analysis depth linearly with rounds (persist alone does not
         # truncate lineage) and the analyzer/codegen eventually fails
-        new_labels = reliable_barrier(
+        new_labels, changed = observed_barrier(
             jump.select(
                 "node",
                 F.least("label", F.coalesce("label2", "label")).alias("label"),
                 "old",
-            )
+            ),
+            F.sum((F.col("label") < F.col("old")).cast("long")).alias("c"),
         )
-        changed = new_labels.agg(
-            F.sum((F.col("label") < F.col("old")).cast("long")).alias("c")
-        ).first()[0]
         labels = new_labels.select("node", "label")
-        if not changed:
+        if not changed["c"]:
             return labels.select("node", F.col("label").alias("component"))
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} rounds"
@@ -161,15 +178,42 @@ def dedup_by_components(
     return df.join(drop, id_col, "left_anti")
 
 
+def _weighted_edges(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, Row, DataFrame]:
+    """The PageRank preparation ``pagerank`` and ``pagerank_grouped``
+    share: the barriered node table ``(node, _deg, _indeg)`` built from
+    both edge columns, its observed sizes (``n`` nodes, ``m`` edges,
+    ``open`` nodes lacking an in-edge or an out-edge), and the weighted
+    edge table ``(_s, _d, _deg)`` — static per run, so it is barriered
+    while it fits ``BARRIER_MAX_EDGES`` (module dial note)."""
+    e, _ = _edge_table(edges, src, dst, undirected=False)
+    ends = e.select(
+        F.col("_s").alias("node"), F.lit(1).alias("_o"), F.lit(0).alias("_i")
+    ).unionByName(
+        e.select(F.col("_d").alias("node"), F.lit(0).alias("_o"), F.lit(1).alias("_i"))
+    )
+    nodes, size = observed_barrier(
+        ends.groupBy("node").agg(F.sum("_o").alias("_deg"), F.sum("_i").alias("_indeg")),
+        F.count(F.lit(1)).alias("n"),
+        F.sum("_deg").alias("m"),
+        F.count(F.when((F.col("_deg") == 0) | (F.col("_indeg") == 0), 1)).alias("open"),
+    )
+    fits = size["n"] <= BROADCAST_MAX_NODES
+    deg = nodes.select(F.col("node").alias("_s"), "_deg")
+    weighted = e.join(_maybe_broadcast(deg, fits), "_s")
+    if (size["m"] or 0) <= BARRIER_MAX_EDGES:
+        weighted = reliable_barrier(weighted)
+    return nodes, size, weighted
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    barrier_every: int = 4,
     teleport: DataFrame | None = None,
-    symmetric: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank (Page et al. 1999) as DataFrame joins —
     the second iterative-algorithm class next to connected_components.
@@ -184,10 +228,7 @@ def pagerank(
     seeds ranking, the data-selection primitive ("expand from these
     known-good suppliers/domains"). The seed frame is joined once as
     a flag onto the slim node table; per-iteration cost is unchanged.
-    NOTE: the builder runs one eager node count at plan-construction
-    time (a cached-RDD count on the barriered node table — it is the
-    uniform-restart denominator and the broadcast dial), plus, when
-    ``teleport`` is given, the one-row |S| > 0 validation aggregate.
+    Raises ``ValueError`` when no seed appears in the edge list.
 
     Dangling nodes (out-degree 0) keep their rank mass out of play —
     the caller symmetrizes the edge set when that matters (an
@@ -195,76 +236,57 @@ def pagerank(
 
     100 TB shape: each iteration is ONE equi-join of the slim
     (node, rank) table onto the edge list plus a groupBy sum — the
-    classic map-reduce PageRank; the edge table and degree table are
-    computed once and reused (barrier), and the rank lineage is cut
-    every ``barrier_every`` iterations so long runs do not stack
-    unbounded plan depth. When the measured node count fits
+    classic map-reduce PageRank; the node table and the weighted edge
+    table are computed once and reused (barrier), and the rank lineage
+    is cut every few iterations so long runs do not stack unbounded
+    plan depth. When the measured node count fits
     ``BROADCAST_MAX_NODES``, the (node, rank) frame is broadcast into
     the per-round joins (module dial note) so the edge table is never
     shuffled or broadcast per round; larger graphs fall back to the
     shuffled joins unchanged.
 
-    ``symmetric=True`` declares (caller contract — the builder does not
-    re-verify it) that the edge set contains BOTH orientations of every
-    edge, which two structural facts make cheaper without changing a
-    single output row (optimization r17, guide §2.1/§3.1):
-
-    - every node appears as a source, so the node table IS the degree
-      table's key column — the 2|E|-row union + distinct node pass
-      disappears;
-    - every node has at least one in-edge, so the per-round contribs
-      aggregate already covers every node and the per-round
-      nodes-left-join (the zero-fill for in-degree-0 nodes) is dead
-      code — each round is just join + aggregate + (for PPR) one
-      broadcast join against the |S|-row restart frame;
-    - the (edge ⋈ out-degree) table is materialized ONCE behind a
-      barrier instead of re-deriving the degree aggregate inside every
-      round's plan.
+    The node table's observation picks the round shape. When every
+    node has both an in-edge and an out-edge (any symmetric edge set),
+    each round's contribs aggregate already covers every node, so the
+    rank frame is built from it directly — for PPR with one broadcast
+    join against the |S|-row restart frame. Otherwise each round
+    zero-fills the nodes without an in-edge through a left join from
+    the node table. Both shapes evaluate the same rank expression, so
+    the choice never changes an output bit.
     """
-    from ..util import reliable_barrier
-
-    e = reliable_barrier(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    )
-    deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
-    if symmetric:
-        return _pagerank_symmetric(e, deg, iterations, damping, barrier_every, teleport)
-    nodes = reliable_barrier(
-        e.select(F.col("_s").alias("node"))
-        .unionByName(e.select(F.col("_d").alias("node")))
-        .distinct()
-    )
-    # |V| once, from the barriered slim table (a cheap cached-RDD count):
-    # it is both the uniform-restart denominator — previously re-derived
-    # every round as a crossJoin'd broadcast aggregate, four extra
-    # exchanges per run — and the broadcast dial for the per-round joins.
-    n_nodes = nodes.count()
+    nodes, size, weighted = _weighted_edges(edges, src, dst)
+    n_nodes = size["n"]
     fits = n_nodes <= BROADCAST_MAX_NODES
-    if teleport is not None:
+    dense = size["open"] == 0
+    if teleport is None:
+        restart = nodes.select("node", F.lit(1.0 / n_nodes).alias("_b"))
+    else:
         seeds = teleport.select(F.col("node")).distinct()
-        nodes = nodes.join(
-            seeds.withColumn("_seed", F.lit(1)), "node", "left"
-        ).select("node", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed"))
-        nodes = reliable_barrier(nodes)
+        # barrier: consumed by the |S| observation, the rank start and
+        # the restart frame — without it each consumer re-runs the seed
+        # frame's own source scan
+        flagged, n_seeds = observed_barrier(
+            nodes.join(seeds.withColumn("_seed", F.lit(1)), "node", "left").select(
+                "node", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed")
+            ),
+            F.sum("_seed").cast("long").alias("n"),
+        )
         # |S| after intersecting seeds with the graph's node set: if
         # no seed appears in the edge list the denominator is 0 and
         # every rank would silently become NULL — fail loudly instead
-        # (one-row aggregate over the already-barriered slim table).
-        n_seeds = nodes.agg(F.sum("_seed").cast("long").alias("_n")).collect()[0]["_n"]
-        if not n_seeds:
+        if not n_seeds["n"]:
             raise ValueError(
                 "pagerank(teleport=...): no teleport seed appears in the "
                 "edge list; restart mass denominator |S| is 0"
             )
-        # |S| is already on the driver — a literal, same integer/integer
-        # double division as the previous broadcast-column form.
-        base = F.col("_seed") / F.lit(int(n_seeds))
-    else:
-        nodes = nodes.withColumn("_seed", F.lit(1))
-        # same IEEE double as the previous runtime 1.0 / count division
-        base = F.lit(1.0 / n_nodes)
-    ranks = nodes.select("node", base.alias("rank"))
-    weighted = e.join(deg, "_s")  # (src, dst, out-degree), static per run
+        restart = flagged.select(
+            "node", (F.col("_seed") / F.lit(int(n_seeds["n"]))).alias("_b")
+        )
+    ranks = restart.select("node", F.col("_b").alias("rank"))
+    if dense and teleport is not None:
+        # only the |S| seed rows carry restart mass — the per-round
+        # join against them broadcasts |S| rows, not |V|
+        restart = F.broadcast(reliable_barrier(restart.filter(F.col("_b") > 0)))
     for i in range(iterations):
         contribs = (
             weighted.join(
@@ -274,112 +296,20 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("_c").alias("_in"))
         )
-        ranks = (
-            nodes.join(_maybe_broadcast(contribs, fits), "node", "left")
-            .select(
-                "node",
-                (
-                    (1.0 - damping) * base
-                    + damping * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % barrier_every == 0 and i + 1 < iterations:
-            ranks = reliable_barrier(ranks)
-    return ranks
-
-
-def _pagerank_symmetric(
-    e: DataFrame,
-    deg: DataFrame,
-    iterations: int,
-    damping: float,
-    barrier_every: int,
-    teleport: DataFrame | None,
-) -> DataFrame:
-    """``pagerank`` body under the symmetric-edge-set contract (see the
-    public docstring): nodes come from the degree table, the weighted
-    edge table is barriered once, and the per-round zero-fill join is
-    skipped because contribs is provably dense. Arithmetic is kept
-    expression-for-expression identical to the general path so the two
-    produce bit-identical ranks on a symmetric input."""
-    from ..util import reliable_barrier
-
-    deg = reliable_barrier(deg)
-    # one aggregate supplies both dials: |V| (rows of the degree table)
-    # and |E| (sum of out-degrees) — no separate edge-count job
-    sizes = deg.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("_deg").alias("m")
-    ).first()
-    n_nodes, m_edges = sizes["n"], int(sizes["m"] or 0)
-    fits = n_nodes <= BROADCAST_MAX_NODES
-    nodes = deg.select(F.col("_s").alias("node"))
-    seed_base = None
-    if teleport is not None:
-        seeds = teleport.select(F.col("node")).distinct()
-        # barrier: consumed three times (|S| aggregate, rank start,
-        # restart frame) — without it each consumer re-runs the seed
-        # frame's own source scan
-        flagged = reliable_barrier(
-            nodes.join(
-                seeds.withColumn("_seed", F.lit(1)), "node", "left"
-            ).select("node", F.coalesce(F.col("_seed"), F.lit(0)).alias("_seed"))
-        )
-        n_seeds = flagged.agg(F.sum("_seed").cast("long").alias("_n")).collect()[0]["_n"]
-        if not n_seeds:
-            raise ValueError(
-                "pagerank(teleport=...): no teleport seed appears in the "
-                "edge list; restart mass denominator |S| is 0"
-            )
-        # same int/int -> double division as the general path's
-        # _seed / lit(|S|) column (with _seed == 1 on this frame)
-        base = F.col("_seed") / F.lit(int(n_seeds))
-        ranks = flagged.select("node", base.alias("rank"))
-        # the restart frame carries only the |S| seed rows — the
-        # per-round join against it broadcasts |S| rows, not |V|
-        seed_base = F.broadcast(
-            reliable_barrier(
-                flagged.filter(F.col("_seed") == 1).select("node", base.alias("_b"))
-            )
-        )
-    else:
-        base = F.lit(1.0 / n_nodes)
-        ranks = nodes.select("node", base.alias("rank"))
-    weighted = e.join(_maybe_broadcast(deg, fits), "_s")
-    if m_edges <= BARRIER_MAX_EDGES:  # module dial note: bounded bytes
-        weighted = reliable_barrier(weighted)
-    for i in range(iterations):
-        contribs = (
-            weighted.join(
-                _maybe_broadcast(ranks.withColumnRenamed("node", "_s"), fits), "_s"
-            )
-            .select(F.col("_d").alias("node"), (F.col("rank") / F.col("_deg")).alias("_c"))
-            .groupBy("node")
-            .agg(F.sum("_c").alias("_in"))
-        )
-        # contribs covers every node (symmetric contract), so build the
-        # next rank frame from it directly; only PPR needs the restart
-        # term joined back, from the |S|-row frame. coalesce(_in, .)
-        # never fires here — kept so the expression matches the general
-        # path exactly.
-        if seed_base is not None:
-            restart = F.coalesce(F.col("_b"), F.lit(0.0))
-            ranks = contribs.join(seed_base, "node", "left").select(
-                "node",
-                (
-                    (1.0 - damping) * restart
-                    + damping * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
-            )
+        if not dense:
+            step = restart.join(_maybe_broadcast(contribs, fits), "node", "left")
+        elif teleport is not None:
+            step = contribs.join(restart, "node", "left")
         else:
-            ranks = contribs.select(
-                "node",
-                (
-                    (1.0 - damping) * base
-                    + damping * F.coalesce(F.col("_in"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        if (i + 1) % barrier_every == 0 and i + 1 < iterations:
+            step = contribs.withColumn("_b", F.lit(1.0 / n_nodes))
+        ranks = step.select(
+            "node",
+            (
+                (1.0 - damping) * F.coalesce(F.col("_b"), F.lit(0.0))
+                + damping * F.coalesce(F.col("_in"), F.lit(0.0))
+            ).alias("rank"),
+        )
+        if (i + 1) % _RANK_BARRIER_EVERY == 0 and i + 1 < iterations:
             ranks = reliable_barrier(ranks)
     return ranks
 
@@ -409,21 +339,11 @@ def pagerank_grouped(
     instead of g engine runs re-scanning the graph. Nodes outside a
     group's reach simply never materialize (sparse frames, not a
     dense nodes×groups grid).
-    NOTE: the builder runs one eager count at plan-construction
-    time (a cached-RDD count on the barriered edge/node frame) to
-    set the broadcast dial — a driver-blocking action inside a
-    builder API, cheap because the frame is already barriered.
     """
-    from ..util import reliable_barrier
-
-    e = reliable_barrier(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    )
-    deg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
-    weighted = reliable_barrier(e.join(deg, "_s"))
+    _, _, weighted = _weighted_edges(edges, src, dst)
     sd = seeds.select(F.col(grp).alias("_g"), F.col(node).alias("_n")).distinct()
     sizes = sd.groupBy("_g").agg(F.count(F.lit(1)).alias("_k"))
-    base = reliable_barrier(
+    base, size = observed_barrier(
         sd.join(F.broadcast(sizes), "_g").select(
             "_g", "_n", (F.lit(1.0) / F.col("_k")).alias("_b")
         )
@@ -431,11 +351,11 @@ def pagerank_grouped(
     ranks = base.select("_g", "_n", F.col("_b").alias("_r"))
     # broadcast dial (module note), per round on the MATERIALIZED rank
     # frame: round 0's frame is the barriered seed table and each later
-    # round's frame sits behind the in-loop barrier, so every count is
-    # a cheap cached-RDD count of the actual (grp, node, rank) rows —
+    # round's frame sits behind the in-loop barrier, so every dial is
+    # the observed row count of the actual (grp, node, rank) rows —
     # no g x |V| worst-case guess. When it fits, the weighted edge
     # table is never shuffled per round.
-    fits = base.count() <= BROADCAST_MAX_NODES
+    fits = size["n"] <= BROADCAST_MAX_NODES
     for i in range(iterations):
         contribs = (
             weighted.join(
@@ -457,8 +377,8 @@ def pagerank_grouped(
             )
         )
         if i + 1 < iterations:
-            ranks = reliable_barrier(ranks)
-            fits = ranks.count() <= BROADCAST_MAX_NODES
+            ranks, size = observed_barrier(ranks)
+            fits = size["n"] <= BROADCAST_MAX_NODES
     return ranks.select(
         F.col("_g").alias(grp), F.col("_n").alias(node), F.col("_r").alias("rank")
     )
@@ -490,54 +410,43 @@ def label_propagation(
     sort-window — two shuffles a round on 16-byte rows, no per-round
     sort; the edge list is computed once behind a barrier and reused
     every round.
-    
-    NOTE: the builder runs one eager count at plan-construction
-    time (a cached-RDD count on the barriered edge/node frame) to
-    set the broadcast dial — a driver-blocking action inside a
-    builder API, cheap because the frame is already barriered.
     """
-    from ..util import reliable_barrier
-
-    sym = reliable_barrier(
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .distinct()
-    )
+    sym, m = _edge_table(edges, src, dst, undirected=True)
     # broadcast dial (module note): the (node, label) frame is node-
     # sized; when it fits, each round's label join is map-side over the
     # stationary symmetric edge table
-    fits = 2 * sym.count() <= BROADCAST_MAX_NODES
-    labels = sym.select(F.col("a").alias("node")).distinct().select(
+    fits = 2 * m <= BROADCAST_MAX_NODES
+    labels = sym.select(F.col("_s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
     for r in range(iterations):
         if r == 0:
             # Round 1 on identity labels needs no join and no count
             # (optimization r17, guide §2.2): every neighbor carries
-            # its OWN distinct label, so each (a, label) count is
+            # its OWN distinct label, so each (node, label) count is
             # exactly 1 and the (count DESC, label ASC) winner is just
             # the minimum neighbor id — one map-side-combined min
             # aggregate over the barriered edge table replaces the
             # label join and the two-level count/min_by pair.
-            labels = sym.groupBy("a").agg(F.min("b").alias("label")).select(
-                F.col("a").alias("node"), "label"
+            labels = sym.groupBy("_s").agg(F.min("_d").alias("label")).select(
+                F.col("_s").alias("node"), "label"
             )
             continue
         counted = (
-            sym.join(_maybe_broadcast(labels.withColumnRenamed("node", "b"), fits), "b")
-            .groupBy("a", "label")
+            sym.join(_maybe_broadcast(labels.withColumnRenamed("node", "_d"), fits), "_d")
+            .groupBy("_s", "label")
             .agg(F.count(F.lit(1)).alias("_c"))
         )
         # top-1 via min_by over the (-count, label) struct — lexical
         # struct ordering IS the (count DESC, label ASC) rule — a hash
         # aggregate with map-side combine instead of a full sort-window
         # per round
-        labels = counted.groupBy("a").agg(
+        labels = counted.groupBy("_s").agg(
             F.min_by(
                 "label",
                 F.struct((-F.col("_c")).alias("_k1"), F.col("label").alias("_k2")),
             ).alias("label")
-        ).select(F.col("a").alias("node"), "label")
+        ).select(F.col("_s").alias("node"), "label")
     return labels
 
 
@@ -545,8 +454,6 @@ def triangle_count(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    broadcast: bool | str = "auto",
-    broadcast_max_edges: int = 8_000_000,
     orient: str = "id",
 ) -> DataFrame:
     """Global triangle census — the fourth graph-algorithm class next
@@ -566,23 +473,15 @@ def triangle_count(
     at sf0.1 — DuckDB-competitive). The intersection itself runs in
     whole-stage codegen over the two arrays.
 
-    ``broadcast`` guards the adjacency-table hint (VERDICT r10 #3 —
-    the hint used to be unconditional, an executor-memory blowup at
-    billions of edges with no way to turn it off):
-
-    - ``"auto"`` (default): broadcast iff the deduplicated edge count
-      — already materialized by the barrier, so the count is a cheap
-      metadata scan — is at most ``broadcast_max_edges``. The
-      adjacency table holds exactly m neighbor longs plus n keys, so
-      edge count IS its size: 8M edges ≈ 64 MB of array payload, safe
-      for executor broadcast; past that the same plan shuffles both
-      sides (sort-merge / shuffled-hash, AQE's pick).
-    - ``True`` / ``False``: force the hint on or off.
-
-    Broadcasting makes the per-edge intersection map-side so the
-    ~deg-sized arrays are never shipped once per edge row (measured
-    19.5s -> ~4s at sf0.1; the shuffle of two ~100-long arrays with
-    each of 1.2M edge rows was the whole cost).
+    The adjacency table is broadcast iff the deduplicated edge count
+    observed on the barrier fits ``BROADCAST_MAX_NODES`` (module dial
+    note; VERDICT r10 #3 — the hint used to be unconditional, an
+    executor-memory blowup at billions of edges). Broadcasting makes
+    the per-edge intersection map-side so the ~deg-sized arrays are
+    never shipped once per edge row (measured 19.5s -> ~4s at sf0.1;
+    the shuffle of two ~100-long arrays with each of 1.2M edge rows
+    was the whole cost); past the dial the same plan shuffles both
+    sides (sort-merge / shuffled-hash, AQE's pick).
 
     ``orient="degree"`` re-orients edges from low-degree to
     high-degree endpoints (compact-forward, Schank & Wagner 2005)
@@ -593,12 +492,10 @@ def triangle_count(
     out-degree 199, where id order is already balanced and skips the
     degree join).
     """
-    if broadcast not in ("auto", True, False):
-        raise ValueError(f"broadcast must be 'auto', True or False: {broadcast!r}")
     if orient not in ("id", "degree"):
         raise ValueError(f"orient must be 'id' or 'degree': {orient!r}")
     a, b = F.col("_a"), F.col("_b")
-    canon = (
+    e, size = observed_barrier(
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("_a"),
             F.greatest(F.col(src), F.col(dst)).alias("_b"),
@@ -606,9 +503,6 @@ def triangle_count(
         .filter(a != b)
         .distinct()
     )
-    from ..util import reliable_barrier
-
-    e = reliable_barrier(canon)
     if orient == "degree":
         # Degree rank (deg, id) totally orders nodes; orient every
         # edge from lower to higher rank. Each triangle is then
@@ -626,7 +520,7 @@ def triangle_count(
         lower_first = (F.col("_da") < F.col("_db")) | (
             (F.col("_da") == F.col("_db")) & (a < b)
         )
-        oriented = (
+        e = reliable_barrier(
             e.join(da, "_a")
             .join(db, "_b")
             .select(
@@ -635,18 +529,10 @@ def triangle_count(
             )
             .select(F.col("_u").alias("_a"), F.col("_v").alias("_b"))
         )
-        adj_base = reliable_barrier(oriented)
-    else:
-        adj_base = e
-    adj = adj_base.groupBy("_a").agg(
-        F.sort_array(F.collect_list("_b")).alias("_nbrs")
+    adj = _maybe_broadcast(
+        e.groupBy("_a").agg(F.sort_array(F.collect_list("_b")).alias("_nbrs")),
+        size["n"] <= BROADCAST_MAX_NODES,
     )
-    do_broadcast = (
-        broadcast if broadcast in (True, False) else e.count() <= broadcast_max_edges
-    )
-    if do_broadcast:
-        adj = F.broadcast(adj)
-    e = adj_base
     closed = (
         e.join(adj, "_a")
         .join(
@@ -701,20 +587,11 @@ def hits(
     two per-round node-left-joins are reconstructed ONCE at the end by
     the final zero-fill join, which is also where the pure-sink hub=0 /
     pure-source auth=0 exactness comes from (coalesce to literal 0.0).
-    
-    NOTE: the builder runs one eager count at plan-construction
-    time (a cached-RDD count on the barriered edge/node frame) to
-    set the broadcast dial — a driver-blocking action inside a
-    builder API, cheap because the frame is already barriered.
     """
-    from ..util import reliable_barrier
-
-    e = reliable_barrier(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    )
+    e, m = _edge_table(edges, src, dst, undirected=False)
     # broadcast dial (module note): the per-half-step score frames are
-    # node-bounded (|V| <= 2|E| via the cheap barriered edge count)
-    fits = 2 * e.count() <= BROADCAST_MAX_NODES
+    # node-bounded (|V| <= 2|E|)
+    fits = 2 * m <= BROADCAST_MAX_NODES
     # sparse uniform start: only out-node hub values ever feed the
     # auth half-step, so the sink rows of the dense 1.0 start were dead
     hubs = e.select(F.col("_s").alias("node")).distinct().select(
@@ -791,21 +668,12 @@ def bfs_hops(
     same slim-pair/barrier-per-round discipline as the other iterative
     operators — no frontier ever re-materializes prior rounds through
     lineage). Rounds shuffle O(m) join rows and O(n) aggregate rows.
-    
-    NOTE: the builder runs one eager count at plan-construction
-    time (a cached-RDD count on the barriered edge/node frame) to
-    set the broadcast dial — a driver-blocking action inside a
-    builder API, cheap because the frame is already barriered.
     """
-    from ..util import reliable_barrier
-
-    e = reliable_barrier(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")).distinct()
-    )
+    e, m = _edge_table(edges, src, dst, undirected=False)
     # broadcast dial (module note): the (node, hop) frontier is bounded
-    # by |V| <= 2|E|; the barriered edge count is a cheap cached-RDD
-    # count (no extra distinct pass), so dial on that conservative bound
-    fits = 2 * e.count() <= BROADCAST_MAX_NODES
+    # by |V| <= 2|E|, so dial on that conservative bound (no extra
+    # distinct pass)
+    fits = 2 * m <= BROADCAST_MAX_NODES
     nd = reliable_barrier(
         seeds.select(F.col(node).alias("_n")).distinct().select(
             "_n", F.lit(0).cast("int").alias("_h")
@@ -842,27 +710,15 @@ def k_core_peel(
     smaller) survivor set — slim integer keys only, barriered per
     round like the other iterative operators. Peeling cascades:
     survivors shrink monotonically, so later rounds cost less.
-    
-    NOTE: the builder runs one eager count at plan-construction
-    time (a cached-RDD count on the barriered edge/node frame) to
-    set the broadcast dial — a driver-blocking action inside a
-    builder API, cheap because the frame is already barriered.
     """
-    from ..util import reliable_barrier
-
-    sym = reliable_barrier(
-        edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
-        .unionByName(
-            edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d"))
-        )
-        .filter(F.col("_s") != F.col("_d"))
-        .distinct()
+    sym, m = _edge_table(
+        edges.filter(F.col(src) != F.col(dst)), src, dst, undirected=True
     )
     # broadcast dial (module note): the survivor set is node-sized
-    # (<= 2|E| via the cheap barriered edge count); broadcasting it
-    # makes both per-round semi-joins map-side — the symmetric edge
-    # table is never shuffled while peeling
-    fits = 2 * sym.count() <= BROADCAST_MAX_NODES
+    # (<= 2|E|); broadcasting it makes both per-round semi-joins
+    # map-side — the symmetric edge table is never shuffled while
+    # peeling
+    fits = 2 * m <= BROADCAST_MAX_NODES
     for _ in range(iterations):
         keep = reliable_barrier(
             sym.groupBy("_s")

@@ -503,9 +503,9 @@ def poisson_bootstrap_mean_ci(
                         nw[:, b - 1, lane] += np.bincount(
                             sub_codes, weights=w, minlength=n_g
                         ).astype(np.int64)
-                        swc[:, b - 1, lane] += np.bincount(
-                            sub_codes, weights=w * sub_cv * sub_valid, minlength=n_g
-                        ).astype(np.int64)
+                        # int64 accumulation: bincount's float64 weights
+                        # are exact only below 2^53
+                        np.add.at(swc[:, b - 1, lane], sub_codes, w * sub_cv * sub_valid)
             out = {
                 "g": np.repeat(uniq.to_numpy() if hasattr(uniq, "to_numpy") else np.asarray(uniq), blocks_n),
                 "b": np.tile(np.arange(1, blocks_n + 1), n_g),
@@ -558,7 +558,10 @@ def poisson_bootstrap_mean_ci(
         F.count(F.lit(1)).alias("n_rows"),
         F.floor(1000 * F.sum("cents") / F.count(F.lit(1))).cast("long").alias("mean_millicents"),
     )
-    return point.join(ci, "g").select(
+    # left join: a group whose ids are all NULL has no kernel partials
+    # (so no ci row) but still reports its point mean, with NULL bounds;
+    # a NULL group never matches in an equi-join, so it stays dropped
+    return point.where(F.col("g").isNotNull()).join(ci, "g", "left").select(
         F.col("g").alias(group_col),
         "n_rows",
         "mean_millicents",

@@ -356,10 +356,7 @@ def pagerank_supplier_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..analytics.graph import pagerank
 
     li = _t(spark, sf_dir, "lineitem")
-    # symmetric=True: _supplier_part_edges emits both orientations of
-    # every edge, so pagerank may take the nodes-from-degrees /
-    # no-zero-fill fast path (r17; bit-identical ranks)
-    out = pagerank(_supplier_part_edges(li), iterations=3, damping=0.85, symmetric=True)
+    out = pagerank(_supplier_part_edges(li), iterations=3, damping=0.85)
     label = F.when(
         F.col("node") % 2 == 0,
         F.concat(F.lit("s"), (F.col("node") / 2).cast("long").cast("string")),

@@ -412,8 +412,7 @@ def personalized_pagerank_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("l_suppkey") * 2).alias("node"))
         .distinct()
     )
-    # symmetric=True: both edge orientations present (r17 fast path)
-    r = pagerank(_supplier_part_edges(li), iterations=3, teleport=seeds, symmetric=True)
+    r = pagerank(_supplier_part_edges(li), iterations=3, teleport=seeds)
     label = F.when(
         F.col("node") % 2 == 0,
         F.concat(F.lit("s"), (F.col("node") / 2).cast("long").cast("string")),

@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation, Row
+from pyspark.sql import functions as F
 
 
 def spread_for_cpu(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -135,6 +136,20 @@ def reliable_barrier(df: DataFrame) -> DataFrame:
     if sc.getCheckpointDir() is not None:
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def observed_barrier(df: DataFrame, *aggs: Column) -> tuple[DataFrame, Row]:
+    """``reliable_barrier`` that also returns the one-row result of
+    ``aggs`` (default ``count(1) AS n``) over the materialized rows.
+
+    The aggregates ride an unnamed ``Observation`` attached just below
+    the barrier, so they are computed by the barrier's own materializing
+    job: a dial read such as ``barrier(x).count()`` costs no extra job.
+    Only the first action's metrics are kept, so the recompute a
+    reliable checkpoint write does is not counted twice."""
+    obs = Observation()
+    out = reliable_barrier(df.observe(obs, *(aggs or (F.count(F.lit(1)).alias("n"),))))
+    return out, Row(**obs.get)
 
 
 def write_bucketed(

@@ -686,8 +686,13 @@ def test_reliable_barrier_uses_checkpoint_dir_when_set(spark, tmp_path):
     dedup barrier must take the RELIABLE .checkpoint() path (blocks
     survive executor loss); without one it falls back to
     localCheckpoint. Verified via the RDD checkpoint flags and the
-    checkpoint dir contents."""
-    from nifi_minifi_cpp_spark.util import reliable_barrier
+    checkpoint dir contents. observed_barrier rides the same two paths:
+    its observed figures must match the barriered rows on both, and the
+    reliable checkpoint write — which recomputes the RDD after the
+    materializing job — must not count any row a second time."""
+    from pyspark.sql import functions as F
+
+    from nifi_minifi_cpp_spark.util import observed_barrier, reliable_barrier
 
     sc = spark.sparkContext
     df = spark.range(100).withColumnRenamed("id", "doc_id")
@@ -699,6 +704,8 @@ def test_reliable_barrier_uses_checkpoint_dir_when_set(spark, tmp_path):
     # the barrier cut lineage either way: plan is a materialized scan
     assert "Scan ExistingRDD" in local._jdf.queryExecution().executedPlan().toString()
     assert local.count() == 100
+    frame, row = observed_barrier(df)
+    assert row["n"] == frame.count() == 100
 
     ckpt = str(tmp_path / "ckpt")
     sc.setCheckpointDir(ckpt)
@@ -712,6 +719,10 @@ def test_reliable_barrier_uses_checkpoint_dir_when_set(spark, tmp_path):
             found += [os.path.join(root, f) for f in files]
         assert found, "no reliable checkpoint files written"
         assert reliable.count() == 100
+        frame, row = observed_barrier(
+            df, F.count(F.lit(1)).alias("n"), F.sum("doc_id").alias("s")
+        )
+        assert (row["n"], row["s"]) == (frame.count(), 4950) == (100, 4950)
     finally:
         # the shared-session fixture must not leak a checkpoint dir
         # into other tests (conf persists across tests) — clear the

@@ -8,7 +8,8 @@ from __future__ import annotations
 import hashlib
 import math
 
-from hypothesis import HealthCheck, given, settings
+import pytest
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 
@@ -728,6 +729,84 @@ def test_hits_matches_python_model(edges, iters):
     for n in hub:
         assert got[n][0] == _pytest.approx(hub[n], rel=1e-9, abs=1e-12)
         assert got[n][1] == _pytest.approx(auth[n], rel=1e-9, abs=1e-12)
+
+
+def _model_pagerank(edges, iterations, damping, seeds=None):
+    """Pure-Python synchronous PageRank on the distinct edge set;
+    ``seeds`` personalizes the restart mass (ValueError when no seed is
+    a graph node, as the engine raises)."""
+    es = sorted(set(edges))
+    nodes = sorted({n for e in es for n in e})
+    deg = {}
+    for s, _ in es:
+        deg[s] = deg.get(s, 0) + 1
+    if seeds is None:
+        base = {n: 1.0 / len(nodes) for n in nodes}
+    else:
+        hit = [n for n in nodes if n in seeds]
+        if not hit:
+            raise ValueError("no teleport seed in the graph")
+        base = {n: (1 / len(hit) if n in seeds else 0.0) for n in nodes}
+    rank = dict(base)
+    for _ in range(iterations):
+        inflow = {n: 0.0 for n in nodes}
+        for s, d in es:
+            inflow[d] += rank[s] / deg[s]
+        rank = {n: (1 - damping) * base[n] + damping * inflow[n] for n in nodes}
+    return rank
+
+
+@pytest.mark.parametrize("dials", ["default", "shuffled"])
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 7), st.integers(0, 7)), min_size=1, max_size=14
+    ),
+    symmetric=st.booleans(),
+    seeds=st.none() | st.sets(st.integers(0, 9), min_size=1, max_size=3),
+    iters=st.integers(1, 5),
+)
+# the dense round shape (every node has an in- and an out-edge), the
+# zero-fill shape (a sink and a source-only node), the rank barrier
+# past four rounds, and seeds that miss the graph
+@example(edges=[(0, 1), (1, 2), (2, 0), (2, 3)], symmetric=True, seeds={0, 3}, iters=5)
+@example(edges=[(0, 1), (1, 2), (2, 0), (2, 3)], symmetric=True, seeds=None, iters=2)
+@example(edges=[(0, 1), (1, 2), (3, 1)], symmetric=False, seeds={3}, iters=3)
+@example(edges=[(0, 1), (1, 2), (3, 1)], symmetric=False, seeds=None, iters=5)
+@example(edges=[(0, 1)], symmetric=False, seeds={8, 9}, iters=1)
+def test_pagerank_matches_python_model(monkeypatch, dials, edges, symmetric, seeds, iters):
+    """pagerank against a pure-Python model on directed graphs with
+    sinks and source-only nodes and on symmetric ones, so both round
+    shapes the node table's observation picks are checked — under the
+    default dials (broadcast joins, barriered weighted table) and with
+    both dials at 0 (the shuffled fallback, lazy weighted table)."""
+    from nifi_minifi_cpp_spark.analytics import graph
+
+    if dials == "shuffled":
+        monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", 0)
+        monkeypatch.setattr(graph, "BARRIER_MAX_EDGES", 0)
+    if symmetric:
+        edges = edges + [(d, s) for s, d in edges]
+    spark = _spark()
+    df = spark.createDataFrame(edges, "src long, dst long")
+    teleport = (
+        None
+        if seeds is None
+        else spark.createDataFrame([(n,) for n in seeds], "node long")
+    )
+    try:
+        want = _model_pagerank(edges, iters, 0.85, seeds)
+    except ValueError:
+        with pytest.raises(ValueError, match="no teleport seed"):
+            graph.pagerank(df, iterations=iters, teleport=teleport)
+        return
+    got = {
+        r["node"]: r["rank"]
+        for r in graph.pagerank(df, iterations=iters, teleport=teleport).collect()
+    }
+    assert set(got) == set(want)
+    for n in want:
+        assert got[n] == pytest.approx(want[n], rel=1e-9, abs=1e-12)
 
 
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))

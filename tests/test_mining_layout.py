@@ -322,11 +322,13 @@ def test_graph_ops_invariant_to_input_order(spark):
     assert tuple(t1) == tuple(t2)
 
 
-def test_triangle_count_broadcast_guard_plans(spark):
-    """VERDICT r10 #3: the adjacency broadcast must be droppable.
-    broadcast=True pins a broadcast join on the adjacency table;
-    broadcast=False (and auto past the edge threshold) must produce a
-    shuffle join instead — the plan that survives billions of edges."""
+def test_triangle_count_broadcast_guard_plans(spark, monkeypatch):
+    """VERDICT r10 #3: the adjacency broadcast must be droppable. Within
+    the module dial (BROADCAST_MAX_NODES against the observed edge
+    count) the adjacency table is broadcast; with the dial at 0 the
+    same plan must be a shuffle join instead — the plan that survives
+    billions of edges."""
+    from nifi_minifi_cpp_spark.analytics import graph
     from nifi_minifi_cpp_spark.analytics.graph import triangle_count
 
     k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
@@ -335,37 +337,34 @@ def test_triangle_count_broadcast_guard_plans(spark):
     def plan_of(frame):
         return frame._jdf.queryExecution().executedPlan().toString()
 
-    forced = plan_of(triangle_count(df, broadcast=True))
-    assert "BroadcastHashJoin" in forced
-
-    # prevent AQE/auto-broadcast from re-introducing a broadcast so the
-    # guard itself is what's under test
+    # prevent AQE/auto-broadcast from adding a broadcast of its own so
+    # the dial itself is what's under test
     prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        off = triangle_count(df, broadcast=False)
+        assert "BroadcastHashJoin" in plan_of(triangle_count(df))
+
+        monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", 0)
+        off = triangle_count(df)
         plan = plan_of(off)
         assert "BroadcastHashJoin" not in plan
         assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan)
         row = off.collect()[0]
         assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (4, 6, 4)
-
-        # auto with a tiny threshold routes to the shuffle plan too
-        auto_small = triangle_count(df, broadcast="auto", broadcast_max_edges=2)
-        assert "BroadcastHashJoin" not in plan_of(auto_small)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
 
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
-        triangle_count(df, broadcast="always")
+        triangle_count(df, orient="rank")
 
 
-def test_triangle_count_degree_orientation(spark):
+def test_triangle_count_degree_orientation(spark, monkeypatch):
     """orient='degree' (compact-forward, Schank & Wagner 2005) must
     count the same triangles as the id orientation — including on a
     hub-heavy graph where the orientations differ on most edges."""
+    from nifi_minifi_cpp_spark.analytics import graph
     from nifi_minifi_cpp_spark.analytics.graph import triangle_count
 
     # star hub 0 joined to a ring over 1..8: triangles are exactly the
@@ -381,8 +380,9 @@ def test_triangle_count_degree_orientation(spark):
     k4 = spark.createDataFrame(
         [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)], "src long, dst long"
     )
-    for bc in (True, False):
-        row = triangle_count(k4, broadcast=bc, orient="degree").collect()[0]
+    for dial in (graph.BROADCAST_MAX_NODES, 0):
+        monkeypatch.setattr(graph, "BROADCAST_MAX_NODES", dial)
+        row = triangle_count(k4, orient="degree").collect()[0]
         assert (row["n_nodes"], row["n_edges"], row["n_triangles"]) == (4, 6, 4)
 
 

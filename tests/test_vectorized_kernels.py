@@ -173,8 +173,15 @@ def test_poisson_bootstrap_kernel_matches_catalyst_reference(spark):
     explode + md5 + conv + threshold-count pipeline EXACTLY, including
     the NULL edges: NULL event_id (every lane was NULL — the row left
     both sums), NULL value (counts in nw, contributes no swc term),
-    and a group whose every value is NULL (swc stays NULL -> NULL
-    replicates -> NULL CI bounds)."""
+    a group whose every value is NULL (swc stays NULL -> NULL
+    replicates -> NULL CI bounds), a group whose every id is NULL (kept,
+    with NULL bounds) and a NULL group (dropped by the equi-join).
+
+    The "big" row's per-cell swc sum crosses 2^53 (still below
+    2^63 / 1000, so the reference's 1000 * swc does not overflow): id
+    10000007 draws weight 3 in 8 of the 100 replicates and never more,
+    and 3 x 3002399751580335 cents is odd past 2^53, where a float64
+    accumulation rounds it to even and shifts the 5th-ranked mean."""
     from pyspark.sql import functions as F
 
     from nifi_minifi_cpp_spark.analytics.sketches import (
@@ -188,6 +195,8 @@ def test_poisson_bootstrap_kernel_matches_catalyst_reference(spark):
         for i in range(200)
     ]
     rows += [("a", 1000, None), ("b", None, 3.5), ("allnull", 2000, None)]
+    rows += [("nullids", None, 1.5), ("nullids", None, 2.5), (None, 3000, 4.0)]
+    rows += [("big", 10000007, 30023997515803.35)]
     df = spark.createDataFrame(rows, "event_type string, event_id long, value double")
 
     got = {r["event_type"]: r for r in poisson_bootstrap_mean_ci(df).collect()}

@@ -48,12 +48,12 @@ def wanted(label: str) -> bool:
     return not ALGOS or label in ALGOS
 
 
-def scaled_edges(spark, base, stride: int, replicas: int):
+def scaled_edges(spark, base, stride: int, replicas: int, tag: str = "sym"):
     """Union of ``replicas`` copies of the edge list, node ids shifted
     by ``rep * stride`` — disjoint components, identical per-replica
     structure. Staged to parquet so every timed run reads the same
     materialized input instead of re-running the explode."""
-    out = f"/tmp/graph_probe_edges_{replicas}x"
+    out = f"/tmp/graph_probe_{tag}_edges_{replicas}x"
     if not os.path.exists(out):
         (
             base.withColumn("rep", F.explode(F.lit(list(range(replicas)))))
@@ -120,6 +120,9 @@ def main() -> None:
         print(f"BROADCAST_MAX_NODES overridden to {_graph.BROADCAST_MAX_NODES}")
     li = load_table(spark, "lineitem", SF_DIR)
     base = _supplier_part_edges(li).localCheckpoint(eager=True)
+    # supplier -> part only: ids are a subset of ``base``'s, so the
+    # same stride keeps its replicas disjoint
+    directed = _supplier_part_edges(li, symmetric=False)
     n_edges = base.count()
     stride = (
         base.agg(F.greatest(F.max("src"), F.max("dst"))).first()[0] + 2
@@ -130,20 +133,18 @@ def main() -> None:
     for r in REPLICAS:
         e = scaled_edges(spark, base, stride, r)
         print(f"-- {r}x ({n_edges * r} edges)")
-        # symmetric=True matches the entry call sites (r17 fast path);
-        # the edge list here is symmetric by construction
+        # same-session A/B of pagerank's two round shapes: the symmetric
+        # edge list (every node has in- and out-edges) takes the dense
+        # shape, the directed one the per-round zero-fill join
         if wanted("pagerank_3it"):
             results.setdefault("pagerank_3it", {})[r] = timed(
-                "pagerank_3it",
-                lambda: pagerank(e, iterations=3, damping=0.85, symmetric=True),
+                "pagerank_3it", lambda: pagerank(e, iterations=3, damping=0.85)
             )
-        if wanted("pagerank_3it_general"):
-            # same-session A/B leg: the general (symmetric=False) path
-            # the entries used before r17 — the honest at-scale
-            # comparison, immune to the rig's cross-day band
-            results.setdefault("pagerank_3it_general", {})[r] = timed(
-                "pagerank_3it_general",
-                lambda: pagerank(e, iterations=3, damping=0.85, symmetric=False),
+        if wanted("pagerank_3it_directed"):
+            e_dir = scaled_edges(spark, directed, stride, r, tag="dir")
+            results.setdefault("pagerank_3it_directed", {})[r] = timed(
+                "pagerank_3it_directed",
+                lambda: pagerank(e_dir, iterations=3, damping=0.85),
             )
         if wanted("connected_components"):
             results.setdefault("connected_components", {})[r] = timed(
