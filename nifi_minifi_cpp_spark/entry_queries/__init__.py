@@ -85,66 +85,64 @@ from .flow_el_patterns import *  # noqa: F401,F403
 # were re-typed after round 1) and the rest — all green in round 1 and
 # locked by plan-shape tests — fall past the window.
 _GRADE_ORDER = [
-    # --- r16 rotation (VERDICT r15 #1): never-driver-graded queue
-    # first (tailfile_stream_rotation, registered after the r15
-    # rotation, then the 7 r16 registrations in registration order),
-    # then oldest-first backfill — the 2 remaining r9-stale entries,
-    # then the r10-stale cohort head, as the codified staleness rule
-    # mandates
+    # --- r18 rotation: the never-graded queue is empty (every
+    # registration has a CORRECTNESS_r01..r17 row), so all 50 slots are
+    # oldest-first backfill — the 10 remaining r10-stale entries, then
+    # the r11-stale cohort head in registration order, as the codified
+    # staleness rule mandates
     # (tests/test_registry_contract.py::test_backfill_picks_are_oldest_first).
     #
-    # never-driver-graded queue (registration order)
-    "tailfile_stream_rotation",
-    "el_csv_backref_pack",
-    "get_file_size_age_matrix",
-    "kafka_pattern_consume",
-    "defragment_age_flush",
-    "tailfile_flow_rotation",
-    "kafka_pattern_new_topic",
-    "get_file_batch_oldest",
     # backfill picks (oldest driver round first, registration order within)
-    "pii_redaction_counts",  # r9
-    "deterministic_sample_ids",  # r9
-    "top3_orders_per_customer",  # r10
-    "cube_lineitem_status",  # r10
-    "rollup_orders_priority",  # r10
-    "q22_idle_rich_customers",  # r10
-    "q7_volume_shipping",  # r10
-    "q8_market_share",  # r10
-    "q9_profit_by_nation_year",  # r10
-    "q13_customer_order_distribution",  # r10
-    "q17_small_quantity_revenue",  # r10
-    "q20_promo_part_suppliers",  # r10
-    "q21_waiting_suppliers",  # r10
-    "route_error_events",  # r10
-    "el_scalar_pack",  # r10
-    "json_path_extract",  # r10
-    "rolling_window_count10",  # r10
-    "tumbling_hourly_by_type",  # r10
-    "extract_first_word",  # r10
-    "replace_text_hashed",  # r10
-    "split_fragment_counts",  # r10
-    "split_merge_roundtrip",  # r10
-    "hash_content_sha256",  # r10
-    "route_text_merge_lines",  # r10
-    "exact_dedup_representatives",  # r10
-    "knn_exact_10x3",  # r10
-    "sessionize_users",  # r10
-    "pivot_event_counts",  # r10
-    "el_encode_pack",  # r10
-    "apply_template_events",  # r10
-    "invoke_http_route_counts",  # r10
-    "incremental_scan_tail",  # r10
-    "record_transform_upper",  # r10
-    "syslog_parse",  # r10
-    "tailfile_ingest",  # r10
-    "archive_roundtrip",  # r10
-    "streaming_route_counts",  # r10
-    "asof_error_prior_click",  # r10
-    "range_join_purchase_after_error",  # r10
-    "span_dedup_rebuild",  # r10
-    "span_dedup_overlap_rebuild",  # r10
-    "contamination_flags",  # r10
+    "domain_mixture_plan",  # r10
+    "s2s_port_roundtrip",  # r10
+    "param_context_resolution",  # r10
+    "connection_edge_semantics",  # r10
+    "document_chunks_rag",  # r10
+    "ngram_census_top20",  # r10
+    "oov_rate_scores",  # r10
+    "boilerplate_prefix_clusters",  # r10
+    "incremental_dedup_ledger",  # r10
+    "source_overlap_matrix",  # r10
+    "url_dedup_groups",  # r11
+    "weighted_sample_ids",  # r11
+    "char_entropy_scores",  # r11
+    "warc_ingest_stats",  # r11
+    "bigram_lm_scores",  # r11
+    "token_ids_encode",  # r11
+    "audio_energy_features",  # r11
+    "normalize_text_dedup_keys",  # r11
+    "countmin_user_frequencies",  # r11
+    "training_corpus_pipeline",  # r11
+    "containment_dedup_ids",  # r11
+    "hll_distinct_users",  # r11
+    "allpairs_jaccard_pairs",  # r11
+    "bloom_decontamination_counts",  # r11
+    "inverted_index_top_terms",  # r11
+    "collocation_pmi_top",  # r11
+    "cohort_retention_daily",  # r11
+    "funnel_view_click_purchase",  # r11
+    "skew_report_event_users",  # r11
+    "doc_length_histogram",  # r11
+    "image_phash_dedup",  # r11
+    "event_type_association_rules",  # r11
+    "customer_entity_matches",  # r11
+    "zorder_layout_buckets",  # r11
+    "embedding_gram_upper",  # r11
+    "scd2_event_type_history",  # r11
+    "rolling_zscore_flags",  # r11
+    "window_function_pack",  # r11
+    "resample_forward_fill",  # r11
+    "quality_percentile_by_source",  # r11
+    "pagerank_supplier_parts",  # r11
+    "table_profile_orders",  # r11
+    "grouping_sets_revenue",  # r11
+    "streaming_dedup_counts",  # r11
+    "sliding_window_counts",  # r11
+    "stream_interval_join_pairs",  # r11
+    "label_propagation_communities",  # r11
+    "orders_reconciliation_diff",  # r11
+    "salted_join_segment_revenue",  # r11
+    "stream_static_enrichment_counts",  # r11
 ]
 
 
@@ -161,7 +159,7 @@ GRADED_WINDOW = 50
 # slots always go to the oldest driver rows first), and fail if this
 # snapshot falls more than one driver round behind the newest ledger
 # file (a skipped rotation goes red in that round's own pytest run).
-ROTATION_LEDGER_ROUND = 15
+ROTATION_LEDGER_ROUND = 17
 
 
 def _apply_grade_order() -> None:

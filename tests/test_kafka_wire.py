@@ -132,6 +132,17 @@ def _poll(spark, q, name, expected, deadline_s=60):
     return rows
 
 
+def _await_first_progress(q, deadline_s=60):
+    """Wait until the query reports batch 0's progress: that batch fixed
+    the `latest` start offsets, so records appended afterwards are new."""
+    deadline = time.time() + deadline_s
+    while q.lastProgress is None:
+        if q.exception() is not None:
+            raise q.exception()
+        assert time.time() < deadline, "no progress from the first batch"
+        time.sleep(0.1)
+
+
 def test_consume_kafka_wire_end_to_end(spark, broker, tmpdir):
     """The full ConsumeKafka path: reference property map -> option
     contract -> kafkawire stream -> kafka.* attribute lifting; live
@@ -196,7 +207,7 @@ def test_consume_kafka_wire_latest_skips_history(spark, broker, tmpdir):
     )
     try:
         # let the first (empty) batch commit, then append
-        time.sleep(2)
+        _await_first_progress(q)
         broker.append("t2", 0, [(1700000001000, b"new", b"new-value", [])])
         rows = _poll(spark, q, "kwlatest", expected=1, deadline_s=30)
     finally:
@@ -478,7 +489,7 @@ def test_starting_offsets_json_sentinels(spark, broker, tmpdir):
         .start()
     )
     try:
-        time.sleep(2)  # let the first (empty-from-latest) batch commit
+        _await_first_progress(q)  # the first (empty-from-latest) batch
         broker.append("sj", 0, [(1700000099000, None, b"fresh", [])])
         rows = _poll(spark, q, "kwsj", expected=1, deadline_s=30)
     finally:

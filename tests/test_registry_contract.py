@@ -22,59 +22,59 @@ from nifi_minifi_cpp_spark import entry_queries
 # Every SURVEY §2 operator family and every LLM-pipeline operator must
 # have a row in CORRECTNESS_r{N}.json — i.e. be registered in-window.
 MUST_GRADE = {
-    # r16 rotation: never-driver-graded queue (tailfile_stream_rotation
-    # + the 7 r16 registrations) + 42 oldest-first backfill picks
-    # (2 r9-stale + the r10-stale cohort head) per the staleness rule.
-    "tailfile_stream_rotation",
-    "el_csv_backref_pack",
-    "get_file_size_age_matrix",
-    "kafka_pattern_consume",
-    "defragment_age_flush",
-    "tailfile_flow_rotation",
-    "kafka_pattern_new_topic",
-    "get_file_batch_oldest",
-    "pii_redaction_counts",
-    "deterministic_sample_ids",
-    "top3_orders_per_customer",
-    "cube_lineitem_status",
-    "rollup_orders_priority",
-    "q22_idle_rich_customers",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_profit_by_nation_year",
-    "q13_customer_order_distribution",
-    "q17_small_quantity_revenue",
-    "q20_promo_part_suppliers",
-    "q21_waiting_suppliers",
-    "route_error_events",
-    "el_scalar_pack",
-    "json_path_extract",
-    "rolling_window_count10",
-    "tumbling_hourly_by_type",
-    "extract_first_word",
-    "replace_text_hashed",
-    "split_fragment_counts",
-    "split_merge_roundtrip",
-    "hash_content_sha256",
-    "route_text_merge_lines",
-    "exact_dedup_representatives",
-    "knn_exact_10x3",
-    "sessionize_users",
-    "pivot_event_counts",
-    "el_encode_pack",
-    "apply_template_events",
-    "invoke_http_route_counts",
-    "incremental_scan_tail",
-    "record_transform_upper",
-    "syslog_parse",
-    "tailfile_ingest",
-    "archive_roundtrip",
-    "streaming_route_counts",
-    "asof_error_prior_click",
-    "range_join_purchase_after_error",
-    "span_dedup_rebuild",
-    "span_dedup_overlap_rebuild",
-    "contamination_flags",
+    # r18 rotation: no never-graded entry is left, so the window
+    # is 50 oldest-first backfill picks (the 10 remaining r10-stale
+    # entries + the r11-stale cohort head) per the staleness rule.
+    "domain_mixture_plan",
+    "s2s_port_roundtrip",
+    "param_context_resolution",
+    "connection_edge_semantics",
+    "document_chunks_rag",
+    "ngram_census_top20",
+    "oov_rate_scores",
+    "boilerplate_prefix_clusters",
+    "incremental_dedup_ledger",
+    "source_overlap_matrix",
+    "url_dedup_groups",
+    "weighted_sample_ids",
+    "char_entropy_scores",
+    "warc_ingest_stats",
+    "bigram_lm_scores",
+    "token_ids_encode",
+    "audio_energy_features",
+    "normalize_text_dedup_keys",
+    "countmin_user_frequencies",
+    "training_corpus_pipeline",
+    "containment_dedup_ids",
+    "hll_distinct_users",
+    "allpairs_jaccard_pairs",
+    "bloom_decontamination_counts",
+    "inverted_index_top_terms",
+    "collocation_pmi_top",
+    "cohort_retention_daily",
+    "funnel_view_click_purchase",
+    "skew_report_event_users",
+    "doc_length_histogram",
+    "image_phash_dedup",
+    "event_type_association_rules",
+    "customer_entity_matches",
+    "zorder_layout_buckets",
+    "embedding_gram_upper",
+    "scd2_event_type_history",
+    "rolling_zscore_flags",
+    "window_function_pack",
+    "resample_forward_fill",
+    "quality_percentile_by_source",
+    "pagerank_supplier_parts",
+    "table_profile_orders",
+    "grouping_sets_revenue",
+    "streaming_dedup_counts",
+    "sliding_window_counts",
+    "stream_interval_join_pairs",
+    "label_propagation_communities",
+    "orders_reconciliation_diff",
+    "salted_join_segment_revenue",
+    "stream_static_enrichment_counts",
 }
 
 def test_must_grade_queries_inside_window():
