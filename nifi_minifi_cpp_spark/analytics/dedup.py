@@ -248,15 +248,6 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     return word_shingles_of(words(col), n)
 
 
-def char_shingles(col: Column, n: int = 5) -> Column:
-    k = F.length(col) - (n - 1)
-    sh = F.transform(
-        F.sequence(F.lit(0), F.greatest(k - 1, F.lit(0))),
-        lambda i: F.substring(col, i + 1, n),
-    )
-    return F.array_distinct(F.when(k > 0, sh).otherwise(F.array(col)))
-
-
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------

@@ -30,10 +30,8 @@ def write_bucketed(
 ) -> None:
     """Persist ``df`` bucketed (and optionally sorted) by the join key.
 
-    THE single bucketed-write primitive (r9 consolidation — util and
-    scale delegate here with their own legacy signatures; this one has
-    exactly ONE spelling, ``n_buckets``, so the two-name drift the
-    consolidation removed cannot return).
+    THE single bucketed-write primitive, with exactly ONE spelling of
+    the bucket count, ``n_buckets``.
 
     ``n_buckets`` should divide evenly into the cluster's parallelism;
     sorting within buckets additionally removes the sort from

@@ -84,25 +84,6 @@ def salted_join(
     return b.join(s, [*keys, "_salt"], how).drop("_salt")
 
 
-def skew_hint(df: DataFrame, key: str, hot_values: list) -> DataFrame:
-    """Explicit skew-join preparation: replicate-free alternative —
-    split hot keys out so AQE (or the caller) joins them broadcast
-    while the cold remainder sort-merges. Returns df with a
-    ``_is_hot`` flag column."""
-    return df.withColumn("_is_hot", F.col(key).isin(hot_values))
-
-
-def write_bucketed(
-    df: DataFrame, table_name: str, bucket_col: str, num_buckets: int = 64, sort_col: str | None = None
-) -> None:
-    """Bucketed persistence: later equi-joins/aggregations on
-    ``bucket_col`` skip the shuffle entirely (SURVEY scale note).
-    Delegates to the single primitive in ``plans.bucketing`` (r9)."""
-    from .plans.bucketing import write_bucketed as _wb
-
-    _wb(df, table_name, bucket_col, n_buckets=num_buckets, sort_cols=sort_col)
-
-
 def partitions_for_bytes(total_bytes: int, target_mb: int = 128) -> int:
     """Shuffle-partition sizing rule: one partition per ~target_mb of
     shuffle data, floor 8 (spill-aware sizing at 100 TB)."""

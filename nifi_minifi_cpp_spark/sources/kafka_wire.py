@@ -1,4 +1,4 @@
-"""Kafka wire protocol, stdlib-only (r8): a minimal client + an
+"""Kafka wire protocol over stdlib sockets (r8): a minimal client + an
 in-process single-node broker speaking the PUBLIC Kafka binary
 protocol (kafka.apache.org/protocol), so ConsumeKafka/PublishKafka
 EXECUTE end-to-end in environments without the Spark Kafka connector
@@ -30,14 +30,14 @@ whose TCP connection closes without LeaveGroup is EVICTED and the
 group rebalances (r15) — so a dead consumer cannot hold its
 RangeAssignor partitions; a real broker evicts on missed heartbeats
 instead, which also covers hung-but-connected clients;
-compression: optional gzip/snappy/lz4 serving modes, r9-r10). The
-CLIENT decodes plain, gzip, snappy and lz4 RecordBatches (gzip via
-zlib; snappy and lz4 via the pure-Python block codecs in
-sources/block_codecs.py, r10) and raises a NAMED
-UnsupportedKafkaCodecError only for zstd, which genuinely needs a
-native lib — real brokers serve it transparently through librdkafka
-(ConsumeKafka.cpp:370), so the connector path covers it on clusters
-with the jars. The CLIENT is the piece the engine uses: the
+compression: optional gzip/snappy/lz4/zstd serving modes). Every
+RecordBatch codec goes through one table, ``_CODECS``, to pyarrow's
+native gzip, snappy, LZ4-frame and zstd codecs — the reference leaves
+them to librdkafka the same way (ConsumeKafka.cpp:370). pyarrow is the
+one non-stdlib import: the Python Data Source worker that runs the
+``kafkawire`` reader already requires it, and it is imported only when
+a batch is compressed. Codec bits outside the table raise the NAMED
+UnsupportedKafkaCodecError. The CLIENT is the piece the engine uses: the
 ``kafkawire`` streaming DataSource polls it with checkpointed
 per-partition offsets, reusing ``consume_kafka_options``'s property
 contract and ``kafka_records_to_flowfiles``'s attribute lifting
@@ -190,27 +190,98 @@ class _Reader:
 
 
 _CODEC_NONE, _CODEC_GZIP, _CODEC_SNAPPY, _CODEC_LZ4, _CODEC_ZSTD = 0, 1, 2, 3, 4
-_CODEC_NAMES = {_CODEC_SNAPPY: "snappy", _CODEC_LZ4: "lz4", _CODEC_ZSTD: "zstd"}
+# attribute codec bits -> pyarrow codec name; the one codec table
+_CODECS = {_CODEC_GZIP: "gzip", _CODEC_SNAPPY: "snappy", _CODEC_LZ4: "lz4", _CODEC_ZSTD: "zstd"}
+_CODEC_BITS = {name: bits for bits, name in _CODECS.items()}
 
 
 class UnsupportedKafkaCodecError(ValueError):
-    """A fetched RecordBatch uses a compression codec this stdlib-only
-    client cannot decode. r10: gzip (zlib), snappy and lz4 (pure-Python
-    block codecs, sources/block_codecs.py); r13: zstd (pure-Python
-    RFC 8878 decoder, sources/zstd_codec.py) — every Kafka RecordBatch
-    codec now decodes in-process, so this error fires only on
-    attribute bit patterns outside the protocol's codec set (corrupt
-    or future batches)."""
+    """A RecordBatch names a codec this client cannot decode: attribute
+    bits outside ``_CODECS`` (a corrupt batch or a newer protocol
+    revision), or a codec the installed pyarrow was built without."""
 
     def __init__(self, codec: int):
         self.codec = codec
-        name = _CODEC_NAMES.get(codec, f"codec-{codec}")
+        name = _CODECS.get(codec, f"codec-{codec}")
         super().__init__(
             f"RecordBatch compressed with {name} (attributes bits {codec}); "
-            "this stdlib wire client decodes none/gzip/snappy/lz4/zstd — "
-            "attribute bits outside that set are corrupt or from a newer "
-            "protocol revision"
+            "this wire client decodes none/gzip/snappy/lz4/zstd through "
+            "pyarrow — other attribute bits are corrupt or from a newer "
+            "protocol revision, and a codec missing from the pyarrow build "
+            "cannot be decoded"
         )
+
+
+def _arrow_codec(codec: int) -> str:
+    import pyarrow as pa
+
+    name = _CODECS.get(codec)
+    if name is None or not pa.Codec.is_available(name):
+        raise UnsupportedKafkaCodecError(codec)
+    return name
+
+
+_XERIAL_HEADER = b"\x82SNAPPY\x00"
+# a snappy tag stream regenerates at most 64 bytes per 3-byte copy tag,
+# so a declared size above ~21x the block is corrupt, not just large —
+# checked before Arrow allocates the output buffer
+_SNAPPY_MAX_EXPANSION = 22
+
+
+def _snappy_blocks(buf: bytes):
+    """Raw snappy, or the xerial stream framing java producers used:
+    ``\\x82SNAPPY\\x00`` + version/compat words + [4-byte BE length,
+    raw block]*."""
+    if not buf.startswith(_XERIAL_HEADER):
+        yield buf
+        return
+    pos = len(_XERIAL_HEADER) + 8
+    while pos < len(buf):
+        if pos + 4 > len(buf):
+            raise ValueError("snappy: truncated xerial block length")
+        (blen,) = struct.unpack_from(">I", buf, pos)
+        yield buf[pos + 4 : pos + 4 + blen]
+        pos += 4 + blen
+
+
+def _unsnappy(block: bytes) -> bytes:
+    import pyarrow as pa
+
+    size = shift = 0
+    for b in block[:5]:  # uvarint32 preamble: the decompressed size
+        size |= (b & 0x7F) << shift
+        if not b & 0x80:
+            break
+        shift += 7
+    else:
+        raise ValueError("snappy: truncated or overlong length preamble")
+    if size > _SNAPPY_MAX_EXPANSION * len(block):
+        raise ValueError(f"snappy: declared size {size} is more than a {len(block)}-byte block can hold")
+    return pa.decompress(block, decompressed_size=size, codec="snappy", asbytes=True)
+
+
+def compress_records(codec: int, data: bytes) -> bytes:
+    """Compress a records section with the codec for attribute bits
+    ``codec`` — what a producer configured with that codec ships."""
+    import pyarrow as pa
+
+    return pa.compress(data, codec=_arrow_codec(codec), asbytes=True)
+
+
+def decompress_records(codec: int, data: bytes) -> bytes:
+    """Decode a records section compressed with attribute bits
+    ``codec``. Malformed input raises ValueError naming the codec."""
+    import pyarrow as pa
+
+    name = _arrow_codec(codec)
+    try:
+        if codec == _CODEC_SNAPPY:
+            return b"".join(_unsnappy(block) for block in _snappy_blocks(data))
+        # streamed: gzip or zlib containers, LZ4 frames, and zstd frames
+        # with no declared content size or several frames back to back
+        return pa.CompressedInputStream(pa.BufferReader(data), name).read()
+    except (OSError, pa.ArrowInvalid) as e:
+        raise ValueError(f"{name} records section: {e}") from e
 
 
 def encode_record_batch(
@@ -220,8 +291,9 @@ def encode_record_batch(
     compression: str | None = None,
 ) -> bytes:
     """items: [(timestamp_ms, key, value, headers)] -> one magic-2 batch.
-    ``compression='gzip'`` gzips the records section (attribute bits 001),
-    matching what a gzip-configured producer ships to the broker."""
+    ``compression`` (a ``_CODECS`` name, e.g. 'gzip' -> attribute bits
+    001) compresses the records section, matching what a producer
+    configured with that codec ships to the broker."""
     if not items:
         raise ValueError("empty batch")
     base_ts = items[0][0]
@@ -252,28 +324,9 @@ def encode_record_batch(
     if compression is None or compression == "none":
         attrs = _CODEC_NONE
         rec_bytes = bytes(recs)
-    elif compression == "gzip":
-        import zlib
-
-        attrs = _CODEC_GZIP
-        # wbits=31: gzip container, what Kafka's gzip codec produces
-        comp = zlib.compressobj(wbits=31)
-        rec_bytes = comp.compress(bytes(recs)) + comp.flush()
-    elif compression == "snappy":
-        from .block_codecs import snappy_compress
-
-        attrs = _CODEC_SNAPPY
-        rec_bytes = snappy_compress(bytes(recs))
-    elif compression == "lz4":
-        from .block_codecs import lz4_frame_compress
-
-        attrs = _CODEC_LZ4
-        rec_bytes = lz4_frame_compress(bytes(recs))
-    elif compression == "zstd":
-        from .zstd_codec import zstd_compress
-
-        attrs = _CODEC_ZSTD
-        rec_bytes = zstd_compress(bytes(recs))
+    elif compression in _CODEC_BITS:
+        attrs = _CODEC_BITS[compression]
+        rec_bytes = compress_records(attrs, bytes(recs))
     else:
         raise ValueError(f"unsupported producer compression {compression!r}")
     after_crc = (
@@ -323,30 +376,9 @@ def decode_record_batches(buf: bytes) -> list[dict]:
         n = r.i32()
         # compression covers only the records section (everything after
         # the record count); the batch header stays plain
-        if codec == _CODEC_NONE:
-            rdata = buf[r.pos : end]
-        elif codec == _CODEC_GZIP:
-            import zlib
-
-            # wbits=47 auto-detects gzip vs zlib containers
-            rdata = zlib.decompress(buf[r.pos : end], wbits=47)
-        elif codec == _CODEC_SNAPPY:
-            from .block_codecs import snappy_decompress
-
-            # raw snappy (message format v2) with xerial auto-detect
-            rdata = snappy_decompress(buf[r.pos : end])
-        elif codec == _CODEC_LZ4:
-            from .block_codecs import lz4_frame_decompress
-
-            rdata = lz4_frame_decompress(buf[r.pos : end])
-        elif codec == _CODEC_ZSTD:
-            from .zstd_codec import zstd_decompress
-
-            # r13: pure-Python RFC 8878 decoder (zstd_codec.py) — the
-            # last codec gap; real-librdkafka interop note in module doc
-            rdata = zstd_decompress(buf[r.pos : end])
-        else:
-            raise UnsupportedKafkaCodecError(codec)
+        rdata = buf[r.pos : end]
+        if codec != _CODEC_NONE:
+            rdata = decompress_records(codec, rdata)
         p = 0
         for _ in range(n):
             _rec_len, p = read_varint(rdata, p)

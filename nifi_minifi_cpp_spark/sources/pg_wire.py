@@ -36,9 +36,9 @@ def _parse_guard(what: str):
     (missing NUL terminator -> ValueError from bytes.index, short
     payload -> struct.error, non-UTF-8 text -> UnicodeDecodeError,
     bad numeric text -> ValueError) into the module's single typed
-    error, mirroring zstd_decompress's wrapper so callers of this
-    client only ever catch PgWireError (the kafka_wire/zstd_codec
-    contract)."""
+    error, so callers of this client only ever catch PgWireError (the
+    contract kafka_wire's codec path keeps by re-raising every decoder
+    failure as ValueError)."""
     try:
         yield
     except PgWireError:

@@ -234,118 +234,6 @@ def defragment_text_stream(
     )
 
 
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas variant (r8)
-# ---------------------------------------------------------------------------
-#
-# Spark 4's arbitrary-state API — requires the RocksDB state store
-# provider (enabled in session.get_spark, r8) and gives what
-# applyInPandasWithState's single ProcessingTimeTimeout cannot: real
-# REGISTERED TIMERS. The bin-age flush above piggybacks on the group
-# timeout, which only fires when the group sees traffic OR the
-# micro-batch planner polls it; a registered processing-time timer is
-# the reference's BinFiles eviction thread done properly
-# (/root/reference/libminifi/include/core/processors/BinFiles.h bin
-# manager). Same output contract as merge_content_bin_packing_stream.
-
-
-def merge_content_bin_packing_tws(
-    df: DataFrame,
-    correlation_col: str = "correlation",
-    max_entries: int = 100,
-    max_bytes: int = 1 << 20,
-    max_bin_age_ms: int = 60_000,
-    demarcator: str = "\n",
-) -> DataFrame:
-    """MergeContent bin-packing on transformWithStateInPandas: flush on
-    entries/bytes inline, flush partial bins by REGISTERED processing-
-    time timer (one per open bin).
-
-    CONTAINER LIMITATION (2026-08-14, re-attempted r9 — `import google.protobuf` still fails, `pip download protobuf` returns empty offline): the TWS runtime ships a
-    protobuf wire protocol between JVM and the Python state server —
-    ``google.protobuf`` is not installed here and there is no network
-    to fetch it, so this variant cannot EXECUTE in this environment
-    (verified: the driver worker crashes importing StateMessage_pb2).
-    The applyInPandasWithState operator above remains the executing
-    path; this one is the drop-in upgrade for any cluster with
-    protobuf present. Guarded with a clear error instead of a deep
-    streaming crash."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as exc:
-        raise ImportError(
-            "transformWithStateInPandas requires the 'protobuf' package "
-            "(google.protobuf) for its JVM<->Python state protocol; it is "
-            "not installed in this environment. Use "
-            "merge_content_bin_packing_stream (applyInPandasWithState) "
-            "instead, or install protobuf."
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class BinPacker(StatefulProcessor):
-        def init(self, handle):
-            self.handle = handle
-            self.bin = handle.getValueState(
-                "bin", "payloads array<string>, total bigint, timer_ts bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            correlation = key[0]
-            if self.bin.exists():
-                payloads, total, timer_ts = self.bin.get()
-                payloads = list(payloads)
-            else:
-                payloads, total, timer_ts = [], 0, 0
-            out = {"correlation": [], "content": [], "merge_count": [], "flush_reason": []}
-            for pdf in rows:
-                for content in pdf["content"]:
-                    payloads.append(content)
-                    total += len(content)
-                    if len(payloads) >= max_entries or total >= max_bytes:
-                        reason = "entries" if len(payloads) >= max_entries else "bytes"
-                        out["correlation"].append(correlation)
-                        out["content"].append(demarcator.join(payloads))
-                        out["merge_count"].append(len(payloads))
-                        out["flush_reason"].append(reason)
-                        payloads, total = [], 0
-            if payloads:
-                if not timer_ts:
-                    timer_ts = timerValues.getCurrentProcessingTimeInMs() + max_bin_age_ms
-                    self.handle.registerTimer(timer_ts)
-                self.bin.update((payloads, total, timer_ts))
-            else:
-                if timer_ts:
-                    self.handle.deleteTimer(timer_ts)
-                self.bin.clear()
-            if out["correlation"]:
-                yield pd.DataFrame(out)
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            import pandas as pd
-
-            if self.bin.exists():
-                payloads, total, _ts = self.bin.get()
-                self.bin.clear()
-                if payloads:
-                    yield pd.DataFrame(
-                        {
-                            "correlation": [key[0]],
-                            "content": [demarcator.join(list(payloads))],
-                            "merge_count": [len(payloads)],
-                            "flush_reason": ["age"],
-                        }
-                    )
-
-        def close(self):
-            pass
-
-    return df.groupBy(correlation_col).transformWithStateInPandas(
-        BinPacker(), MERGED_SCHEMA, "append", "ProcessingTime"
-    )
-
-
 EWMA_OUT_SCHEMA = "user_id long, n_events long, n_anomalies long, final_ewma double"
 _EWMA_STATE_SCHEMA = "s double, anom long, n long"
 

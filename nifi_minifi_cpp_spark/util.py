@@ -150,24 +150,3 @@ def observed_barrier(df: DataFrame, *aggs: Column) -> tuple[DataFrame, Row]:
     obs = Observation()
     out = reliable_barrier(df.observe(obs, *(aggs or (F.count(F.lit(1)).alias("n"),))))
     return out, Row(**obs.get)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str] | str,
-    num_buckets: int = 32,
-    sort_cols: list[str] | str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Compatibility wrapper preserving THIS module's original
-    signature (positional ``num_buckets``/``sort_cols``/``mode``); the
-    single bucketed-write primitive lives in
-    ``plans.bucketing.write_bucketed`` (r9 consolidation). A bare
-    ``*args`` pass-through would silently rebind old positional calls
-    onto the canonical signature's ``path`` slot — the explicit
-    signature keeps legacy call sites meaning what they meant. Lazy
-    import avoids a util <-> plans import cycle."""
-    from .plans.bucketing import write_bucketed as _wb
-
-    _wb(df, table, bucket_cols, n_buckets=num_buckets, sort_cols=sort_cols, mode=mode)

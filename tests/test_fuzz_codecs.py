@@ -1,18 +1,20 @@
-"""Property-based fuzz tests (r10, hypothesis): the pure-Python codec
-and wire-framing layers hold their invariants on arbitrary inputs —
-round-trips are identity, and malformed bytes raise typed errors
-instead of corrupting state or looping."""
+"""Property-based fuzz tests (r10, hypothesis): the RecordBatch codec
+path and the wire-framing layers hold their invariants on arbitrary
+inputs — round-trips are identity, and malformed bytes raise typed
+errors (ValueError, never a bare OSError) instead of corrupting state
+or looping."""
 
 from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from nifi_minifi_cpp_spark.sources.block_codecs import (
-    lz4_frame_compress,
-    lz4_frame_decompress,
-    snappy_compress,
-    snappy_decompress,
+from nifi_minifi_cpp_spark.sources.kafka_wire import (
+    _CODEC_LZ4,
+    _CODEC_SNAPPY,
+    _CODEC_ZSTD,
+    compress_records,
+    decompress_records,
 )
 
 _payloads = st.one_of(
@@ -30,26 +32,24 @@ _payloads = st.one_of(
 @settings(max_examples=200, deadline=None)
 @given(_payloads)
 def test_snappy_roundtrip_identity(data):
-    assert snappy_decompress(snappy_compress(data)) == data
+    assert decompress_records(_CODEC_SNAPPY, compress_records(_CODEC_SNAPPY, data)) == data
 
 
 @settings(max_examples=200, deadline=None)
 @given(_payloads)
 def test_lz4_roundtrip_identity(data):
-    assert lz4_frame_decompress(lz4_frame_compress(data)) == data
+    assert decompress_records(_CODEC_LZ4, compress_records(_CODEC_LZ4, data)) == data
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.binary(min_size=1, max_size=200))
 def test_snappy_decoder_never_hangs_on_garbage(garbage):
     """Arbitrary bytes either decode (by luck) or raise ValueError —
-    never IndexError/struct.error/infinite loop."""
+    any other exception fails the test."""
     try:
-        snappy_decompress(garbage)
+        decompress_records(_CODEC_SNAPPY, garbage)
     except ValueError:
         pass
-    except (IndexError, KeyError) as e:  # pragma: no cover
-        raise AssertionError(f"untyped decoder failure: {e!r}") from e
 
 
 @settings(max_examples=200, deadline=None)
@@ -96,7 +96,7 @@ def test_mqtt_packet_frame_roundtrip(ptype, flags, body):
 @given(st.binary(min_size=1, max_size=200))
 def test_lz4_decoder_never_hangs_on_garbage(garbage):
     try:
-        lz4_frame_decompress(garbage)
+        decompress_records(_CODEC_LZ4, garbage)
     except ValueError:
         pass
 
@@ -104,24 +104,18 @@ def test_lz4_decoder_never_hangs_on_garbage(garbage):
 @settings(max_examples=200, deadline=None)
 @given(_payloads)
 def test_zstd_roundtrip_identity(data):
-    from nifi_minifi_cpp_spark.sources.zstd_codec import zstd_compress, zstd_decompress
-
-    assert zstd_decompress(zstd_compress(data)) == data
+    assert decompress_records(_CODEC_ZSTD, compress_records(_CODEC_ZSTD, data)) == data
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.binary(max_size=400))
 def test_zstd_decoder_never_hangs_on_garbage(garbage):
     """Arbitrary bytes either decode (vacuously, if they happen to be
-    a valid frame) or raise the typed ZstdError / a bounds error —
-    never loop or corrupt state. Includes garbage behind a valid
-    magic+header prefix to reach the block/entropy layers."""
-    from nifi_minifi_cpp_spark.sources.zstd_codec import ZstdError, zstd_decompress
-
+    a valid frame) or raise ValueError — never loop or corrupt state.
+    Includes garbage behind a valid magic+header prefix to reach the
+    block/entropy layers."""
     for blob in (garbage, bytes.fromhex("28b52ffd2400") + garbage):
         try:
-            zstd_decompress(blob)
-        except ZstdError:
+            decompress_records(_CODEC_ZSTD, blob)
+        except ValueError:
             pass
-        except (IndexError, KeyError) as e:  # pragma: no cover
-            raise AssertionError(f"untyped decoder failure: {e!r}") from e

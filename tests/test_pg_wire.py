@@ -167,8 +167,8 @@ def _preloaded_client(server_bytes: bytes) -> PgWireClient:
 
 def test_malformed_data_row_raises_typed_error():
     """r14 advice fix: malformed server bytes must surface as
-    PgWireError (the single-typed-error contract kafka_wire/zstd_codec
-    follow), not a raw UnicodeDecodeError/struct.error."""
+    PgWireError (the single-typed-error contract kafka_wire's codec
+    path follows), not a raw UnicodeDecodeError/struct.error."""
     import struct
 
     rowdesc = struct.pack(">h", 1) + b"col\x00" + struct.pack(">ihihih", 0, 0, 25, -1, -1, 0)

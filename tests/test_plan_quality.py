@@ -395,12 +395,12 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     """r8: two tables bucketed on the join key with the same bucket
     count must join WITHOUT any exchange — the co-located-join
     primitive for repeated fact-table joins at warehouse scale."""
-    from nifi_minifi_cpp_spark.util import write_bucketed
+    from nifi_minifi_cpp_spark.plans.bucketing import write_bucketed
 
     a = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS va")
     b = spark.range(0, 1000).selectExpr("id AS k", "id * 3 AS vb")
-    write_bucketed(a, "bk_a", "k", num_buckets=8, sort_cols="k")
-    write_bucketed(b, "bk_b", "k", num_buckets=8, sort_cols="k")
+    write_bucketed(a, "bk_a", "k", n_buckets=8, sort_cols="k")
+    write_bucketed(b, "bk_b", "k", n_buckets=8, sort_cols="k")
     try:
         joined = spark.table("bk_a").join(spark.table("bk_b"), "k")
         # disable broadcast so the co-location (not a broadcast) is

@@ -168,55 +168,6 @@ def test_rocksdb_state_store_provider_configured(spark, tmpdir):
     assert not any(f.endswith(".delta") for f in state_files), state_files
 
 
-def test_tws_bin_packer_gated_or_runs(spark, tmpdir):
-    """transformWithStateInPandas bin packer (r8): on a cluster with
-    protobuf it runs the same contract as the applyInPandasWithState
-    path with REGISTERED bin-age timers; in this container (no
-    google.protobuf, no network — the TWS JVM<->Python protocol needs
-    it) it must fail with the documented guidance, not a deep
-    streaming crash."""
-    import pytest as _pytest
-
-    from nifi_minifi_cpp_spark.streaming.stateful import merge_content_bin_packing_tws
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    src_dir = os.path.join(tmpdir, "src")
-    rows = [(f"k{i % 2}", f"m{i:02d}") for i in range(20)]
-    spark.createDataFrame(rows, "correlation string, content string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(src_dir)
-    stream = st.file_stream(spark, src_dir, "correlation string, content string", "parquet")
-
-    if not has_protobuf:
-        with _pytest.raises(ImportError, match="protobuf"):
-            merge_content_bin_packing_tws(stream, max_entries=4)
-        return
-
-    merged = merge_content_bin_packing_tws(stream, max_entries=4, max_bin_age_ms=5_000)
-    q = (
-        merged.writeStream.format("memory")
-        .queryName("twsbins")
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(tmpdir, "ckpt"))
-        .start()
-    )
-    try:
-        out = _poll_rows(spark, q, "twsbins", expected=6)
-    finally:
-        q.stop()
-    by_reason = {}
-    for r in out:
-        by_reason.setdefault(r["flush_reason"], []).append(r)
-    assert len(by_reason.get("entries", [])) == 4
-    assert len(by_reason.get("age", [])) == 2
-
-
 def test_bin_packer_age_flush_direct(spark):
     """Age-based flush path driven directly (timeout injection)."""
     import pandas as pd
