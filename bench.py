@@ -234,7 +234,7 @@ def main():
     # residual warm-up cost and broke round-over-round comparisons
     # (r4->r5: q1 0.48s->2.31s purely from moving to position 0).
     # Local-iteration filter: SPARK_GRAFT_BENCH_ONLY=a,b,c times just
-    # those queries (and skips writing BENCH_DETAIL.json, so a partial
+    # those queries (and skips writing the detail file, so a partial
     # sweep can never masquerade as the round artifact).
     only = {s for s in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if s}
     names = [n for n in sorted(qs) if not only or n in only]
@@ -283,13 +283,20 @@ def main():
         "errors": errors,
         "sf": sf,
     }
-    # Per-query timings go to a file — the driver keeps only a ~2KB
-    # stdout tail, and round 1's single 2.3KB JSON line was truncated
-    # (BENCH_r01 "parsed": null). The LAST stdout line is a minimal
-    # summary so any tail-capture parser wins.
+    # Per-query timings go to a file — a ~2KB stdout tail capture
+    # truncates one long JSON line (BENCH_r01 "parsed": null). The LAST
+    # stdout line is a minimal summary so any tail-capture parser wins.
+    # Each run writes its own stamped file under the ignored .bench_out/,
+    # so a run never overwrites the committed BENCH_DETAIL.json (the
+    # `regressed` prior read above).
     if not only:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"), "w") as f:
+        out_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_out")
+        os.makedirs(out_dir, exist_ok=True)
+        stamp = time.strftime("%Y%m%dT%H%M%SZ", time.gmtime())
+        detail_path = os.path.join(out_dir, f"BENCH_DETAIL-{stamp}.json")
+        with open(detail_path, "w") as f:
             json.dump(detail, f, indent=1)
+        print(f"# detail: {detail_path}", file=sys.stderr)
     print(json.dumps(detail), file=sys.stderr)
     print(
         json.dumps(

@@ -8,8 +8,9 @@ TransferredBytes and onTrigger runtimes
 Spark-first equivalents:
 - batch: the Observation API — metrics piggyback on the job that
   computes the result, zero extra passes;
-- streaming: StreamingQueryListener progress events (rows/sec,
-  batch durations, state store sizes) — the QueryMetrics /
+- streaming: the query's per-batch progress dicts
+  (``StreamingQuery.recentProgress``: rows/sec, batch durations, state
+  store sizes) held in a ``FlowMetricsLog`` — the QueryMetrics /
   RepositoryMetrics analogue.
 """
 
@@ -18,7 +19,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -72,45 +73,14 @@ def with_transfer_metrics(
 
 @dataclass
 class FlowMetricsLog:
-    """Collected streaming progress (LogMetricsPublisher analogue)."""
+    """Collected streaming progress dicts, as ``recentProgress`` returns
+    them (LogMetricsPublisher analogue)."""
 
     progress: list[dict] = field(default_factory=list)
 
     def totals(self) -> dict:
         rows = sum(p.get("numInputRows", 0) for p in self.progress)
         return {"batches": len(self.progress), "input_rows": rows}
-
-
-def attach_streaming_metrics(spark: SparkSession) -> FlowMetricsLog:
-    """Register a StreamingQueryListener mirroring the reference's
-    metrics publishers; returns the live log object."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    log = FlowMetricsLog()
-
-    class _Listener(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            pass
-
-        def onQueryProgress(self, event):
-            p = event.progress
-            log.progress.append(
-                {
-                    "id": str(p.id),
-                    "batchId": p.batchId,
-                    "numInputRows": p.numInputRows,
-                    "durationMs": dict(p.durationMs) if p.durationMs else {},
-                }
-            )
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            pass
-
-    spark.streams.addListener(_Listener())
-    return log
 
 
 # ---------------------------------------------------------------------------
