@@ -687,13 +687,16 @@ def ngram_jaccard_dedup(
         # strategy to skip it when the corpus shape is known (the
         # stats job costs roughly one candidate-generation pass)
         cand = cand.persist()
-        n_pairs = cand.count()
-        n_involved = (
-            cand.select(F.col("_ida").alias(id_col))
-            .unionByName(cand.select(F.col("_idb").alias(id_col)))
-            .distinct()
-            .count()
-        )
+        # one aggregate over both pair ends: 2 rows a pair, and the
+        # distinct ids counted as distinct() does (a null is one id)
+        ends = cand.select(F.explode(F.array("_ida", "_idb")).alias("_id"))
+        stats = ends.agg(
+            F.count(F.lit(1)).alias("n2"),
+            F.count_distinct("_id").alias("d"),
+            F.max(F.col("_id").isNull().cast("int")).alias("z"),
+        ).first()
+        n_pairs = stats["n2"] // 2
+        n_involved = stats["d"] + (stats["z"] or 0)
         hot = n_pairs > 0 and n_pairs >= 4 * n_involved
     else:
         hot = verify_strategy == "precompute"

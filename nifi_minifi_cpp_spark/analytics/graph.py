@@ -10,6 +10,21 @@ materializing job, so no builder fires a separate count action. The
 barriers themselves are eager: a builder blocks the driver while they
 run, before it returns its (lazy) result frame.
 
+Lineage rule for the loops. A barrier goes only on the state one round
+hands to a later round, and ``_carry`` alone decides when: never on a
+frame that lives inside one round, on the seed frame, or on the last
+round's output (that plan runs once, in the caller's action). A loop
+whose round reads its carried state TWICE (``hits``, ``bfs_hops``,
+``k_core_peel``) cuts every round: an uncut plan doubles each round
+(``hits`` cut only every 4 rounds plans 156 Exchanges at 2 rounds and
+660 at 3; cut every round, 24 at 2, 3 or 6). A loop that reads it once
+(``pagerank``, ``label_propagation``) cuts every ``_BARRIER_EVERY``
+rounds, so its plan grows linearly and stays bounded.
+``connected_components`` and ``pagerank_grouped`` barrier every round
+through ``util.observed_barrier`` instead, because the barrier's job
+supplies a figure they need: the changed-label count that ends the
+fixpoint, the rank-frame size behind the broadcast dial.
+
 Distributed connected components — transitive closure for dedup.
 The pairwise dedup family (MinHash/SimHash/embedding/semantic) drops
 near-duplicates against a kept exemplar; when duplicate relations
@@ -63,25 +78,36 @@ BROADCAST_MAX_NODES = 8_000_000  # (long, double) rows ~ 128 MB built
 # billion-edge graphs.
 BARRIER_MAX_EDGES = 16_000_000
 
-# pagerank cuts its rank lineage every this many rounds so long runs
-# do not stack unbounded plan depth
-_RANK_BARRIER_EVERY = 4
+# lineage cadence of the loops that read their carried state once
+# (module lineage rule)
+_BARRIER_EVERY = 4
 
 
 def _maybe_broadcast(df: DataFrame, fits: bool) -> DataFrame:
     return F.broadcast(df) if fits else df
 
 
+def _carry(state: DataFrame, i: int, rounds: int, every: int) -> DataFrame:
+    """Round ``i``'s output as the next round's input: barriered when
+    round ``i + 1`` closes a cadence of ``every`` and is not the last
+    (module lineage rule)."""
+    if (i + 1) % every or i + 1 == rounds:
+        return state
+    return reliable_barrier(state)
+
+
 def _edge_table(
     edges: DataFrame, src: str, dst: str, undirected: bool
-) -> tuple[DataFrame, int]:
+) -> tuple[DataFrame, bool]:
     """Distinct ``(_s, _d)`` edges behind one barrier — both
-    orientations when ``undirected`` — and their observed row count."""
+    orientations when ``undirected`` — and the broadcast dial of a
+    node-sized frame over them: ``|V| <= 2 x`` the observed row count
+    fits ``BROADCAST_MAX_NODES`` (module dial note)."""
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
     if undirected:
         e = e.unionByName(edges.select(F.col(dst).alias("_s"), F.col(src).alias("_d")))
     e, size = observed_barrier(e.distinct())
-    return e, size["n"]
+    return e, 2 * size["n"] <= BROADCAST_MAX_NODES
 
 
 def connected_components(
@@ -99,13 +125,11 @@ def connected_components(
     (log2 of the longest path; 30 covers any graph a real corpus
     produces) rather than returning silently-wrong labels.
     """
-    sym, m = _edge_table(edges, src, dst, undirected=True)
-    # broadcast dial (module note): the (node, label) frame is node-
-    # sized (<= 2|E|); when it fits, the neighbor-min join and the
+    # when the (node, label) frame fits, the neighbor-min join and the
     # pointer jump are map-side and the symmetric edge table never
     # shuffles per round
-    fits = 2 * m <= BROADCAST_MAX_NODES
-    labels = reliable_barrier(
+    sym, fits = _edge_table(edges, src, dst, undirected=True)
+    labels = (
         sym.groupBy("_s")
         .agg(F.min("_d").alias("nmin"))
         .select(F.col("_s").alias("node"), F.least("_s", "nmin").alias("label"))
@@ -141,9 +165,6 @@ def connected_components(
             "label",
             "left",
         )
-        # barrier each round: an iterative plan otherwise compounds
-        # analysis depth linearly with rounds (persist alone does not
-        # truncate lineage) and the analyzer/codegen eventually fails
         new_labels, changed = observed_barrier(
             jump.select(
                 "node",
@@ -309,8 +330,7 @@ def pagerank(
                 + damping * F.coalesce(F.col("_in"), F.lit(0.0))
             ).alias("rank"),
         )
-        if (i + 1) % _RANK_BARRIER_EVERY == 0 and i + 1 < iterations:
-            ranks = reliable_barrier(ranks)
+        ranks = _carry(ranks, i, iterations, _BARRIER_EVERY)
     return ranks
 
 
@@ -409,13 +429,12 @@ def label_propagation(
     min_by HASH aggregate (map-side combined) rather than a
     sort-window — two shuffles a round on 16-byte rows, no per-round
     sort; the edge list is computed once behind a barrier and reused
-    every round.
+    every round, and the label lineage is cut every ``_BARRIER_EVERY``
+    rounds.
     """
-    sym, m = _edge_table(edges, src, dst, undirected=True)
-    # broadcast dial (module note): the (node, label) frame is node-
-    # sized; when it fits, each round's label join is map-side over the
-    # stationary symmetric edge table
-    fits = 2 * m <= BROADCAST_MAX_NODES
+    # when the (node, label) frame fits, each round's label join is
+    # map-side over the stationary symmetric edge table
+    sym, fits = _edge_table(edges, src, dst, undirected=True)
     labels = sym.select(F.col("_s").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -428,25 +447,27 @@ def label_propagation(
             # the minimum neighbor id — one map-side-combined min
             # aggregate over the barriered edge table replaces the
             # label join and the two-level count/min_by pair.
-            labels = sym.groupBy("_s").agg(F.min("_d").alias("label")).select(
-                F.col("_s").alias("node"), "label"
+            step = sym.groupBy("_s").agg(F.min("_d").alias("label"))
+        else:
+            # top-1 via min_by over the (-count, label) struct — lexical
+            # struct ordering IS the (count DESC, label ASC) rule — a
+            # hash aggregate with map-side combine instead of a full
+            # sort-window per round
+            step = (
+                sym.join(_maybe_broadcast(labels.withColumnRenamed("node", "_d"), fits), "_d")
+                .groupBy("_s", "label")
+                .agg(F.count(F.lit(1)).alias("_c"))
+                .groupBy("_s")
+                .agg(
+                    F.min_by(
+                        "label",
+                        F.struct((-F.col("_c")).alias("_k1"), F.col("label").alias("_k2")),
+                    ).alias("label")
+                )
             )
-            continue
-        counted = (
-            sym.join(_maybe_broadcast(labels.withColumnRenamed("node", "_d"), fits), "_d")
-            .groupBy("_s", "label")
-            .agg(F.count(F.lit(1)).alias("_c"))
+        labels = _carry(
+            step.select(F.col("_s").alias("node"), "label"), r, iterations, _BARRIER_EVERY
         )
-        # top-1 via min_by over the (-count, label) struct — lexical
-        # struct ordering IS the (count DESC, label ASC) rule — a hash
-        # aggregate with map-side combine instead of a full sort-window
-        # per round
-        labels = counted.groupBy("_s").agg(
-            F.min_by(
-                "label",
-                F.struct((-F.col("_c")).alias("_k1"), F.col("label").alias("_k2")),
-            ).alias("label")
-        ).select(F.col("_s").alias("node"), "label")
     return labels
 
 
@@ -576,8 +597,8 @@ def hits(
     equi-join of the slim (node, score) frame onto the edge list plus
     a groupBy sum; the global L1 mass is a one-row broadcast scalar
     (no second pass over nodes); the edge table is computed once
-    behind a barrier; per-round lineage is cut by the barrier on the
-    hub frame.
+    behind a barrier; the hub frame carries each round into the next
+    and is cut every round (module lineage rule).
 
     Optimization r17 (guide §2.1): the score frames stay SPARSE
     through the rounds — hubs over out-nodes, auths over in-nodes —
@@ -588,10 +609,7 @@ def hits(
     the final zero-fill join, which is also where the pure-sink hub=0 /
     pure-source auth=0 exactness comes from (coalesce to literal 0.0).
     """
-    e, m = _edge_table(edges, src, dst, undirected=False)
-    # broadcast dial (module note): the per-half-step score frames are
-    # node-bounded (|V| <= 2|E|)
-    fits = 2 * m <= BROADCAST_MAX_NODES
+    e, fits = _edge_table(edges, src, dst, undirected=False)
     # sparse uniform start: only out-node hub values ever feed the
     # auth half-step, so the sink rows of the dense 1.0 start were dead
     hubs = e.select(F.col("_s").alias("node")).distinct().select(
@@ -605,7 +623,7 @@ def hits(
             .select("node", F.lit(1.0).alias("hub"), F.lit(0.0).alias("auth"))
         )
     auths = None
-    for _ in range(iterations):
+    for i in range(iterations):
         a_raw = (
             e.join(_maybe_broadcast(hubs.withColumnRenamed("node", "_s"), fits), "_s")
             .groupBy("_d")
@@ -623,27 +641,17 @@ def hits(
             .agg(F.sum("auth").alias("_x"))
         )
         h_mass = F.broadcast(h_raw.agg(F.sum("_x").alias("_t")))
-        hubs = reliable_barrier(
-            h_raw.withColumnRenamed("_s", "node")
-            .crossJoin(h_mass)
-            .select("node", (F.col("_x") / F.col("_t")).alias("hub"))
+        hubs = h_raw.withColumnRenamed("_s", "node").crossJoin(h_mass)
+        hubs = _carry(
+            hubs.select("node", (F.col("_x") / F.col("_t")).alias("hub")), i, iterations, 1
         )
-    # out-nodes ∪ in-nodes IS the node set, and both sparse frames are
-    # node-sized (hubs materialized, auths one agg above the barriered
-    # hub frame — its duplicated subtree is deduped by runtime exchange
-    # reuse) — derive it from them instead of re-scanning the
-    # 2|E|-row edge table
-    nodes = (
-        hubs.select("node").unionByName(auths.select("node")).distinct()
-    )
-    return (
-        nodes.join(_maybe_broadcast(hubs, fits), "node", "left")
-        .join(_maybe_broadcast(auths, fits), "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
-            F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
-        )
+    # out-nodes ∪ in-nodes IS the node set: the sparse hub frame covers
+    # the out-nodes and the auth frame the in-nodes, so one full outer
+    # join zero-fills both without re-scanning the 2|E|-row edge table
+    return hubs.join(auths, "node", "full_outer").select(
+        "node",
+        F.coalesce(F.col("hub"), F.lit(0.0)).alias("hub"),
+        F.coalesce(F.col("auth"), F.lit(0.0)).alias("auth"),
     )
 
 
@@ -665,27 +673,21 @@ def bfs_hops(
 
     100 TB shape: one slim (node, hop) frame; each round is ONE
     equi-join of the edge list against it plus a min-aggregate (the
-    same slim-pair/barrier-per-round discipline as the other iterative
-    operators — no frontier ever re-materializes prior rounds through
-    lineage). Rounds shuffle O(m) join rows and O(n) aggregate rows.
+    same slim-pair discipline as the other iterative operators; the
+    frame is read twice a round, so it is cut every round — module
+    lineage rule). Rounds shuffle O(m) join rows and O(n) aggregate
+    rows.
     """
-    e, m = _edge_table(edges, src, dst, undirected=False)
-    # broadcast dial (module note): the (node, hop) frontier is bounded
-    # by |V| <= 2|E|, so dial on that conservative bound (no extra
-    # distinct pass)
-    fits = 2 * m <= BROADCAST_MAX_NODES
-    nd = reliable_barrier(
-        seeds.select(F.col(node).alias("_n")).distinct().select(
-            "_n", F.lit(0).cast("int").alias("_h")
-        )
+    e, fits = _edge_table(edges, src, dst, undirected=False)
+    nd = seeds.select(F.col(node).alias("_n")).distinct().select(
+        "_n", F.lit(0).cast("int").alias("_h")
     )
-    for _ in range(iterations):
+    for i in range(iterations):
         prop = e.join(_maybe_broadcast(nd, fits), e["_s"] == nd["_n"]).select(
             F.col("_d").alias("_n"), (F.col("_h") + F.lit(1)).alias("_h")
         )
-        nd = reliable_barrier(
-            nd.unionByName(prop).groupBy("_n").agg(F.min("_h").alias("_h"))
-        )
+        nd = nd.unionByName(prop).groupBy("_n").agg(F.min("_h").alias("_h"))
+        nd = _carry(nd, i, iterations, 1)
     return nd.select(F.col("_n").alias(node), F.col("_h").alias("hop"))
 
 
@@ -707,32 +709,27 @@ def k_core_peel(
 
     100 TB shape: per round ONE degree aggregate over the symmetric
     edge list plus two left-semi joins against the (typically much
-    smaller) survivor set — slim integer keys only, barriered per
-    round like the other iterative operators. Peeling cascades:
-    survivors shrink monotonically, so later rounds cost less.
+    smaller) survivor set — slim integer keys only; the edge list is
+    read twice a round, so it is cut every round (module lineage
+    rule). Peeling cascades: survivors shrink monotonically, so later
+    rounds cost less.
     """
-    sym, m = _edge_table(
+    # when the survivor set fits, both per-round semi-joins are
+    # map-side — the symmetric edge table never shuffles while peeling
+    sym, fits = _edge_table(
         edges.filter(F.col(src) != F.col(dst)), src, dst, undirected=True
     )
-    # broadcast dial (module note): the survivor set is node-sized
-    # (<= 2|E|); broadcasting it makes both per-round semi-joins
-    # map-side — the symmetric edge table is never shuffled while
-    # peeling
-    fits = 2 * m <= BROADCAST_MAX_NODES
-    for _ in range(iterations):
-        keep = reliable_barrier(
+    for i in range(iterations):
+        keep = (
             sym.groupBy("_s")
             .agg(F.count(F.lit(1)).alias("_deg"))
             .filter(F.col("_deg") >= k)
             .select("_s")
         )
-        sym = reliable_barrier(
-            sym.join(_maybe_broadcast(keep, fits), "_s", "left_semi").join(
-                _maybe_broadcast(keep.withColumnRenamed("_s", "_d"), fits),
-                "_d",
-                "left_semi",
-            )
+        sym = sym.join(_maybe_broadcast(keep, fits), "_s", "left_semi").join(
+            _maybe_broadcast(keep.withColumnRenamed("_s", "_d"), fits), "_d", "left_semi"
         )
+        sym = _carry(sym, i, iterations, 1)
     return sym.agg(
         F.countDistinct("_s").cast("long").alias("n_nodes"),
         (F.count(F.lit(1)) / 2).cast("long").alias("n_edges"),

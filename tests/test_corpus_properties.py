@@ -469,8 +469,9 @@ def test_bfs_hops_matches_python_model(edges, seeds):
     sym = edges + [(b, a) for a, b in edges]
     e = spark.createDataFrame(sym, "src long, dst long")
     sdf = spark.createDataFrame([(s,) for s in seeds], "node long")
-    got = {r["node"]: r["hop"] for r in bfs_hops(e, sdf, iterations=3).collect()}
-    assert got == _model_bfs(edges, seeds, 3)
+    for iters in (3, 6):
+        got = {r["node"]: r["hop"] for r in bfs_hops(e, sdf, iterations=iters).collect()}
+        assert got == _model_bfs(edges, seeds, iters)
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
@@ -480,8 +481,9 @@ def test_k_core_matches_python_model(edges, k):
 
     spark = _spark()
     df = spark.createDataFrame(edges, "src long, dst long")
-    row = k_core_peel(df, k=k, iterations=3).collect()[0]
-    assert (row["n_nodes"], row["n_edges"]) == _model_kcore(edges, k, 3)
+    for iters in (3, 6):
+        row = k_core_peel(df, k=k, iterations=iters).collect()[0]
+        assert (row["n_nodes"], row["n_edges"]) == _model_kcore(edges, k, iters)
 
 
 def _model_kmeans(pts, k, iterations):
@@ -707,7 +709,7 @@ def _model_hits(edges, iterations):
         min_size=1,
         max_size=14,
     ),
-    iters=st.integers(1, 3),
+    iters=st.sampled_from((1, 2, 3, 6)),
 )
 def test_hits_matches_python_model(edges, iters):
     """HITS against a pure-Python L1-normalized model: summation order

@@ -215,15 +215,17 @@ def test_label_propagation_two_communities(spark):
         ("a3", "b1"),
     ]
     df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["node"]: r["label"] for r in label_propagation(df, iterations=3).collect()}
-    a_labels = {got["a1"], got["a2"], got["a3"]}
-    b_labels = {got["b1"], got["b2"], got["b3"]}
-    # each triangle converges to ONE label, and the two communities
-    # stay apart — mode-label updates never merge across the bridge
-    # (min-label CC would collapse all six nodes onto 'a1')
-    assert len(a_labels) == 1
-    assert len(b_labels) == 1
-    assert a_labels != b_labels
+    # 6 rounds pass the label lineage cut at round 4 (graph._BARRIER_EVERY)
+    for iters in (3, 6):
+        got = {r["node"]: r["label"] for r in label_propagation(df, iterations=iters).collect()}
+        a_labels = {got["a1"], got["a2"], got["a3"]}
+        b_labels = {got["b1"], got["b2"], got["b3"]}
+        # each triangle converges to ONE label, and the two communities
+        # stay apart — mode-label updates never merge across the bridge
+        # (min-label CC would collapse all six nodes onto 'a1')
+        assert len(a_labels) == 1
+        assert len(b_labels) == 1
+        assert a_labels != b_labels
 
 
 def test_label_propagation_deterministic_tiebreak(spark):
@@ -309,9 +311,10 @@ def test_graph_ops_invariant_to_input_order(spark):
     df1 = spark.createDataFrame(edges, "src long, dst long").repartition(1)
     df2 = spark.createDataFrame(shuffled, "src long, dst long").repartition(13)
 
-    lpa1 = sorted(map(tuple, label_propagation(df1, iterations=2).collect()))
-    lpa2 = sorted(map(tuple, label_propagation(df2, iterations=2).collect()))
-    assert lpa1 == lpa2
+    for iters in (2, 6):
+        lpa1 = sorted(map(tuple, label_propagation(df1, iterations=iters).collect()))
+        lpa2 = sorted(map(tuple, label_propagation(df2, iterations=iters).collect()))
+        assert lpa1 == lpa2
 
     pr1 = {r["node"]: round(r["rank"], 9) for r in pagerank(df1, iterations=2).collect()}
     pr2 = {r["node"]: round(r["rank"], 9) for r in pagerank(df2, iterations=2).collect()}

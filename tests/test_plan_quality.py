@@ -591,7 +591,9 @@ def test_iterative_entries_exchange_ceiling():
         "personalized_pagerank_seeds": 30,
         "ppr_multi_seed_groups": 10,
         "label_propagation_communities": 12,
-        "hits_hub_authority": 16,
+        # the returned frame carries HITS' last round unbarriered
+        # (analytics/graph.py lineage rule): 24 audited
+        "hits_hub_authority": 26,
         "bfs_hop_histogram": 6,
         "kcore_supplier_parts": 8,
         "kmeans_embedding_clusters": 8,
@@ -610,6 +612,45 @@ def test_iterative_entries_exchange_ceiling():
         "iterative entry plan re-expands prior rounds (missed "
         f"reliable_barrier?): {over} (audited exchanges, ceiling)"
     )
+
+
+def test_graph_loops_cut_carried_state_lineage(spark):
+    """The lineage rule of analytics/graph.py, pinned on the executed
+    plan of each returned frame: a loop that reads its carried state
+    twice a round (hits, bfs_hops, k_core_peel) cuts it every round, so
+    its plan is no larger at 3 or 6 rounds than at 2; a loop that reads
+    it once (label_propagation, pagerank) cuts it every
+    ``_BARRIER_EVERY`` rounds, so 6 rounds plan no larger than
+    ``_BARRIER_EVERY``. An uncut carried frame doubles (or, read once,
+    lengthens) the plan with every round."""
+    from nifi_minifi_cpp_spark.analytics import graph
+
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 40) for i in range(1, 40)] + [(2, 39), (5, 17)],
+        "src long, dst long",
+    )
+    seeds = spark.createDataFrame([(1,), (2,)], "node long")
+    loops = {
+        "hits": (lambda n: graph.hits(edges, iterations=n), 2, (3, 6)),
+        "bfs_hops": (lambda n: graph.bfs_hops(edges, seeds, iterations=n), 2, (3, 6)),
+        "k_core_peel": (lambda n: graph.k_core_peel(edges, k=2, iterations=n), 2, (3, 6)),
+        "label_propagation": (
+            lambda n: graph.label_propagation(edges, iterations=n),
+            graph._BARRIER_EVERY,
+            (6,),
+        ),
+        "pagerank": (
+            lambda n: graph.pagerank(edges, iterations=n), graph._BARRIER_EVERY, (6,)
+        ),
+    }
+    grown = {}
+    for name, (build, base, longer) in loops.items():
+        ref = plan_of(build(base)).count("Exchange")
+        for n in longer:
+            got = plan_of(build(n)).count("Exchange")
+            if got > ref:
+                grown[name] = (base, ref, n, got)
+    assert not grown, f"carried lineage not cut: {grown} (rounds, exchanges)"
 
 
 def test_slowest_entries_exchange_ceiling():

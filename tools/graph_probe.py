@@ -1,7 +1,7 @@
 """100x edge-growth probe for the graph family (VERDICT r15 #6).
 
-The graph block (PageRank/PPR/HITS/LPA/CC) is the largest aggregate
-bench cost with only 10x probes on record. This probe replicates the
+The graph block (PageRank/PPR/HITS/LPA/CC, BFS, k-core) is the largest
+aggregate bench cost with only 10x probes on record. This probe replicates the
 sf0.1 supplier-part edge list 1x/10x/100x with DISJOINT id shifts
 (each replica is its own component — the realistic scale-out axis:
 more keys, same per-key structure) and times the barriered-rounds
@@ -26,8 +26,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from nifi_minifi_cpp_spark.analytics.graph import (
+    bfs_hops,
     connected_components,
     hits,
+    k_core_peel,
     label_propagation,
     pagerank,
 )
@@ -157,6 +159,22 @@ def main() -> None:
         if wanted("lpa_3it"):
             results.setdefault("lpa_3it", {})[r] = timed(
                 "lpa_3it", lambda: label_propagation(e, iterations=3)
+            )
+        if wanted("bfs_3it"):
+            # bfs_hop_histogram's seeds in every replica: suppliers 1-10
+            # (packed ids 2..20) of each shifted copy
+            base_id = F.col("src") % F.lit(stride)
+            seeds = (
+                e.filter((base_id <= 20) & (base_id % 2 == 0))
+                .select(F.col("src").alias("node"))
+                .distinct()
+            )
+            results.setdefault("bfs_3it", {})[r] = timed(
+                "bfs_3it", lambda: bfs_hops(e, seeds, iterations=3)
+            )
+        if wanted("kcore_3it"):
+            results.setdefault("kcore_3it", {})[r] = timed(
+                "kcore_3it", lambda: k_core_peel(e, k=5, iterations=3)
             )
         if wanted("item_similarity_topk"):
             # the shipped entry itself, on a replica-scaled lineitem dir
