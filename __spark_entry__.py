@@ -21,7 +21,7 @@ from nifi_minifi_cpp_spark import entry_queries
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
-    return entry_queries.q1_pricing_summary(spark, "/root/testdata/sf0.001")
+    return entry_queries.relational.q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

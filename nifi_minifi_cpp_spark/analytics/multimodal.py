@@ -210,32 +210,3 @@ def sample_video_frames(df: DataFrame, every_s: float = 1.0, max_frames: int = 8
             yield pd.DataFrame(out)
 
     return _spread(df).mapInPandas(run, FRAME_SAMPLE_SCHEMA)
-
-
-def resize_images(df: DataFrame, width: int, height: int, fake: bool = False) -> DataFrame:
-    """Image resize. Real path (default): decode (PPM/BMP numpy,
-    PIL-gated others), nearest-neighbor resize, re-encode as PPM —
-    payload actually changes. Fake path: passthrough payload with
-    metadata updated (used where only the plumbing is under test)."""
-    resized_meta = F.map_concat(
-        F.col("meta"), F.create_map(F.lit("resized"), F.lit(f"{width}x{height}"))
-    )
-    if fake:
-        return df.withColumn("meta", resized_meta)
-
-    import pandas as pd
-
-    out_schema = df.schema
-
-    def run(batches):
-        from .codecs import decode_image, encode_ppm, resize_nearest
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["payload"] = pdf["payload"].map(
-                lambda b: encode_ppm(resize_nearest(decode_image(bytes(b)), width, height))
-            )
-            pdf["mime_type"] = "image/x-portable-pixmap"
-            yield pdf
-
-    return _spread(df).mapInPandas(run, out_schema).withColumn("meta", resized_meta)

@@ -821,13 +821,6 @@ def spans_from_words(words: Column, span_words: int, overlap: bool = False) -> C
     )
 
 
-def word_spans(text: Column, span_words: int, overlap: bool = False) -> Column:
-    """Column-level convenience over :func:`spans_from_words` — fine
-    for tests and small frames; data paths should stage (see
-    :func:`staged_word_spans`)."""
-    return spans_from_words(F.split(text, " "), span_words, overlap)
-
-
 def staged_word_spans(
     df: DataFrame,
     id_col: str,

@@ -1,9 +1,6 @@
-"""Shared infrastructure for the entry_queries package: the registry,
-the table loader, and every cross-family helper/oracle builder.
-
-Mechanical split of the single-module entry_queries.py (r13,
-VERDICT r12 #4): registration order is preserved by importing the
-family modules in the original definition order from __init__.
+"""Shared infrastructure of the entry_queries package: the registry,
+the table loader, and the helpers and oracle fragments that two or more
+query families read. A helper that one family reads lives in that family.
 """
 
 from __future__ import annotations
@@ -14,34 +11,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..analytics import (
-    bpe_ish_token_count,
-    cosine_topk,
-    embedding_dedup,
-    exact_dedup,
-    knn_join_exact,
-    language_id,
-    minhash_dedup,
-    quality_features,
-    simhash64,
-)
-from ..el import el_bool, el_string
-from ..model import events_to_flowfiles
-from ..operators import (
-    attribute_rolling_window_count,
-    evaluate_json_path,
-    extract_text,
-    funnel,
-    hash_content,
-    merge_content_defragment,
-    replace_text,
-    route_on_attribute,
-    sliding_window_agg,
-    split_text,
-    tumbling_window_agg,
-)
+from ..analytics.dedup import allpairs_jaccard_join
+from ..analytics.graph import connected_components
+from ..analytics.similarity import quantize_embeddings_int8
 from ..session import configure, load_table
-from ..util import reliable_barrier
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -77,182 +50,6 @@ def _cents(col) -> "F.Column":
     SUMs are order-independent (Spark segment-tree vs DuckDB sequential
     float accumulation differ in ulps on boundary values)."""
     return F.round(col * 100).cast("long")
-
-
-_PROCFS_FIXTURE = {
-    "meminfo": "MemTotal:       16384000 kB\nMemFree:         4096000 kB\nMemAvailable:    8192000 kB\n",
-    "stat": "cpu  100 20 300 4000 50 0 6 0 0 0\ncpu0 50 10 150 2000 25 0 3 0 0 0\n",
-    "diskstats": "   8       0 sda 500 0 10000 400 200 0 8000 300 0 600 700\n",
-    "net/dev": (
-        "Inter-|   Receive                                                |  Transmit\n"
-        " face |bytes    packets errs drop fifo frame compressed multicast|bytes    "
-        "packets errs drop fifo colls carrier compressed\n"
-        "  eth0: 1000000    2000    0    0    0     0          0         0  500000    "
-        "1500    0    0    0     0       0          0\n"
-    ),
-}
-
-
-class _FakeOpcServer:
-    """Deterministic OPC-UA address space: 50 variable nodes under the
-    browsed root, values/timestamps a pure function of the index."""
-
-    def traverse(self, node_id, max_depth):
-        from ..sources.industrial import OpcNode
-
-        for i in range(50):
-            yield OpcNode(
-                node_id=f"ns=2;i={i}",
-                browsename=f"var{i}",
-                path=f"{node_id}/var{i}",
-                datatype="Int32",
-                source_timestamp=f"t{i // 10}",
-                value=i * 3,
-                is_variable=True,
-                attributes={},
-            )
-        yield OpcNode(  # folder nodes are skipped by FetchOPC
-            node_id="ns=2;folder",
-            browsename="folder",
-            path=f"{node_id}/folder",
-            datatype="",
-            source_timestamp="",
-            value=None,
-            is_variable=False,
-            attributes={},
-        )
-
-
-class _FakeKvStore:
-    """GetCouchbaseKey fixture: even-user keys resolve, odd are
-    missing — both relationships exercised deterministically."""
-
-    def get(self, key):
-        uid = int(key.rsplit(":", 1)[1])
-        if uid % 2 == 0:
-            return f"profile-of-{uid}"
-        raise KeyError(key)
-
-
-class _FakeRemoteFs:
-    """ListSFTP/FetchSFTP fixture: a two-level tree of 20 files with
-    deterministic sizes/mtimes/contents."""
-
-    def listdir(self, path):
-        from ..sources.remote_fs import RemoteEntry
-
-        if path == "/data":
-            yield RemoteEntry(path="/data/sub", size=0, mtime=0.0, is_dir=True)
-            for i in range(10):
-                yield RemoteEntry(path=f"/data/f{i}.log", size=100 + i, mtime=1000.0 + i, is_dir=False)
-        elif path == "/data/sub":
-            for i in range(10, 20):
-                yield RemoteEntry(path=f"/data/sub/f{i}.log", size=100 + i, mtime=1000.0 + i, is_dir=False)
-
-    def read(self, path):
-        return f"content-of-{path}".encode()
-
-
-class _FakeModbusDevice:
-    """Deterministic register map for the graded Modbus entry: value =
-    f(kind, address) so the oracle can pin the exact record. Module
-    level -> picklable into the executor-side client factory."""
-
-    def read(self, kind, address, count, unit_id):
-        if kind == "coil":
-            return [(address + i) % 2 == 0 for i in range(count)]
-        return [(address + i) * 2 for i in range(count)]
-
-
-# ===========================================================================
-# Weaker (rows-only) checks: hash-seeded / non-SQL-expressible ops
-# ===========================================================================
-
-
-def _stage_text_atomic(stage: str, build_df) -> None:
-    """Publish a text stage under ``stage`` exactly once, race-safely,
-    REPAIRING torn stages: write to a unique tmp dir, atomic-rename
-    into place. If the rename fails because a previous run crashed
-    mid-publish (stage exists WITHOUT _SUCCESS), the torn dir is
-    removed and the rename retried — the old swallow-everything
-    except-clause served incomplete data forever (review r5)."""
-    import shutil
-    import uuid as _uuid
-
-    done = os.path.join(stage, "_SUCCESS")
-    if os.path.exists(done):
-        return
-    tmp = f"{stage}.tmp-{_uuid.uuid4().hex}"
-    build_df().write.mode("overwrite").text(tmp)
-    try:
-        os.rename(tmp, stage)
-        return
-    except OSError:
-        pass
-    if os.path.exists(done):  # lost the race to a healthy publisher
-        shutil.rmtree(tmp, ignore_errors=True)
-        return
-    shutil.rmtree(stage, ignore_errors=True)  # torn stage: repair
-    try:
-        os.rename(tmp, stage)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.exists(done):  # not a benign second race
-            raise
-
-
-def _stage_mod_batches(df, stage: str, n_batches: int = 4, key: str = "event_id") -> None:
-    """Write ``df`` as ``n_batches`` replay files (``batch-kk.parquet``,
-    row membership ``key % n_batches == k``, strictly increasing mtimes
-    so the file-stream source replays them in order) in ONE Spark job
-    (optimization r16): the previous per-batch ``coalesce(1)`` loop
-    re-scanned the input once per batch — 4 scans + 4 single-task write
-    jobs for the 4-batch fixtures. A ``repartition(key % n)`` +
-    ``partitionBy`` write produces exactly one file per batch class in
-    one pass (each class hashes to one task; the writer splits by
-    directory value). Row order WITHIN a batch file is not part of any
-    fixture's semantics (watermarks read the per-batch max event time;
-    sinks are compared as sets).
-
-    Hardening (VERDICT r16 #3 + ADVICE): each batch class must land in
-    EXACTLY one part file — anything that splits task output
-    (maxRecordsPerFile, speculative re-runs) would otherwise silently
-    drop rows from a replay batch, and an EMPTY class would change the
-    replay's batch count (the former empty-class fallback could not
-    actually produce a file: Spark emits no data file for an empty
-    non-zero-partition write). Both now fail loudly; at every driver
-    SF each ``key % n_batches`` class is provably non-empty."""
-    import os as _os
-    import shutil as _shutil
-    import time as _time
-
-    tmp = f"{stage}/_build"
-    (
-        df.withColumn("_b", (F.col(key) % n_batches).cast("int"))
-        .repartition(F.col("_b"))
-        .write.partitionBy("_b")
-        .parquet(tmp)
-    )
-    now = _time.time()
-    for k in range(n_batches):
-        part_dir = f"{tmp}/_b={k}"
-        dst = f"{stage}/batch-{k:02d}.parquet"
-        if not _os.path.isdir(part_dir):
-            raise RuntimeError(
-                f"_stage_mod_batches: batch class {key} % {n_batches} == {k} "
-                "is empty — the replay fixture requires every class to hold "
-                "rows (add data or lower n_batches)"
-            )
-        parts = [f for f in sorted(_os.listdir(part_dir)) if f.endswith(".parquet")]
-        if len(parts) != 1:
-            raise RuntimeError(
-                f"_stage_mod_batches: expected exactly 1 part file for batch "
-                f"class {k}, found {len(parts)} — a split write would "
-                "silently drop rows from the replay batch"
-            )
-        _os.rename(f"{part_dir}/{parts[0]}", dst)
-        _os.utime(dst, (now + k, now + k))
-    _shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _stream_events_stage(spark: SparkSession, sf_dir: str, table: str = "events") -> str:
@@ -337,202 +134,22 @@ def _poll_stream_rows(
     raise TimeoutError(f"{view}: {expected} rows not reached in {timeout_s}s")
 
 
-def _await_self_termination(q, timeout_s: float = 180.0) -> None:
-    """Wait for an availableNow-triggered query to terminate on its own
-    (r9, VERDICT r8 #4): self-termination means no q.stop() ever
-    interrupts an in-flight RocksDB state-store commit — the source of
-    the transient CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT retry noise
-    in the stateful fixtures."""
+def _drain(spark: SparkSession, writer, timeout_s: float = 120.0, partitions: int = 4) -> None:
+    """Run a stream once over the input available now: start ``writer``
+    (a ``DataStreamWriter``) with the availableNow trigger under
+    ``partitions`` shuffle partitions, and wait for the query to stop on
+    its own. Self-termination means no ``q.stop()`` interrupts an
+    in-flight RocksDB state-store commit, the source of transient
+    CANNOT_WRITE_STATE_STORE.CANNOT_COMMIT retries. A query still
+    running after ``timeout_s`` is stopped and raises TimeoutError,
+    since its sink holds only part of the input."""
+    with _pinned_shuffle(spark, partitions):
+        q = writer.trigger(availableNow=True).start()
     if not q.awaitTermination(timeout_s):
         q.stop()
-        raise TimeoutError(f"streaming fixture did not self-terminate in {timeout_s}s")
+        raise TimeoutError(f"stream {q.name} did not drain its input in {timeout_s}s")
     if q.exception():
         raise q.exception()
-
-
-# --- invariant-backed dedup grading -------------------------------------
-#
-# The near-dup algorithms are seeded/LSH-based, so their exact kept set
-# is not SQL-expressible — but their CONTRACT is. Each graded entry
-# injects exact duplicates (copies of the 100 smallest ids, shifted by
-# +1_000_000) into the corpus, runs the full dedup, and returns a
-# one-row invariant report whose every value a DuckDB oracle pins:
-#
-#   n_input            = corpus + injected copies   (pinned exactly)
-#   orphans            = kept ids not in the input  (must be 0)
-#   injected_survivors = injected copies kept       (must be 0: every
-#                        copy shares all buckets with its smaller-id
-#                        original, so the drop rule must fire)
-#   dup_violations     = kept pairs w/ identical content (must be 0)
-#
-# Non-vacuous by construction: the corpus has no natural exact dups
-# (exact_dedup keeps all 500 at sf0.01), so the 100 injected pairs are
-# what the recall assertions actually exercise.
-
-_INJECT_N = 100
-_INJECT_OFFSET = 1_000_000
-
-
-def _with_injected_dups(df: DataFrame, id_col: str) -> DataFrame:
-    dups = df.filter(F.col(id_col) < _INJECT_N).withColumn(
-        id_col, F.col(id_col) + F.lit(_INJECT_OFFSET)
-    )
-    return df.unionByName(dups)
-
-
-def _dedup_invariant_report(inp: DataFrame, kept: DataFrame, id_col: str, content_col: str) -> DataFrame:
-    # the kept set feeds THREE aggregates below; without a barrier each
-    # one re-runs the whole LSH/signature lineage (mapInPandas stages
-    # are not cached by Catalyst). Materialize the slim (id, content)
-    # projection once.
-    kept = reliable_barrier(kept.select(id_col, content_col))
-    n_input = inp.agg(F.count(F.lit(1)).alias("n_input"))
-    orphans = kept.join(inp.select(id_col), id_col, "left_anti").agg(
-        F.count(F.lit(1)).alias("orphans")
-    )
-    survivors = kept.filter(F.col(id_col) >= _INJECT_OFFSET).agg(
-        F.count(F.lit(1)).alias("injected_survivors")
-    )
-    # pair join keyed on the 64-bit content hash (8-byte shuffle key at
-    # scale), equality re-checked on the content itself
-    ka = kept.select(
-        F.col(id_col).alias("_ida"), F.col(content_col).alias("_ca"), F.xxhash64(content_col).alias("_h")
-    )
-    kb = kept.select(
-        F.col(id_col).alias("_idb"), F.col(content_col).alias("_cb"), F.xxhash64(content_col).alias("_h")
-    )
-    viol = (
-        ka.join(kb, "_h")
-        .filter((F.col("_ida") > F.col("_idb")) & (F.col("_ca") == F.col("_cb")))
-        .agg(F.count(F.lit(1)).alias("dup_violations"))
-    )
-    return n_input.crossJoin(orphans).crossJoin(survivors).crossJoin(viol)
-
-
-_DEDUP_INVARIANT_ORACLE = f"""
-SELECT (SELECT count(*) FROM documents)
-       + (SELECT count(*) FROM documents WHERE doc_id < {_INJECT_N}) AS n_input,
-       CAST(0 AS BIGINT) AS orphans,
-       CAST(0 AS BIGINT) AS injected_survivors,
-       CAST(0 AS BIGINT) AS dup_violations
-"""
-
-
-_EMBEDDING_DEDUP_ORACLE = f"""
-SELECT (SELECT count(*) FROM embeddings)
-       + (SELECT count(*) FROM embeddings WHERE vec_id < {_INJECT_N}) AS n_input,
-       CAST(0 AS BIGINT) AS orphans,
-       CAST(0 AS BIGINT) AS injected_survivors,
-       CAST(0 AS BIGINT) AS dup_violations
-"""
-
-
-def _append_host_info_oracle() -> str:
-    """The oracle is generated at registration time with THIS machine's
-    hostname/IP inlined as literals — AppendHostInfo's output is
-    host-deterministic, which is exactly its contract
-    (AppendHostInfo.cpp:58)."""
-    import socket
-
-    host = socket.gethostname()
-    try:
-        ip = socket.gethostbyname(host)
-    except OSError:
-        ip = "127.0.0.1"
-    return f"""
-    SELECT event_id, '{host}' AS src_host, '{ip}' AS src_ip
-    FROM events WHERE event_id < 500
-    """
-
-
-def _language_id_oracle_sql() -> str:
-    """DuckDB mirror of analytics.text_analysis.language_id: distinct
-    lowercase whitespace tokens, per-language stopword-overlap counts,
-    argmax with ties broken toward the lexicographically greatest lang
-    (Spark's array_max over struct(score, lang) semantics)."""
-    from ..analytics.text_analysis import _LANG_STOPWORDS
-
-    def lit(ws: list[str]) -> str:
-        return "[" + ",".join(f"'{w}'" for w in ws) + "]"
-
-    score_cols = ", ".join(
-        f"len(list_intersect(tk, {lit(ws)})) AS s_{lang}" for lang, ws in _LANG_STOPWORDS.items()
-    )
-    langs_desc = sorted(_LANG_STOPWORDS, reverse=True)
-    case = " ".join(f"WHEN s_{lang} = m THEN '{lang}'" for lang in langs_desc[:-1])
-    return f"""
-WITH toks AS (
-  SELECT list_distinct(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS tk
-  FROM documents
-), scores AS (
-  SELECT {score_cols},
-         greatest({", ".join("s_" + lang for lang in _LANG_STOPWORDS)}) AS m
-  FROM toks
-), labeled AS (
-  SELECT CASE WHEN m = 0 THEN 'und' {case} ELSE '{langs_desc[-1]}' END AS lang_detected
-  FROM scores
-)
-SELECT lang_detected, count(*) AS count FROM labeled GROUP BY lang_detected
-"""
-
-
-_GOPHER_STOPWORDS_SQL = "['the','and','of','to','a','in','is','that','for','it']"
-
-
-def _messy_urls(docs: DataFrame) -> DataFrame:
-    """Deterministic messy-URL fixture: each document gets one of six
-    real-world URL variants (case, default port, fragment, tracking
-    params, trailing slash, mixed query) of a base resource shared by
-    every doc with the same (source, doc_id % 40) — so canonicalization
-    has genuine collisions to collapse. Mirrored verbatim in the
-    oracle's SQL CASE."""
-    k = (F.col("doc_id") % 40).cast("string")
-    host = F.concat(F.col("source"), F.lit(".example.com"))
-    base = F.concat(F.lit("http://"), host, F.lit("/d/"), k)
-    url = (
-        F.when(F.col("doc_id") % 6 == 0, base)
-        .when(
-            F.col("doc_id") % 6 == 1,
-            F.concat(F.lit("HTTP://"), F.upper(F.col("source")), F.lit(".EXAMPLE.COM:80/d/"), k),
-        )
-        .when(F.col("doc_id") % 6 == 2, F.concat(base, F.lit("/#section-2")))
-        .when(F.col("doc_id") % 6 == 3, F.concat(base, F.lit("?utm_source=feed&utm_campaign=x")))
-        .when(
-            F.col("doc_id") % 6 == 4,
-            F.concat(F.lit("https://"), host, F.lit(":443/d/"), k, F.lit("?gclid=abc123")),
-        )
-        .otherwise(F.concat(base, F.lit("?id="), k, F.lit("&utm_medium=em&ref=2")))
-    )
-    return docs.select(F.col("doc_id"), url.alias("url"))
-
-
-from ..plans.layout import zorder_key as _zorder_key
-from ..plans.layout import zorder_key_sql as _zorder_key_sql
-
-_ZORDER_ORACLE_KEY = _zorder_key_sql(
-    "(user_id & 65535)", "(CAST(floor(epoch(ts)) AS BIGINT) & 65535)"
-)
-
-
-_PROFILE_COLS = [
-    ("o_orderkey", True),
-    ("o_custkey", True),
-    ("o_orderstatus", False),
-    ("o_totalprice", True),
-    ("o_orderdate", "ts"),
-    ("o_orderpriority", False),
-]
-
-_PROFILE_ORACLE = "\nUNION ALL\n".join(
-    f"""SELECT '{c}' AS column_name, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-       CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-       {f'CAST(floor(epoch(min({c}))) AS DOUBLE)' if kind == 'ts' else (f'CAST(min({c}) AS DOUBLE)' if kind else 'CAST(NULL AS DOUBLE)')} AS min_num,
-       {f'CAST(floor(epoch(max({c}))) AS DOUBLE)' if kind == 'ts' else (f'CAST(max({c}) AS DOUBLE)' if kind else 'CAST(NULL AS DOUBLE)')} AS max_num
-    FROM orders"""
-    for c, kind in _PROFILE_COLS
-)
-
 
 
 def _supplier_part_edges(li, symmetric: bool = True):
@@ -548,67 +165,6 @@ def _supplier_part_edges(li, symmetric: bool = True):
     return fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-
-
-def _bpe_oracle_sql(n: int) -> str:
-    """Unrolled-CTE DuckDB oracle for ``bpe_train`` — the
-    ``pagerank_supplier_parts`` pattern: one (pair-census p{i}, argmax
-    b{i}, rewrite v{i}) round per CTE triple, chained N times. The
-    rewrite is an INDEPENDENT construction from the engine's
-    array-fold: DuckDB folds each word to a U+001F-joined STRING whose
-    suffix is tested/stripped, then splits back — same greedy
-    left-to-right semantics through a different mechanism (and
-    tests/test_corpus_properties.py holds the third, pure-Python
-    model, per the oracle-mirror caveat)."""
-    parts = [
-        r"""
-    WITH v0 AS (
-      SELECT CAST(count(*) AS BIGINT) AS freq,
-             list_append(string_split(word, ''), '</w>') AS syms
-      FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
-      WHERE word <> '' AND NOT contains(word, chr(31))
-      GROUP BY word)"""
-    ]
-    for i in range(1, n + 1):
-        parts.append(
-            f"""
-    , p{i} AS (
-      SELECT unnest(list_transform(range(1, len(syms)),
-               j -> syms[j] || chr(31) || syms[j+1])) AS pr, freq
-      FROM v{i - 1} WHERE len(syms) >= 2)
-    , b{i} AS (
-      SELECT string_split(pr, chr(31))[1] AS l,
-             string_split(pr, chr(31))[2] AS r,
-             CAST(sum(freq) AS BIGINT) AS cnt
-      FROM p{i} GROUP BY pr
-      ORDER BY cnt DESC, l ASC, r ASC LIMIT 1)"""
-        )
-        if i < n:
-            parts.append(
-                f"""
-    , v{i} AS (
-      SELECT freq, string_split(
-        list_reduce(syms, (acc, x) -> CASE
-          WHEN x = b.r AND (acc = b.l OR (length(acc) > length(b.l)
-                AND substr(acc, length(acc) - length(b.l), length(b.l) + 1)
-                    = chr(31) || b.l))
-          THEN CASE WHEN length(acc) = length(b.l) THEN b.l || b.r
-               ELSE substr(acc, 1, length(acc) - length(b.l)) || b.l || b.r END
-          ELSE acc || chr(31) || x END),
-        chr(31)) AS syms
-      FROM v{i - 1}, b{i} b)"""
-            )
-    unions = "\n      UNION ALL ".join(
-        f"SELECT {i} AS merge_rank, l AS merge_left, r AS merge_right,"
-        f" cnt AS pair_count FROM b{i}"
-        for i in range(1, n + 1)
-    )
-    parts.append(
-        f"""
-    SELECT * FROM ({unions})
-    ORDER BY merge_rank"""
-    )
-    return "".join(parts)
 
 
 def _kmeans_oracle_sql(k: int, iters: int) -> str:
@@ -662,266 +218,236 @@ def _kmeans_oracle_sql(k: int, iters: int) -> str:
     return "".join(parts)
 
 
-def _kmeans_quality_oracle_sql(k: int, iters: int) -> str:
-    """Quality-report twin of ``_kmeans_oracle_sql``: identical
-    unrolled Lloyd CTEs, then cohesion = last-round members' exact
-    squared distances to the FINAL (post-update) centroids, and
-    separation = each final centroid's squared distance to its
-    nearest other final centroid — all BIGINT."""
-    base = _kmeans_oracle_sql(k, iters)
-    prefix = base[: base.rindex("\n    SELECT s.cluster_id")]
-    return (
-        prefix
-        + f"""
-    , dfin AS (
-      SELECT e.vec_id, a.c,
-             CAST(sum((e.x - c.x) * (e.x - c.x)) AS BIGINT) AS dist
-      FROM e JOIN a{iters} a ON e.vec_id = a.vec_id
-             JOIN c{iters} c ON c.c = a.c AND c.dim = e.dim
-      GROUP BY e.vec_id, a.c)
-    , percluster AS (
-      SELECT c AS cluster_id, CAST(count(*) AS BIGINT) AS n_members,
-             CAST(sum(dist) AS BIGINT) AS sum_sq_dist
-      FROM dfin GROUP BY c)
-    , ic AS (
-      SELECT a.c AS ca, b.c AS cb,
-             CAST(sum((a.x - b.x) * (a.x - b.x)) AS BIGINT) AS d
-      FROM c{iters} a JOIN c{iters} b ON a.dim = b.dim AND a.c <> b.c
-      GROUP BY a.c, b.c)
-    , mi AS (SELECT ca AS cluster_id,
-                    CAST(min(d) AS BIGINT) AS min_intercentroid_sq
-             FROM ic GROUP BY ca)
-    SELECT p.cluster_id, p.n_members, p.sum_sq_dist, mi.min_intercentroid_sq
-    FROM percluster p JOIN mi USING (cluster_id)
-    ORDER BY p.cluster_id"""
+def _int8_top10(emb: DataFrame, rank_col: str) -> DataFrame:
+    """Top-10 neighbours ``(query_id, nid, rank_col)`` of the queries
+    vec_id < 20 by dequantized-int8 cosine, the retrieval that the int8
+    recall and nDCG evals grade. Dequantized score = leftfold(sum
+    (qa_i*s_i)(qb_i*s_i)) / (|ra||rb|): every term is the same IEEE
+    sequence in Catalyst and DuckDB (explicit left folds, correctly
+    rounded sqrt), so the ranking is deterministic. The query side is
+    broadcast; ties break toward the smaller id."""
+    deq = quantize_embeddings_int8(emb, return_scales=True).select(
+        "vec_id",
+        F.zip_with(
+            F.col("qvec"), F.col("scales"), lambda qd, s: qd.cast("double") * s
+        ).alias("rv"),
     )
-
-
-def _bpe_tokenize_oracle_sql(n: int) -> str:
-    """Oracle for ``bpe_tokenized_counts``: the same unrolled merge
-    rounds as ``_bpe_oracle_sql`` but carrying the WORD through every
-    round, so the final vocabulary maps word -> subword count and a
-    join against per-(source, word) occurrence counts yields the
-    corpus accounting. The rewrite fold is the oracle's independent
-    string-fold construction, not the engine's array fold."""
-    fold = r"""string_split(
-        list_reduce(syms, (acc, x) -> CASE
-          WHEN x = b.r AND (acc = b.l OR (length(acc) > length(b.l)
-                AND substr(acc, length(acc) - length(b.l), length(b.l) + 1)
-                    = chr(31) || b.l))
-          THEN CASE WHEN length(acc) = length(b.l) THEN b.l || b.r
-               ELSE substr(acc, 1, length(acc) - length(b.l)) || b.l || b.r END
-          ELSE acc || chr(31) || x END),
-        chr(31))"""
-    parts = [
-        r"""
-    WITH sw AS (
-      SELECT source, word, CAST(count(*) AS BIGINT) AS cnt
-      FROM (SELECT source, unnest(string_split(text, ' ')) AS word
-            FROM documents)
-      WHERE word <> '' AND NOT contains(word, chr(31))
-      GROUP BY source, word),
-    v0 AS (
-      SELECT word, CAST(sum(cnt) AS BIGINT) AS freq,
-             list_append(string_split(word, ''), '</w>') AS syms
-      FROM sw GROUP BY word)"""
-    ]
-    for i in range(1, n + 1):
-        parts.append(
-            f"""
-    , p{i} AS (
-      SELECT unnest(list_transform(range(1, len(syms)),
-               j -> syms[j] || chr(31) || syms[j+1])) AS pr, freq
-      FROM v{i - 1} WHERE len(syms) >= 2)
-    , b{i} AS (
-      SELECT string_split(pr, chr(31))[1] AS l,
-             string_split(pr, chr(31))[2] AS r
-      FROM p{i} GROUP BY pr
-      ORDER BY CAST(sum(freq) AS BIGINT) DESC, l ASC, r ASC LIMIT 1)
-    , v{i} AS (
-      SELECT word, freq, {fold} AS syms
-      FROM v{i - 1}, b{i} b)"""
+    deq = deq.select(
+        "vec_id",
+        "rv",
+        F.sqrt(
+            F.aggregate(
+                F.transform("rv", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
+            )
+        ).alias("nrm"),
+    )
+    qa = F.broadcast(
+        deq.filter(F.col("vec_id") < 20).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("rv").alias("ra"),
+            F.col("nrm").alias("na"),
         )
-    parts.append(
-        f"""
-    , nd AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-             FROM documents GROUP BY source)
-    SELECT nd.source, nd.n_docs, coalesce(tt.total_bpe_tokens, 0) AS total_bpe_tokens
-    FROM nd LEFT JOIN (
-      SELECT sw.source,
-             CAST(sum(sw.cnt * len(v{n}.syms)) AS BIGINT) AS total_bpe_tokens
-      FROM sw JOIN v{n} ON sw.word = v{n}.word
-      GROUP BY sw.source) tt ON nd.source = tt.source"""
     )
-    return "".join(parts)
-
-
-def _hilbert_oracle_sql() -> str:
-    from ..plans.layout import hilbert_key_sql_ctes
-
-    ctes = hilbert_key_sql_ctes(
-        # epoch_us // 1e6 floors like Spark's unix_timestamp;
-        # epoch(ts)::BIGINT would ROUND sub-second fractions (the
-        # DuckDB float-cast trap) and shift ~half the keys by one
-        "(SELECT user_id, (user_id & 255) AS bx,"
-        " ((epoch_us(ts) // 1000000) & 255) AS by FROM events)",
-        ["user_id"],
-        "bx",
-        "by",
-        bits=8,
+    dot = F.aggregate(
+        F.zip_with(F.col("ra"), F.col("rv"), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda a, x: a + x,
     )
+    scored = (
+        deq.crossJoin(qa)
+        .filter(F.col("query_id") != F.col("vec_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("nid"),
+            F.try_divide(dot, F.col("na") * F.col("nrm")).alias("s"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("s"), F.asc("nid"))
+    return (
+        scored.withColumn(rank_col, F.row_number().over(w))
+        .filter(F.col(rank_col) <= 10)
+        .select("query_id", "nid", rank_col)
+    )
+
+
+def _int8_retrieval_ctes(qr_cols: str, ex_cols: str) -> str:
+    """Oracle CTEs of the int8 retrieval evals: ``qr`` holds each query's
+    top 10 by dequantized-int8 cosine (rank ``rk``), ``ex`` its exact
+    float-cosine top 10; both read queries vec_id < 20 and select the
+    given columns. The text ends inside the ``WITH`` list."""
     return f"""
-    WITH {ctes}
-    SELECT CAST(hd >> 10 AS BIGINT) AS bucket,
+    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    d AS (SELECT i AS pos, abs(v[CAST(i + 1 AS INT)]) AS a
+          FROM v, (SELECT unnest(range(64)) AS i) ix),
+    sc AS (SELECT pos, CASE WHEN max(a) > 0 THEN max(a) / 127.0 ELSE 1.0 END AS s
+           FROM d GROUP BY pos),
+    sarr AS (SELECT list(s ORDER BY pos) AS arr FROM sc),
+    r AS (SELECT vec_id,
+            list_transform(range(1, 65),
+              i -> CAST(greatest(-127, least(127,
+                     CAST(round(v[CAST(i AS INT)] / arr[CAST(i AS INT)]) AS INT)))
+                   AS DOUBLE) * arr[CAST(i AS INT)]) AS rv
+          FROM v, sarr),
+    rn AS (SELECT vec_id, rv,
+             sqrt(list_reduce(list_transform(rv, x -> x * x), (a, b) -> a + b)) AS nrm
+           FROM r),
+    qp AS (SELECT a.vec_id AS query_id, b.vec_id AS nid,
+             list_reduce(list_transform(range(1, 65),
+               i -> a.rv[CAST(i AS INT)] * b.rv[CAST(i AS INT)]), (x, y) -> x + y)
+               / (a.nrm * b.nrm) AS s
+           FROM rn a JOIN rn b ON a.vec_id < 20 AND a.vec_id <> b.vec_id),
+    qr AS (SELECT {qr_cols} FROM (
+             SELECT query_id, nid,
+                    row_number() OVER (PARTITION BY query_id
+                                       ORDER BY s DESC, nid) AS rk
+             FROM qp) WHERE rk <= 10),
+    ex AS (SELECT {ex_cols} FROM (
+             SELECT a.vec_id AS query_id, b.vec_id AS nid,
+                    row_number() OVER (
+                      PARTITION BY a.vec_id
+                      ORDER BY list_cosine_similarity(a.embedding::DOUBLE[],
+                                                      b.embedding::DOUBLE[]) DESC,
+                               b.vec_id) AS rk
+             FROM embeddings a, embeddings b
+             WHERE a.vec_id < 20 AND a.vec_id <> b.vec_id) WHERE rk <= 10),
+"""
+
+
+def _session_stats(ev: DataFrame) -> DataFrame:
+    """Per-user 30-minute session windows of an events frame, batch or
+    streaming: ``(user_id, session_start, session_end, n_events,
+    total_value)``. Spark's session end is exclusive (last event +
+    gap), so ``_SESSION_STATS_ORACLE`` breaks a session at dt >= gap."""
+    agg = ev.groupBy(F.session_window("ts", "30 minutes"), "user_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.round(F.sum("value"), 2).alias("total_value"),
+    )
+    return agg.select(
+        "user_id",
+        F.col("session_window.start").alias("session_start"),
+        F.col("session_window.end").alias("session_end"),
+        "n_events",
+        "total_value",
+    )
+
+
+_SESSION_STATS_ORACLE = r"""
+    WITH s AS (SELECT user_id, ts, value,
+                 CASE WHEN lag(ts) OVER w IS NULL
+                      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
+                 THEN 1 ELSE 0 END AS brk
+               FROM events
+               WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+    g AS (SELECT user_id, ts, value,
+                 sum(brk) OVER (PARTITION BY user_id ORDER BY ts
+                                ROWS UNBOUNDED PRECEDING) AS sid
+          FROM s)
+    SELECT user_id, min(ts) AS session_start,
+           max(ts) + INTERVAL 30 MINUTE AS session_end,
            CAST(count(*) AS BIGINT) AS n_events,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-           CAST(min(hd) AS BIGINT) AS min_h,
-           CAST(max(hd) AS BIGINT) AS max_h
-    FROM h_out GROUP BY 1
+           round(sum(value), 2) AS total_value
+    FROM g GROUP BY user_id, sid
     """
 
 
-def _minhash_seed_constants(k: int = 32) -> list[tuple[int, int, int]]:
-    """(seed, a, b) rows for the universal-hash MinHash family
-    h_i(x) = (a_i * md5_28(x) + b_i) mod (2^61 - 1): md5 runs ONCE per
-    shingle and the k components are integer multiply-adds — 32x less
-    hashing than md5-per-seed, same estimator; a/b derive from md5 of
-    the seed index so both engines inline identical literals."""
-    import hashlib as _hl
-
-    rows = []
-    for i in range(k):
-        a = int(_hl.md5(f"A{i}".encode()).hexdigest()[:8], 16) | 1
-        b = int(_hl.md5(f"B{i}".encode()).hexdigest()[:8], 16)
-        rows.append((i, a, b))
-    return rows
+def _near_dup_components(docs: DataFrame) -> DataFrame:
+    """Near-duplicate clusters of ``docs``: connected components
+    ``(node, component)`` over the exact AllPairs Jaccard >= 0.8 pairs
+    of 3-word shingles. ``_NEAR_DUP_COMPONENTS_CTES`` is the oracle."""
+    pairs = allpairs_jaccard_join(docs, threshold=0.8, ngram=3).select("id_a", "id_b")
+    return connected_components(pairs, src="id_a", dst="id_b")
 
 
-def _minhash_eval_oracle() -> str:
-    vals = ",\n        ".join(
-        f"({i}, {a}, {b})" for i, a, b in _minhash_seed_constants()
-    )
-    return rf"""
-    WITH ids AS (
-      SELECT doc_id FROM documents WHERE doc_id % 20 = 0),
-    pr AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM ids a JOIN documents b ON b.doc_id = a.doc_id + 1),
-    docs AS (
+# Oracle CTEs of ``_near_dup_components`` on the doc_id % 4 sample: the
+# quadratic Jaccard truth join, then a recursive min-label closure.
+# ``comp(n, c)`` maps each clustered doc to its component; the text ends
+# inside the ``WITH RECURSIVE`` list.
+_NEAR_DUP_COMPONENTS_CTES = r"""
+    WITH RECURSIVE w AS (
       SELECT doc_id, string_split_regex(lower(text), '\s+') AS l
-      FROM documents
-      WHERE doc_id IN (SELECT id_a FROM pr UNION SELECT id_b FROM pr)),
-    sh AS (
+      FROM documents WHERE doc_id % 4 = 0),
+    t AS (
       SELECT doc_id,
         CASE WHEN len(l) - 2 > 0 THEN
           list_distinct(list_transform(range(1, CAST(len(l) - 2 AS BIGINT) + 1),
             i -> array_to_string(list_slice(l, i, i + 2), ' ')))
         ELSE [array_to_string(l, ' ')] END AS s
-      FROM docs),
-    ex AS (
-      SELECT doc_id, unnest(s) AS g FROM sh),
-    h0 AS (
-      SELECT doc_id, CAST(('0x' || substr(md5(g), 1, 7)) AS BIGINT) AS h0
-      FROM ex),
-    sd AS (SELECT * FROM (VALUES
-        {vals}) AS t(seed, a, b)),
-    hx AS (
-      SELECT h0.doc_id, sd.seed,
-             min((h0.h0 * sd.a + sd.b) % 2305843009213693951) AS h
-      FROM h0 CROSS JOIN sd
-      GROUP BY h0.doc_id, sd.seed),"""
+      FROM w),
+    p AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM t a JOIN t b ON a.doc_id < b.doc_id
+      WHERE len(list_intersect(a.s, b.s)) /
+            CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE)
+            >= 0.8),
+    e AS (SELECT id_a AS s, id_b AS d FROM p UNION SELECT id_b, id_a FROM p),
+    reach(n, l) AS (
+      SELECT s, s FROM e
+      UNION
+      SELECT e.d, reach.l FROM e JOIN reach ON e.s = reach.n),
+    comp AS (SELECT n, min(l) AS c FROM reach GROUP BY n),
+"""
 
 
-def _lttb_oracle_sql(k: int = 10) -> str:
-    """Unrolled LTTB oracle (the power-iteration pattern: one CTE
-    chain per sequential bucket step, since the pick in bucket j
-    depends on the pick in bucket j-1). Pure integer arithmetic —
-    the engine and DuckDB must agree bit-for-bit."""
-    steps = []
-    for j in range(k):
-        b_lo = f"1 + ({j} * (L - 2)) // {k}"
-        b_hi = f"1 + ({j + 1} * (L - 2)) // {k}"
-        b_hi2 = f"1 + ({j + 2} * (L - 2)) // {k}" if j + 1 < k else "L"
-        prev = f"s{j - 1}" if j else "s0i"
-        steps.append(
-            f"""
-    n{j} AS (
-      SELECT g, count(*) AS c, sum(t) AS nts, sum(y) AS nys
-      FROM idx JOIN lt USING (g)
-      WHERE i >= {b_hi} AND i < {b_hi2} GROUP BY g),
-    s{j} AS (
-      SELECT g, t, y FROM (
-        SELECT c.g, c.t, c.y,
-               row_number() OVER (PARTITION BY c.g ORDER BY
-                 abs(p.pt * (c.y * n.c - n.nys) + c.t * (n.nys - p.py * n.c)
-                     + n.nts * (p.py - c.y)) DESC, c.t) AS rn
-        FROM (SELECT g, t, y, i FROM idx JOIN lt USING (g)) c
-        JOIN (SELECT g, t AS pt, y AS py FROM {prev}) p USING (g)
-        JOIN n{j} n USING (g)
-        JOIN lt USING (g)
-        WHERE c.i >= {b_lo} AND c.i < {b_hi}
-      ) WHERE rn = 1)"""
-        )
-    unions = "\n    UNION ALL ".join(
-        f"SELECT g, {j + 1} AS o, t, y FROM s{j}" for j in range(k)
+# Oracle CTEs of BM25 for the query {merge, scan, window}: tokens ``t``,
+# per-doc length and term frequencies ``per``, corpus statistics ``st``.
+_BM25_CTES = r"""
+    WITH t AS (
+      SELECT doc_id,
+             list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS tk
+      FROM documents),
+    per AS (
+      SELECT doc_id,
+             CAST(len(tk) AS BIGINT) AS dl,
+             CAST(len(list_filter(tk, x -> x = 'merge')) AS BIGINT) AS tf0,
+             CAST(len(list_filter(tk, x -> x = 'scan')) AS BIGINT) AS tf1,
+             CAST(len(list_filter(tk, x -> x = 'window')) AS BIGINT) AS tf2
+      FROM t),
+    st AS (
+      SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(dl) AS DOUBLE) AS sumdl,
+             CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0,
+             CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
+             CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2
+      FROM per)"""
+
+# BM25 score of a ``per`` row against ``st``: k1 = 1.2, b = 0.75 and the
+# rational Robertson-Sparck Jones idf, summed left to right over the terms.
+_BM25_SCORE_SQL = """((0.0
+       + ((n - df0 + 0.5) / (df0 + 0.5)) * (CAST(tf0 AS DOUBLE) * 2.2)
+           / (CAST(tf0 AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / (sumdl / n)))))
+       + ((n - df1 + 0.5) / (df1 + 0.5)) * (CAST(tf1 AS DOUBLE) * 2.2)
+           / (CAST(tf1 AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / (sumdl / n)))))
+       + ((n - df2 + 0.5) / (df2 + 0.5)) * (CAST(tf2 AS DOUBLE) * 2.2)
+           / (CAST(tf2 AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / (sumdl / n))))"""
+
+
+def _hourly_grid(ev: DataFrame) -> DataFrame:
+    """Each user's hourly grid ``(user_id, ts)``: every hour from the
+    hour of the user's first event to the hour of the last."""
+    bounds = ev.groupBy("user_id").agg(
+        F.date_trunc("hour", F.min("ts")).alias("_mn"),
+        F.date_trunc("hour", F.max("ts")).alias("_mx"),
     )
-    return f"""
-    WITH h AS (
-      SELECT event_type AS g, epoch_us(ts) // 3600000000 AS t,
-             sum(CAST(round(value * 100) AS BIGINT)) AS y
-      FROM events GROUP BY 1, 2),
-    idx AS (
-      SELECT g, t, y, row_number() OVER (PARTITION BY g ORDER BY t) - 1 AS i
-      FROM h),
-    lt AS (SELECT g, count(*) AS L FROM idx GROUP BY g HAVING count(*) >= {k + 2}),
-    s0i AS (SELECT g, t, y FROM idx JOIN lt USING (g) WHERE i = 0),
-    slast AS (SELECT g, t, y FROM idx JOIN lt USING (g) WHERE i = L - 1),{",".join(steps)}
-    SELECT g AS event_type, CAST(o AS BIGINT) AS pick_order,
-           CAST(t AS BIGINT) AS t_hour, CAST(y AS BIGINT) AS y_cents
-    FROM (
-      SELECT g, 0 AS o, t, y FROM s0i
-      UNION ALL {unions}
-      UNION ALL SELECT g, {k + 1} AS o, t, y FROM slast)
-    """
+    return bounds.select(
+        "user_id",
+        F.explode(
+            F.sequence(F.col("_mn"), F.col("_mx"), F.expr("interval 1 hour"))
+        ).alias("ts"),
+    )
 
 
-def _holt_oracle_sql(horizon: int = 6) -> str:
-    """Recursive-CTE Holt oracle: the identical integer recursion
-    (alpha = beta = 1/2, explicit floor after each halving) run by
-    DuckDB's WITH RECURSIVE, one row per (group, step)."""
-    return f"""
-    WITH RECURSIVE h AS (
-      SELECT event_type AS g, epoch_us(ts) // 3600000000 AS t,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
-      FROM events GROUP BY 1, 2),
-    idx AS (
-      SELECT g, y, row_number() OVER (PARTITION BY g ORDER BY t) AS i
-      FROM h),
-    lt AS (
-      SELECT g, count(*) - {horizon} AS T FROM idx GROUP BY g
-      HAVING count(*) - {horizon} >= 2),
-    r AS (
-      SELECT a.g, 1 AS i, a.y AS l, b.y - a.y AS b
-      FROM (SELECT g, y FROM idx WHERE i = 1) a
-      JOIN (SELECT g, y FROM idx WHERE i = 2) b USING (g)
-      JOIN lt USING (g)
-      UNION ALL
-      SELECT r.g, r.i + 1,
-             CAST(floor((x.y + r.l + r.b) / 2) AS BIGINT),
-             CAST(floor((CAST(floor((x.y + r.l + r.b) / 2) AS BIGINT)
-                         - r.l + r.b) / 2) AS BIGINT)
-      FROM r
-      JOIN idx x ON x.g = r.g AND x.i = r.i + 1
-      JOIN lt ON lt.g = r.g
-      WHERE r.i + 1 <= lt.T),
-    fin AS (
-      SELECT r.g, r.l, r.b, lt.T FROM r JOIN lt ON lt.g = r.g AND r.i = lt.T),
-    fc AS (
-      SELECT g, s, l + s * b AS f, T
-      FROM fin CROSS JOIN (SELECT unnest(range(1, {horizon + 1})) AS s))
-    SELECT fc.g AS event_type, CAST(s AS BIGINT) AS step,
-           CAST(f AS BIGINT) AS forecast_cents,
-           CAST(a.y AS BIGINT) AS actual_cents,
-           CAST(f - a.y AS BIGINT) AS err_cents
-    FROM fc JOIN idx a ON a.g = fc.g AND a.i = fc.T + fc.s
-    """
+# Oracle CTEs of the bigram models: lowercased whitespace tokens ``toks``,
+# bigram occurrences ``p2`` and bigram counts ``big``; the text ends
+# inside the ``WITH`` list.
+_BIGRAM_CTES = r"""
+    WITH toks AS (
+      SELECT doc_id,
+             list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
+      FROM documents),
+    p2 AS (
+      SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2
+      FROM (SELECT doc_id,
+              unnest(list_transform(range(1, len(t)),
+                                    i -> struct_pack(w1 := t[i], w2 := t[i+1]))) AS bg
+            FROM toks WHERE len(t) >= 2)),
+    big AS (SELECT w1, w2, count(*) AS cb FROM p2 GROUP BY w1, w2),
+"""

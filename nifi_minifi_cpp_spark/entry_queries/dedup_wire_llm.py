@@ -1,55 +1,105 @@
-"""Temporal joins, invariant-graded dedup, wire protocols, LLM-pipeline pack.
-
-Mechanical split of entry_queries.py (r13): registrations 98..137
-in original definition order; no semantic change.
-"""
+"""Temporal joins, invariant-graded dedup, wire protocols, LLM-pipeline pack."""
 
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._shared import (  # noqa: F401
-    _register,
-    _t,
-    _REGISTRY,
-    _REGISTRATION_ORDER,
-    _cents,
-    _PROCFS_FIXTURE,
-    _FakeOpcServer,
-    _FakeKvStore,
-    _FakeRemoteFs,
-    _FakeModbusDevice,
-    _stage_text_atomic,
-    _stream_events_stage,
-    _pinned_shuffle,
-    _poll_stream_rows,
-    _await_self_termination,
-    _INJECT_N,
-    _INJECT_OFFSET,
-    _with_injected_dups,
-    _dedup_invariant_report,
-    _DEDUP_INVARIANT_ORACLE,
-    _EMBEDDING_DEDUP_ORACLE,
-    _append_host_info_oracle,
-    _language_id_oracle_sql,
-    _GOPHER_STOPWORDS_SQL,
-    _messy_urls,
-    _ZORDER_ORACLE_KEY,
-    _PROFILE_COLS,
-    _PROFILE_ORACLE,
-    _supplier_part_edges,
-    _bpe_oracle_sql,
-    _kmeans_oracle_sql,
-    _kmeans_quality_oracle_sql,
-    _bpe_tokenize_oracle_sql,
-    _hilbert_oracle_sql,
-    _minhash_seed_constants,
-    _minhash_eval_oracle,
-    _lttb_oracle_sql,
-    _holt_oracle_sql,
-    _zorder_key,
-    _zorder_key_sql,
-)
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from ..analytics import embedding_dedup, minhash_dedup
+from ..el import el_string
+from ..model import events_to_flowfiles
+from ..session import configure
+from ..util import reliable_barrier
+from ._shared import _BM25_CTES, _BM25_SCORE_SQL, _poll_stream_rows, _register, _t
+
+
+# --- invariant-backed dedup grading -------------------------------------
+#
+# The near-dup algorithms are seeded/LSH-based, so their exact kept set
+# is not SQL-expressible — but their CONTRACT is. Each graded entry
+# injects exact duplicates (copies of the 100 smallest ids, shifted by
+# +1_000_000) into the corpus, runs the full dedup, and returns a
+# one-row invariant report whose every value a DuckDB oracle pins:
+#
+#   n_input            = corpus + injected copies   (pinned exactly)
+#   orphans            = kept ids not in the input  (must be 0)
+#   injected_survivors = injected copies kept       (must be 0: every
+#                        copy shares all buckets with its smaller-id
+#                        original, so the drop rule must fire)
+#   dup_violations     = kept pairs w/ identical content (must be 0)
+#
+# Non-vacuous by construction: the corpus has no natural exact dups
+# (exact_dedup keeps all 500 at sf0.01), so the 100 injected pairs are
+# what the recall assertions actually exercise.
+
+_INJECT_N = 100
+
+
+_INJECT_OFFSET = 1_000_000
+
+
+def _with_injected_dups(df: DataFrame, id_col: str) -> DataFrame:
+    dups = df.filter(F.col(id_col) < _INJECT_N).withColumn(
+        id_col, F.col(id_col) + F.lit(_INJECT_OFFSET)
+    )
+    return df.unionByName(dups)
+
+
+def _dedup_invariant_report(inp: DataFrame, kept: DataFrame, id_col: str, content_col: str) -> DataFrame:
+    # the kept set feeds THREE aggregates below; without a barrier each
+    # one re-runs the whole LSH/signature lineage (mapInPandas stages
+    # are not cached by Catalyst). Materialize the slim (id, content)
+    # projection once.
+    kept = reliable_barrier(kept.select(id_col, content_col))
+    n_input = inp.agg(F.count(F.lit(1)).alias("n_input"))
+    orphans = kept.join(inp.select(id_col), id_col, "left_anti").agg(
+        F.count(F.lit(1)).alias("orphans")
+    )
+    survivors = kept.filter(F.col(id_col) >= _INJECT_OFFSET).agg(
+        F.count(F.lit(1)).alias("injected_survivors")
+    )
+    # pair join keyed on the 64-bit content hash (8-byte shuffle key at
+    # scale), equality re-checked on the content itself
+    ka = kept.select(
+        F.col(id_col).alias("_ida"), F.col(content_col).alias("_ca"), F.xxhash64(content_col).alias("_h")
+    )
+    kb = kept.select(
+        F.col(id_col).alias("_idb"), F.col(content_col).alias("_cb"), F.xxhash64(content_col).alias("_h")
+    )
+    viol = (
+        ka.join(kb, "_h")
+        .filter((F.col("_ida") > F.col("_idb")) & (F.col("_ca") == F.col("_cb")))
+        .agg(F.count(F.lit(1)).alias("dup_violations"))
+    )
+    return n_input.crossJoin(orphans).crossJoin(survivors).crossJoin(viol)
+
+
+def _dedup_invariant_oracle(table: str, id_col: str) -> str:
+    return f"""
+SELECT (SELECT count(*) FROM {table})
+       + (SELECT count(*) FROM {table} WHERE {id_col} < {_INJECT_N}) AS n_input,
+       CAST(0 AS BIGINT) AS orphans,
+       CAST(0 AS BIGINT) AS injected_survivors,
+       CAST(0 AS BIGINT) AS dup_violations
+"""
+
+
+def _append_host_info_oracle() -> str:
+    """The oracle is generated at registration time with THIS machine's
+    hostname/IP inlined as literals — AppendHostInfo's output is
+    host-deterministic, which is exactly its contract
+    (AppendHostInfo.cpp:58)."""
+    import socket
+
+    host = socket.gethostname()
+    try:
+        ip = socket.gethostbyname(host)
+    except OSError:
+        ip = "127.0.0.1"
+    return f"""
+    SELECT event_id, '{host}' AS src_host, '{ip}' AS src_ip
+    FROM events WHERE event_id < 500
+    """
 
 
 # --- temporal joins (operators/temporal.py) ------------------------------
@@ -115,7 +165,7 @@ def range_join_purchase_after_error(spark: SparkSession, sf_dir: str) -> DataFra
     return out.select("purchase_id", "error_id")
 
 
-@_register("minhash_dedup_kept", _DEDUP_INVARIANT_ORACLE)
+@_register("minhash_dedup_kept", _dedup_invariant_oracle("documents", "doc_id"))
 def minhash_dedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dedup, graded on its invariant contract (the
     seeded kept set itself is not SQL-expressible)."""
@@ -125,7 +175,7 @@ def minhash_dedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup_invariant_report(inp, kept, "doc_id", "text")
 
 
-@_register("ngram_jaccard_dedup_kept", _DEDUP_INVARIANT_ORACLE)
+@_register("ngram_jaccard_dedup_kept", _dedup_invariant_oracle("documents", "doc_id"))
 def ngram_jaccard_dedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram Jaccard near-dedup: MinHash-LSH candidate pruning, then
     EXACT Jaccard (array_intersect/array_union on distinct 3-word
@@ -224,7 +274,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return n_rows.crossJoin(pair_stats).crossJoin(nulls)
 
 
-@_register("embedding_dedup_kept", _EMBEDDING_DEDUP_ORACLE)
+@_register("embedding_dedup_kept", _dedup_invariant_oracle("embeddings", "vec_id"))
 def embedding_dedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SRP-LSH embedding near-dedup, graded on invariants: an injected
     copy has an identical vector → identical hyperplane sign pattern →
@@ -1188,32 +1238,10 @@ def winnowing_fingerprint_rows_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "bm25_topk_docs",
-    r"""
-    WITH t AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS tk
-      FROM documents),
-    per AS (
-      SELECT doc_id,
-             CAST(len(tk) AS BIGINT) AS dl,
-             CAST(len(list_filter(tk, x -> x = 'merge')) AS BIGINT) AS tf0,
-             CAST(len(list_filter(tk, x -> x = 'scan')) AS BIGINT) AS tf1,
-             CAST(len(list_filter(tk, x -> x = 'window')) AS BIGINT) AS tf2
-      FROM t),
-    st AS (
-      SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(dl) AS DOUBLE) AS sumdl,
-             CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0,
-             CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
-             CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2
-      FROM per)
+    _BM25_CTES
+    + rf"""
     SELECT doc_id,
-      ((0.0
-       + ((n - df0 + 0.5) / (df0 + 0.5)) * (CAST(tf0 AS DOUBLE) * 2.2)
-           / (CAST(tf0 AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / (sumdl / n)))))
-       + ((n - df1 + 0.5) / (df1 + 0.5)) * (CAST(tf1 AS DOUBLE) * 2.2)
-           / (CAST(tf1 AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / (sumdl / n)))))
-       + ((n - df2 + 0.5) / (df2 + 0.5)) * (CAST(tf2 AS DOUBLE) * 2.2)
-           / (CAST(tf2 AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / (sumdl / n))))
+      {_BM25_SCORE_SQL}
       AS score
     FROM per, st
     ORDER BY score DESC, doc_id ASC LIMIT 20
@@ -1712,7 +1740,7 @@ def put_tcp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("message").agg(F.count(F.lit(1)).cast("long").alias("n"))
 
 
-@_register("semantic_dedup_kept", _EMBEDDING_DEDUP_ORACLE)
+@_register("semantic_dedup_kept", _dedup_invariant_oracle("embeddings", "vec_id"))
 def semantic_dedup_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023) graded on invariants: an injected
     copy has an identical vector -> identical centroid argmax -> same

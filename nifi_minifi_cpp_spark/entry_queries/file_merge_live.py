@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import configure, load_table
-from ._shared import _register
+from ._shared import _pinned_shuffle, _poll_stream_rows, _register
 
 
 @_register(
@@ -239,8 +239,6 @@ def tailfile_stream_rotation(spark: SparkSession, sf_dir: str) -> DataFrame:
         f.writelines(lines[i] for i in range(200) if i in lines)
     view = f"tfs_{_uuid.uuid4().hex[:8]}"
     stream = spark.readStream.format("tailfile").option("pattern", log).load()
-    from ._shared import _pinned_shuffle, _poll_stream_rows
-
     with _pinned_shuffle(spark, 2):
         q = (
             stream.writeStream.format("memory")

@@ -1,55 +1,51 @@
-"""Layout, mining, windows, streaming joins, data-quality relational pack.
-
-Mechanical split of entry_queries.py (r13): registrations 175..201
-in original definition order; no semantic change.
-"""
+"""Layout, mining, windows, streaming joins, data-quality relational pack."""
 
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._shared import (  # noqa: F401
+import os
+
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from ..operators import sliding_window_agg
+from ..plans.layout import zorder_key, zorder_key_sql
+from ..session import configure
+from ._shared import (
+    _drain,
+    _hourly_grid,
     _register,
-    _t,
-    _REGISTRY,
-    _REGISTRATION_ORDER,
-    _cents,
-    _PROCFS_FIXTURE,
-    _FakeOpcServer,
-    _FakeKvStore,
-    _FakeRemoteFs,
-    _FakeModbusDevice,
-    _stage_text_atomic,
+    _session_stats,
+    _SESSION_STATS_ORACLE,
     _stream_events_stage,
-    _pinned_shuffle,
-    _poll_stream_rows,
-    _await_self_termination,
-    _INJECT_N,
-    _INJECT_OFFSET,
-    _with_injected_dups,
-    _dedup_invariant_report,
-    _DEDUP_INVARIANT_ORACLE,
-    _EMBEDDING_DEDUP_ORACLE,
-    _append_host_info_oracle,
-    _language_id_oracle_sql,
-    _GOPHER_STOPWORDS_SQL,
-    _messy_urls,
-    _ZORDER_ORACLE_KEY,
-    _PROFILE_COLS,
-    _PROFILE_ORACLE,
     _supplier_part_edges,
-    _bpe_oracle_sql,
-    _kmeans_oracle_sql,
-    _kmeans_quality_oracle_sql,
-    _bpe_tokenize_oracle_sql,
-    _hilbert_oracle_sql,
-    _minhash_seed_constants,
-    _minhash_eval_oracle,
-    _lttb_oracle_sql,
-    _holt_oracle_sql,
-    _zorder_key,
-    _zorder_key_sql,
+    _t,
 )
 
+
+_ZORDER_ORACLE_KEY = zorder_key_sql(
+    "(user_id & 65535)", "(CAST(floor(epoch(ts)) AS BIGINT) & 65535)"
+)
+
+
+_PROFILE_COLS = [
+    ("o_orderkey", True),
+    ("o_custkey", True),
+    ("o_orderstatus", False),
+    ("o_totalprice", True),
+    ("o_orderdate", "ts"),
+    ("o_orderpriority", False),
+]
+
+
+_PROFILE_ORACLE = "\nUNION ALL\n".join(
+    f"""SELECT '{c}' AS column_name, CAST(count(*) AS BIGINT) AS n_rows,
+       CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
+       CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
+       {f'CAST(floor(epoch(min({c}))) AS DOUBLE)' if kind == 'ts' else (f'CAST(min({c}) AS DOUBLE)' if kind else 'CAST(NULL AS DOUBLE)')} AS min_num,
+       {f'CAST(floor(epoch(max({c}))) AS DOUBLE)' if kind == 'ts' else (f'CAST(max({c}) AS DOUBLE)' if kind else 'CAST(NULL AS DOUBLE)')} AS max_num
+    FROM orders"""
+    for c, kind in _PROFILE_COLS
+)
 
 
 @_register(
@@ -79,7 +75,7 @@ def zorder_layout_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     x = F.col("user_id").bitwiseAND(F.lit(65535))
     y = F.unix_timestamp("ts").bitwiseAND(F.lit(65535))
-    keyed = ev.select(_zorder_key(x, y).alias("zkey"), "user_id")
+    keyed = ev.select(zorder_key(x, y).alias("zkey"), "user_id")
     return keyed.groupBy(F.shiftright("zkey", 26).cast("long").alias("bucket")).agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.countDistinct("user_id").cast("long").alias("n_users"),
@@ -261,16 +257,7 @@ def resample_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.temporal import asof_join
 
     ev = _t(spark, sf_dir, "events").where(F.col("user_id") < 20)
-    bounds = ev.groupBy("user_id").agg(
-        F.date_trunc("hour", F.min("ts")).alias("_mn"),
-        F.date_trunc("hour", F.max("ts")).alias("_mx"),
-    )
-    grid = bounds.select(
-        "user_id",
-        F.explode(
-            F.sequence(F.col("_mn"), F.col("_mx"), F.expr("interval 1 hour"))
-        ).alias("ts"),
-    )
+    grid = _hourly_grid(ev)
     obs = ev.select("user_id", "ts", "value")
     out = asof_join(grid, obs, on="user_id", right_prefix="right_")
     return out.select("user_id", "ts", F.col("right_value").alias("filled_value"))
@@ -476,18 +463,9 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).cast("long").alias("n"))
     view = f"stream_dedup_{_uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark, 4):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(view)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
     try:
-        q.awaitTermination(120)
+        _drain(spark, agg.writeStream.format("memory").queryName(view).outputMode("complete"))
     finally:
-        q.stop()
         _shutil.rmtree(stage, ignore_errors=True)  # memory sink owns the rows now
     return spark.sql(f"SELECT event_type, n FROM {view}")
 
@@ -578,18 +556,9 @@ def stream_interval_join_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_watermark="1 hour",
     )
     view = f"stream_ij_{_uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark, 4):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(view)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
     try:
-        q.awaitTermination(120)
+        _drain(spark, joined.writeStream.format("memory").queryName(view).outputMode("append"))
     finally:
-        q.stop()
         _shutil.rmtree(stage, ignore_errors=True)  # memory sink owns the rows now
     return spark.sql(
         f"SELECT user_id, CAST(count(*) AS BIGINT) AS n_pairs FROM {view} GROUP BY user_id"
@@ -769,18 +738,9 @@ def stream_static_enrichment_counts(spark: SparkSession, sf_dir: str) -> DataFra
         F.count(F.lit(1)).cast("long").alias("n")
     )
     view = f"stream_enrich_{_uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark, 4):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(view)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
     try:
-        q.awaitTermination(120)
+        _drain(spark, agg.writeStream.format("memory").queryName(view).outputMode("complete"))
     finally:
-        q.stop()
         _shutil.rmtree(stage, ignore_errors=True)  # memory sink owns the rows now
     return spark.sql(f"SELECT event_type, segment, n FROM {view}")
 
@@ -1048,27 +1008,21 @@ def streaming_upsert_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     ckpt = tempfile.mkdtemp(prefix="upsert-ckpt-")
-    with _pinned_shuffle(spark, 4):
-        q = (
+    try:
+        _drain(
+            spark,
             agg.writeStream.outputMode("update")
             .foreachBatch(upsert)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .queryName(f"upsert_{_uuid.uuid4().hex[:8]}")
-            .start()
+            .queryName(f"upsert_{_uuid.uuid4().hex[:8]}"),
         )
-    try:
-        q.awaitTermination(120)
+        # materialize the (type-cardinality-bounded) snapshot so every
+        # fixture dir can be removed before returning
+        snap = spark.read.parquet(state_dir).select("event_type", "n")
+        return spark.createDataFrame(snap.collect(), snap.schema)
     finally:
-        q.stop()
-    # materialize the (type-cardinality-bounded) snapshot so every
-    # fixture dir can be removed before returning
-    snap = spark.read.parquet(state_dir).select("event_type", "n")
-    rows = snap.collect()
-    out = spark.createDataFrame(rows, snap.schema)
-    for d in (stage, os.path.dirname(state_dir), ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+        for d in (stage, os.path.dirname(state_dir), ckpt):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 @_register(
@@ -1231,23 +1185,7 @@ def chi2_type_segment_independence(spark: SparkSession, sf_dir: str) -> DataFram
 
 @_register(
     "session_window_stats",
-    r"""
-    WITH s AS (SELECT user_id, ts, value,
-                 CASE WHEN lag(ts) OVER w IS NULL
-                      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-                 THEN 1 ELSE 0 END AS brk
-               FROM events
-               WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-    g AS (SELECT user_id, ts, value,
-                 sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sid
-          FROM s)
-    SELECT user_id, min(ts) AS session_start,
-           max(ts) + INTERVAL 30 MINUTE AS session_end,
-           CAST(count(*) AS BIGINT) AS n_events,
-           round(sum(value), 2) AS total_value
-    FROM g GROUP BY user_id, sid
-    """,
+    _SESSION_STATS_ORACLE,
 )
 def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Catalyst-native session windows (r10): session_window(ts, gap)
@@ -1260,17 +1198,4 @@ def session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     a NEW session), so the oracle's break condition is dt >= gap, not
     dt > gap. Batch-mode plan: one aggregation keyed by the session
     window expression — no window-function sort."""
-    ev = _t(spark, sf_dir, "events")
-    agg = ev.groupBy(
-        F.session_window("ts", "30 minutes"), "user_id"
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.round(F.sum("value"), 2).alias("total_value"),
-    )
-    return agg.select(
-        "user_id",
-        F.col("session_window.start").alias("session_start"),
-        F.col("session_window.end").alias("session_end"),
-        "n_events",
-        "total_value",
-    )
+    return _session_stats(_t(spark, sf_dir, "events"))

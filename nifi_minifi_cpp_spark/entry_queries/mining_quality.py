@@ -1,55 +1,165 @@
-"""Clustering, graphs, downsampling, audits (r11 batch 1).
-
-Mechanical split of entry_queries.py (r13): registrations 202..229
-in original definition order; no semantic change.
-"""
+"""Clustering, graphs, downsampling, audits (r11 batch 1)."""
 
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._shared import (  # noqa: F401
-    _register,
-    _t,
-    _REGISTRY,
-    _REGISTRATION_ORDER,
-    _cents,
-    _PROCFS_FIXTURE,
-    _FakeOpcServer,
-    _FakeKvStore,
-    _FakeRemoteFs,
-    _FakeModbusDevice,
-    _stage_text_atomic,
-    _stream_events_stage,
-    _pinned_shuffle,
-    _poll_stream_rows,
-    _await_self_termination,
-    _INJECT_N,
-    _INJECT_OFFSET,
-    _with_injected_dups,
-    _dedup_invariant_report,
-    _DEDUP_INVARIANT_ORACLE,
-    _EMBEDDING_DEDUP_ORACLE,
-    _append_host_info_oracle,
-    _language_id_oracle_sql,
-    _GOPHER_STOPWORDS_SQL,
-    _messy_urls,
-    _ZORDER_ORACLE_KEY,
-    _PROFILE_COLS,
-    _PROFILE_ORACLE,
-    _supplier_part_edges,
-    _bpe_oracle_sql,
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from ..session import configure
+from ._shared import (
+    _drain,
     _kmeans_oracle_sql,
-    _kmeans_quality_oracle_sql,
-    _bpe_tokenize_oracle_sql,
-    _hilbert_oracle_sql,
-    _minhash_seed_constants,
-    _minhash_eval_oracle,
-    _lttb_oracle_sql,
-    _holt_oracle_sql,
-    _zorder_key,
-    _zorder_key_sql,
+    _near_dup_components,
+    _NEAR_DUP_COMPONENTS_CTES,
+    _register,
+    _session_stats,
+    _SESSION_STATS_ORACLE,
+    _stream_events_stage,
+    _supplier_part_edges,
+    _t,
 )
 
+
+# One BPE merge round over a word's symbols, as an independent string
+# fold (not the engine's array fold): DuckDB joins the symbols with U+001F,
+# merges ``b.l`` + ``b.r`` left to right, then splits back.
+_BPE_FOLD_SQL = r"""string_split(
+        list_reduce(syms, (acc, x) -> CASE
+          WHEN x = b.r AND (acc = b.l OR (length(acc) > length(b.l)
+                AND substr(acc, length(acc) - length(b.l), length(b.l) + 1)
+                    = chr(31) || b.l))
+          THEN CASE WHEN length(acc) = length(b.l) THEN b.l || b.r
+               ELSE substr(acc, 1, length(acc) - length(b.l)) || b.l || b.r END
+          ELSE acc || chr(31) || x END),
+        chr(31))"""
+
+
+def _bpe_oracle_sql(n: int) -> str:
+    """Unrolled-CTE DuckDB oracle for ``bpe_train`` — the
+    ``pagerank_supplier_parts`` pattern: one (pair-census p{i}, argmax
+    b{i}, rewrite v{i}) round per CTE triple, chained N times. The
+    rewrite is an INDEPENDENT construction from the engine's
+    array-fold: DuckDB folds each word to a U+001F-joined STRING whose
+    suffix is tested/stripped, then splits back — same greedy
+    left-to-right semantics through a different mechanism (and
+    tests/test_corpus_properties.py holds the third, pure-Python
+    model, per the oracle-mirror caveat)."""
+    parts = [
+        r"""
+    WITH v0 AS (
+      SELECT CAST(count(*) AS BIGINT) AS freq,
+             list_append(string_split(word, ''), '</w>') AS syms
+      FROM (SELECT unnest(string_split(text, ' ')) AS word FROM documents)
+      WHERE word <> '' AND NOT contains(word, chr(31))
+      GROUP BY word)"""
+    ]
+    for i in range(1, n + 1):
+        parts.append(
+            f"""
+    , p{i} AS (
+      SELECT unnest(list_transform(range(1, len(syms)),
+               j -> syms[j] || chr(31) || syms[j+1])) AS pr, freq
+      FROM v{i - 1} WHERE len(syms) >= 2)
+    , b{i} AS (
+      SELECT string_split(pr, chr(31))[1] AS l,
+             string_split(pr, chr(31))[2] AS r,
+             CAST(sum(freq) AS BIGINT) AS cnt
+      FROM p{i} GROUP BY pr
+      ORDER BY cnt DESC, l ASC, r ASC LIMIT 1)"""
+        )
+        if i < n:
+            parts.append(
+                f"""
+    , v{i} AS (
+      SELECT freq, {_BPE_FOLD_SQL} AS syms
+      FROM v{i - 1}, b{i} b)"""
+            )
+    unions = "\n      UNION ALL ".join(
+        f"SELECT {i} AS merge_rank, l AS merge_left, r AS merge_right,"
+        f" cnt AS pair_count FROM b{i}"
+        for i in range(1, n + 1)
+    )
+    parts.append(
+        f"""
+    SELECT * FROM ({unions})
+    ORDER BY merge_rank"""
+    )
+    return "".join(parts)
+
+
+def _bpe_tokenize_oracle_sql(n: int) -> str:
+    """Oracle for ``bpe_tokenized_counts``: the same unrolled merge
+    rounds as ``_bpe_oracle_sql`` but carrying the WORD through every
+    round, so the final vocabulary maps word -> subword count and a
+    join against per-(source, word) occurrence counts yields the
+    corpus accounting. The rewrite fold is the oracle's independent
+    string-fold construction, not the engine's array fold."""
+    parts = [
+        r"""
+    WITH sw AS (
+      SELECT source, word, CAST(count(*) AS BIGINT) AS cnt
+      FROM (SELECT source, unnest(string_split(text, ' ')) AS word
+            FROM documents)
+      WHERE word <> '' AND NOT contains(word, chr(31))
+      GROUP BY source, word),
+    v0 AS (
+      SELECT word, CAST(sum(cnt) AS BIGINT) AS freq,
+             list_append(string_split(word, ''), '</w>') AS syms
+      FROM sw GROUP BY word)"""
+    ]
+    for i in range(1, n + 1):
+        parts.append(
+            f"""
+    , p{i} AS (
+      SELECT unnest(list_transform(range(1, len(syms)),
+               j -> syms[j] || chr(31) || syms[j+1])) AS pr, freq
+      FROM v{i - 1} WHERE len(syms) >= 2)
+    , b{i} AS (
+      SELECT string_split(pr, chr(31))[1] AS l,
+             string_split(pr, chr(31))[2] AS r
+      FROM p{i} GROUP BY pr
+      ORDER BY CAST(sum(freq) AS BIGINT) DESC, l ASC, r ASC LIMIT 1)
+    , v{i} AS (
+      SELECT word, freq, {_BPE_FOLD_SQL} AS syms
+      FROM v{i - 1}, b{i} b)"""
+        )
+    parts.append(
+        f"""
+    , nd AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+             FROM documents GROUP BY source)
+    SELECT nd.source, nd.n_docs, coalesce(tt.total_bpe_tokens, 0) AS total_bpe_tokens
+    FROM nd LEFT JOIN (
+      SELECT sw.source,
+             CAST(sum(sw.cnt * len(v{n}.syms)) AS BIGINT) AS total_bpe_tokens
+      FROM sw JOIN v{n} ON sw.word = v{n}.word
+      GROUP BY sw.source) tt ON nd.source = tt.source"""
+    )
+    return "".join(parts)
+
+
+def _hilbert_oracle_sql() -> str:
+    from ..plans.layout import hilbert_key_sql_ctes
+
+    ctes = hilbert_key_sql_ctes(
+        # epoch_us // 1e6 floors like Spark's unix_timestamp;
+        # epoch(ts)::BIGINT would ROUND sub-second fractions (the
+        # DuckDB float-cast trap) and shift ~half the keys by one
+        "(SELECT user_id, (user_id & 255) AS bx,"
+        " ((epoch_us(ts) // 1000000) & 255) AS by FROM events)",
+        ["user_id"],
+        "bx",
+        "by",
+        bits=8,
+    )
+    return f"""
+    WITH {ctes}
+    SELECT CAST(hd >> 10 AS BIGINT) AS bucket,
+           CAST(count(*) AS BIGINT) AS n_events,
+           CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
+           CAST(min(hd) AS BIGINT) AS min_h,
+           CAST(max(hd) AS BIGINT) AS max_h
+    FROM h_out GROUP BY 1
+    """
 
 
 @_register("bpe_trained_merges", _bpe_oracle_sql(8))
@@ -131,9 +241,9 @@ def bfs_hop_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hops.groupBy("hop").agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
 
 
-@_register(
-    "ewma_anomaly_scores",
-    r"""
+# Per-user EWMA (alpha 0.25) and >100 deviation anomalies, graded the
+# same way for the batch and the streaming entry.
+_EWMA_ORACLE = r"""
     WITH s AS (
       SELECT user_id,
              list(struct_pack(t := ts, o := event_id, v := CAST(value AS DOUBLE))
@@ -148,7 +258,12 @@ def bfs_hop_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         AS n_anomalies,
       round(list_reduce(vals, (acc, x) -> 0.25*x + 0.75*acc), 6) AS final_ewma
     FROM v
-    """,
+    """
+
+
+@_register(
+    "ewma_anomaly_scores",
+    _EWMA_ORACLE,
 )
 def ewma_anomaly_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user EWMA smoothing + deviation anomalies (r11): each
@@ -308,23 +423,7 @@ def phrase_match_doc_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "streaming_session_stats",
-    r"""
-    WITH s AS (SELECT user_id, ts, value,
-                 CASE WHEN lag(ts) OVER w IS NULL
-                      OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-                 THEN 1 ELSE 0 END AS brk
-               FROM events
-               WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-    g AS (SELECT user_id, ts, value,
-                 sum(brk) OVER (PARTITION BY user_id ORDER BY ts
-                                ROWS UNBOUNDED PRECEDING) AS sid
-          FROM s)
-    SELECT user_id, min(ts) AS session_start,
-           max(ts) + INTERVAL 30 MINUTE AS session_end,
-           CAST(count(*) AS BIGINT) AS n_events,
-           round(sum(value), 2) AS total_value
-    FROM g GROUP BY user_id, sid
-    """,
+    _SESSION_STATS_ORACLE,
 )
 def streaming_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING session windows (r11): the same session_window(ts,
@@ -345,34 +444,11 @@ def streaming_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage = _stream_events_stage(spark, sf_dir)
     schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     raw = spark.readStream.schema(schema).parquet(stage)
-    agg = (
-        raw.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-    out = agg.select(
-        "user_id",
-        F.col("session_window.start").alias("session_start"),
-        F.col("session_window.end").alias("session_end"),
-        "n_events",
-        "total_value",
-    )
+    out = _session_stats(raw.withWatermark("ts", "1 hour"))
     view = f"stream_sess_{_uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark, 4):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(view)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
     try:
-        q.awaitTermination(120)
+        _drain(spark, out.writeStream.format("memory").queryName(view).outputMode("complete"))
     finally:
-        q.stop()
         _shutil.rmtree(stage, ignore_errors=True)
     return spark.sql(
         f"SELECT user_id, session_start, session_end, n_events, total_value FROM {view}"
@@ -442,29 +518,8 @@ def hilbert_layout_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "dedup_cluster_size_histogram",
-    r"""
-    WITH RECURSIVE w AS (
-      SELECT doc_id, string_split_regex(lower(text), '\s+') AS l
-      FROM documents WHERE doc_id % 4 = 0),
-    t AS (
-      SELECT doc_id,
-        CASE WHEN len(l) - 2 > 0 THEN
-          list_distinct(list_transform(range(1, CAST(len(l) - 2 AS BIGINT) + 1),
-            i -> array_to_string(list_slice(l, i, i + 2), ' ')))
-        ELSE [array_to_string(l, ' ')] END AS s
-      FROM w),
-    p AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM t a JOIN t b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s)) /
-            CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE)
-            >= 0.8),
-    e AS (SELECT id_a AS s, id_b AS d FROM p UNION SELECT id_b, id_a FROM p),
-    reach(n, l) AS (
-      SELECT s, s FROM e
-      UNION
-      SELECT e.d, reach.l FROM e JOIN reach ON e.s = reach.n),
-    comp AS (SELECT n, min(l) AS c FROM reach GROUP BY n),
+    _NEAR_DUP_COMPONENTS_CTES
+    + r"""
     sizes AS (SELECT c, count(*) AS sz FROM comp GROUP BY c)
     SELECT CAST(sz AS BIGINT) AS cluster_size,
            CAST(count(*) AS BIGINT) AS n_clusters
@@ -491,15 +546,8 @@ def dedup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     12.9x, on the quarter-sample 1.2x. At fleet scale the cluster
     step is the same; swap the pair source for the LSH families when
     exactness is not required."""
-    from ..analytics.dedup import allpairs_jaccard_join
-    from ..analytics.graph import connected_components
-
-    configure(spark)
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 4 == 0)
-    pairs = allpairs_jaccard_join(docs, threshold=0.8, ngram=3).select(
-        "id_a", "id_b"
-    )
-    comp = connected_components(pairs, src="id_a", dst="id_b")
+    comp = _near_dup_components(docs)
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("sz"))
     return sizes.groupBy(F.col("sz").cast("long").alias("cluster_size")).agg(
         F.count(F.lit(1)).cast("long").alias("n_clusters")
@@ -550,22 +598,7 @@ def embedding_dim_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "streaming_ewma_scores",
-    r"""
-    WITH s AS (
-      SELECT user_id,
-             list(struct_pack(t := ts, o := event_id, v := CAST(value AS DOUBLE))
-                  ORDER BY ts, event_id) AS seq
-      FROM events GROUP BY user_id),
-    v AS (SELECT user_id, list_transform(seq, e -> e.v) AS vals FROM s)
-    SELECT user_id,
-      CAST(len(vals) AS BIGINT) AS n_events,
-      CAST(len(list_filter(range(2, len(vals) + 1),
-         i -> abs(vals[i] - list_reduce(vals[1:i-1],
-                    (acc, x) -> 0.25*x + 0.75*acc)) > 100.0)) AS BIGINT)
-        AS n_anomalies,
-      round(list_reduce(vals, (acc, x) -> 0.25*x + 0.75*acc), 6) AS final_ewma
-    FROM v
-    """,
+    _EWMA_ORACLE,
 )
 def streaming_ewma_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING EWMA anomaly scoring (r11): the recursive per-key
@@ -589,18 +622,9 @@ def streaming_ewma_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = spark.readStream.schema(schema).parquet(stage)
     scored = ewma_scores_stream(raw, key_col="user_id")
     view = f"stream_ewma_{_uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark, 4):
-        q = (
-            scored.writeStream.format("memory")
-            .queryName(view)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
     try:
-        q.awaitTermination(120)
+        _drain(spark, scored.writeStream.format("memory").queryName(view).outputMode("update"))
     finally:
-        q.stop()
         _shutil.rmtree(stage, ignore_errors=True)
     # one emission per key per micro-batch: keep each key's LAST row
     # (max n_events), then round Catalyst-side (HALF_UP, not Python's

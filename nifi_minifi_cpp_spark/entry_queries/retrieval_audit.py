@@ -1,55 +1,59 @@
-"""Retrieval evals, sketches, routing sweeps, audits (r11 batch 2).
-
-Mechanical split of entry_queries.py (r13): registrations 230..248
-in original definition order; no semantic change.
-"""
+"""Retrieval evals, sketches, routing sweeps, audits (r11 batch 2)."""
 
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._shared import (  # noqa: F401
-    _register,
-    _t,
-    _REGISTRY,
-    _REGISTRATION_ORDER,
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from ..session import configure
+from ._shared import (
+    _BM25_CTES,
+    _BM25_SCORE_SQL,
     _cents,
-    _PROCFS_FIXTURE,
-    _FakeOpcServer,
-    _FakeKvStore,
-    _FakeRemoteFs,
-    _FakeModbusDevice,
-    _stage_text_atomic,
-    _stream_events_stage,
-    _pinned_shuffle,
-    _poll_stream_rows,
-    _await_self_termination,
-    _INJECT_N,
-    _INJECT_OFFSET,
-    _with_injected_dups,
-    _dedup_invariant_report,
-    _DEDUP_INVARIANT_ORACLE,
-    _EMBEDDING_DEDUP_ORACLE,
-    _append_host_info_oracle,
-    _language_id_oracle_sql,
-    _GOPHER_STOPWORDS_SQL,
-    _messy_urls,
-    _ZORDER_ORACLE_KEY,
-    _PROFILE_COLS,
-    _PROFILE_ORACLE,
-    _supplier_part_edges,
-    _bpe_oracle_sql,
+    _drain,
+    _int8_retrieval_ctes,
+    _int8_top10,
     _kmeans_oracle_sql,
-    _kmeans_quality_oracle_sql,
-    _bpe_tokenize_oracle_sql,
-    _hilbert_oracle_sql,
-    _minhash_seed_constants,
-    _minhash_eval_oracle,
-    _lttb_oracle_sql,
-    _holt_oracle_sql,
-    _zorder_key,
-    _zorder_key_sql,
+    _register,
+    _stream_events_stage,
+    _supplier_part_edges,
+    _t,
 )
 
+
+def _kmeans_quality_oracle_sql(k: int, iters: int) -> str:
+    """Quality-report twin of ``_kmeans_oracle_sql``: identical
+    unrolled Lloyd CTEs, then cohesion = last-round members' exact
+    squared distances to the FINAL (post-update) centroids, and
+    separation = each final centroid's squared distance to its
+    nearest other final centroid — all BIGINT."""
+    base = _kmeans_oracle_sql(k, iters)
+    prefix = base[: base.rindex("\n    SELECT s.cluster_id")]
+    return (
+        prefix
+        + f"""
+    , dfin AS (
+      SELECT e.vec_id, a.c,
+             CAST(sum((e.x - c.x) * (e.x - c.x)) AS BIGINT) AS dist
+      FROM e JOIN a{iters} a ON e.vec_id = a.vec_id
+             JOIN c{iters} c ON c.c = a.c AND c.dim = e.dim
+      GROUP BY e.vec_id, a.c)
+    , percluster AS (
+      SELECT c AS cluster_id, CAST(count(*) AS BIGINT) AS n_members,
+             CAST(sum(dist) AS BIGINT) AS sum_sq_dist
+      FROM dfin GROUP BY c)
+    , ic AS (
+      SELECT a.c AS ca, b.c AS cb,
+             CAST(sum((a.x - b.x) * (a.x - b.x)) AS BIGINT) AS d
+      FROM c{iters} a JOIN c{iters} b ON a.dim = b.dim AND a.c <> b.c
+      GROUP BY a.c, b.c)
+    , mi AS (SELECT ca AS cluster_id,
+                    CAST(min(d) AS BIGINT) AS min_intercentroid_sq
+             FROM ic GROUP BY ca)
+    SELECT p.cluster_id, p.n_members, p.sum_sq_dist, mi.min_intercentroid_sq
+    FROM percluster p JOIN mi USING (cluster_id)
+    ORDER BY p.cluster_id"""
+    )
 
 
 @_register("kmeans_cluster_quality", _kmeans_quality_oracle_sql(4, 3))
@@ -709,33 +713,11 @@ def quantile_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "rrf_hybrid_topk",
-    r"""
-    WITH t AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS tk
-      FROM documents),
-    per AS (
-      SELECT doc_id,
-             CAST(len(tk) AS BIGINT) AS dl,
-             CAST(len(list_filter(tk, x -> x = 'merge')) AS BIGINT) AS tf0,
-             CAST(len(list_filter(tk, x -> x = 'scan')) AS BIGINT) AS tf1,
-             CAST(len(list_filter(tk, x -> x = 'window')) AS BIGINT) AS tf2
-      FROM t),
-    st AS (
-      SELECT CAST(count(*) AS DOUBLE) AS n, CAST(sum(dl) AS DOUBLE) AS sumdl,
-             CAST(sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df0,
-             CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
-             CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2
-      FROM per),
+    _BM25_CTES
+    + rf""",
     lex20 AS (
       SELECT doc_id,
-        ((0.0
-         + ((n - df0 + 0.5) / (df0 + 0.5)) * (CAST(tf0 AS DOUBLE) * 2.2)
-             / (CAST(tf0 AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / (sumdl / n)))))
-         + ((n - df1 + 0.5) / (df1 + 0.5)) * (CAST(tf1 AS DOUBLE) * 2.2)
-             / (CAST(tf1 AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / (sumdl / n)))))
-         + ((n - df2 + 0.5) / (df2 + 0.5)) * (CAST(tf2 AS DOUBLE) * 2.2)
-             / (CAST(tf2 AS DOUBLE) + 1.2 * (0.25 + 0.75 * (CAST(dl AS DOUBLE) / (sumdl / n))))
+        {_BM25_SCORE_SQL}
         AS score
       FROM per, st
       ORDER BY score DESC, doc_id ASC LIMIT 20),
@@ -1041,18 +1023,9 @@ def streaming_hll_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("rho").alias("m"))
     )
     view = f"stream_hll_{_uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark, 4):
-        q = (
-            regs.writeStream.format("memory")
-            .queryName(view)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
     try:
-        q.awaitTermination(120)
+        _drain(spark, regs.writeStream.format("memory").queryName(view).outputMode("complete"))
     finally:
-        q.stop()
         _shutil.rmtree(stage, ignore_errors=True)
     state = spark.table(view).select(
         F.expr("unix_micros(win.start) DIV 21600000000").alias("bucket_id"),
@@ -1068,41 +1041,8 @@ def streaming_hll_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "int8_recall_eval",
-    r"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    d AS (SELECT i AS pos, abs(v[CAST(i + 1 AS INT)]) AS a
-          FROM v, (SELECT unnest(range(64)) AS i) ix),
-    sc AS (SELECT pos, CASE WHEN max(a) > 0 THEN max(a) / 127.0 ELSE 1.0 END AS s
-           FROM d GROUP BY pos),
-    sarr AS (SELECT list(s ORDER BY pos) AS arr FROM sc),
-    r AS (SELECT vec_id,
-            list_transform(range(1, 65),
-              i -> CAST(greatest(-127, least(127,
-                     CAST(round(v[CAST(i AS INT)] / arr[CAST(i AS INT)]) AS INT)))
-                   AS DOUBLE) * arr[CAST(i AS INT)]) AS rv
-          FROM v, sarr),
-    rn AS (SELECT vec_id, rv,
-             sqrt(list_reduce(list_transform(rv, x -> x * x), (a, b) -> a + b)) AS nrm
-           FROM r),
-    qp AS (SELECT a.vec_id AS query_id, b.vec_id AS nid,
-             list_reduce(list_transform(range(1, 65),
-               i -> a.rv[CAST(i AS INT)] * b.rv[CAST(i AS INT)]), (x, y) -> x + y)
-               / (a.nrm * b.nrm) AS s
-           FROM rn a JOIN rn b ON a.vec_id < 20 AND a.vec_id <> b.vec_id),
-    qr AS (SELECT query_id, nid FROM (
-             SELECT query_id, nid,
-                    row_number() OVER (PARTITION BY query_id
-                                       ORDER BY s DESC, nid) AS rk
-             FROM qp) WHERE rk <= 10),
-    ex AS (SELECT query_id, nid FROM (
-             SELECT a.vec_id AS query_id, b.vec_id AS nid,
-                    row_number() OVER (
-                      PARTITION BY a.vec_id
-                      ORDER BY list_cosine_similarity(a.embedding::DOUBLE[],
-                                                      b.embedding::DOUBLE[]) DESC,
-                               b.vec_id) AS rk
-             FROM embeddings a, embeddings b
-             WHERE a.vec_id < 20 AND a.vec_id <> b.vec_id) WHERE rk <= 10),
+    _int8_retrieval_ctes("query_id, nid", "query_id, nid")
+    + r"""
     ov AS (SELECT ex.query_id, count(*) AS n
            FROM ex JOIN qr ON qr.query_id = ex.query_id AND qr.nid = ex.nid
            GROUP BY 1),
@@ -1117,65 +1057,19 @@ def int8_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     decides whether the int8 index (embedding_quantize_int8 /
     embedding_gram_upper) is allowed to replace float search:
     recall@10 per query (vec_id < 20) of DEQUANTIZED-int8 cosine
-    top-10 against exact float cosine top-10. Dequantized score =
-    leftfold(Σ (qa_i·s_i)(qb_i·s_i)) / (|ra||rb|) — every term is the
-    same IEEE sequence in both engines (explicit left folds, sqrt is
-    correctly-rounded), so the quantized ranking is deterministic and
-    the recall integers are exact, not tolerance-compared. 100 TB
+    top-10 against exact float cosine top-10 (``_int8_top10``). The
+    recall integers are exact, not tolerance-compared. 100 TB
     shape: the query side broadcasts (bounded query set — recall
     evals sample queries, never all-pairs); corpus-side cost is one
     pass per leg + a per-query top-k window; the scale array is the
     quantizer's existing one-row broadcast."""
-    from pyspark.sql import Window
-
-    from ..analytics.similarity import knn_join_exact, quantize_embeddings_int8
+    from ..analytics.similarity import knn_join_exact
 
     emb = _t(spark, sf_dir, "embeddings")
     exact = knn_join_exact(emb.filter(F.col("vec_id") < 20), emb, k=10).select(
         "query_id", F.col("neighbor_id").alias("nid")
     )
-    deq = quantize_embeddings_int8(emb, return_scales=True).select(
-        "vec_id",
-        F.zip_with(
-            F.col("qvec"), F.col("scales"), lambda qd, s: qd.cast("double") * s
-        ).alias("rv"),
-    )
-    deq = deq.select(
-        "vec_id",
-        "rv",
-        F.sqrt(
-            F.aggregate(
-                F.transform("rv", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-            )
-        ).alias("nrm"),
-    )
-    qa = F.broadcast(
-        deq.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("rv").alias("ra"),
-            F.col("nrm").alias("na"),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("ra"), F.col("rv"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        deq.crossJoin(qa)
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("nid"),
-            F.try_divide(dot, F.col("na") * F.col("nrm")).alias("s"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("s"), F.asc("nid"))
-    quant = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 10)
-        .select("query_id", "nid")
-    )
+    quant = _int8_top10(emb, "rk").select("query_id", "nid")
     ov = (
         exact.join(quant, ["query_id", "nid"])
         .groupBy("query_id")

@@ -1,55 +1,113 @@
-"""Routing / EL / wire sources & sinks over events.
-
-Mechanical split of entry_queries.py (r13): registrations 33..61
-in original definition order; no semantic change.
-"""
+"""Routing / EL / wire sources & sinks over events."""
 
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._shared import (  # noqa: F401
-    _register,
-    _t,
-    _REGISTRY,
-    _REGISTRATION_ORDER,
-    _cents,
-    _PROCFS_FIXTURE,
-    _FakeOpcServer,
-    _FakeKvStore,
-    _FakeRemoteFs,
-    _FakeModbusDevice,
-    _stage_text_atomic,
-    _stream_events_stage,
-    _pinned_shuffle,
-    _poll_stream_rows,
-    _await_self_termination,
-    _INJECT_N,
-    _INJECT_OFFSET,
-    _with_injected_dups,
-    _dedup_invariant_report,
-    _DEDUP_INVARIANT_ORACLE,
-    _EMBEDDING_DEDUP_ORACLE,
-    _append_host_info_oracle,
-    _language_id_oracle_sql,
-    _GOPHER_STOPWORDS_SQL,
-    _messy_urls,
-    _ZORDER_ORACLE_KEY,
-    _PROFILE_COLS,
-    _PROFILE_ORACLE,
-    _supplier_part_edges,
-    _bpe_oracle_sql,
-    _kmeans_oracle_sql,
-    _kmeans_quality_oracle_sql,
-    _bpe_tokenize_oracle_sql,
-    _hilbert_oracle_sql,
-    _minhash_seed_constants,
-    _minhash_eval_oracle,
-    _lttb_oracle_sql,
-    _holt_oracle_sql,
-    _zorder_key,
-    _zorder_key_sql,
-)
+import os
 
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from ..el import el_bool, el_string
+from ..model import events_to_flowfiles
+from ..operators import (
+    attribute_rolling_window_count,
+    evaluate_json_path,
+    extract_text,
+    funnel,
+    hash_content,
+    merge_content_defragment,
+    replace_text,
+    route_on_attribute,
+    split_text,
+    tumbling_window_agg,
+)
+from ..session import configure
+from ._shared import _pinned_shuffle, _poll_stream_rows, _register, _t
+
+
+_PROCFS_FIXTURE = {
+    "meminfo": "MemTotal:       16384000 kB\nMemFree:         4096000 kB\nMemAvailable:    8192000 kB\n",
+    "stat": "cpu  100 20 300 4000 50 0 6 0 0 0\ncpu0 50 10 150 2000 25 0 3 0 0 0\n",
+    "diskstats": "   8       0 sda 500 0 10000 400 200 0 8000 300 0 600 700\n",
+    "net/dev": (
+        "Inter-|   Receive                                                |  Transmit\n"
+        " face |bytes    packets errs drop fifo frame compressed multicast|bytes    "
+        "packets errs drop fifo colls carrier compressed\n"
+        "  eth0: 1000000    2000    0    0    0     0          0         0  500000    "
+        "1500    0    0    0     0       0          0\n"
+    ),
+}
+
+
+class _FakeOpcServer:
+    """Deterministic OPC-UA address space: 50 variable nodes under the
+    browsed root, values/timestamps a pure function of the index."""
+
+    def traverse(self, node_id, max_depth):
+        from ..sources.industrial import OpcNode
+
+        for i in range(50):
+            yield OpcNode(
+                node_id=f"ns=2;i={i}",
+                browsename=f"var{i}",
+                path=f"{node_id}/var{i}",
+                datatype="Int32",
+                source_timestamp=f"t{i // 10}",
+                value=i * 3,
+                is_variable=True,
+                attributes={},
+            )
+        yield OpcNode(  # folder nodes are skipped by FetchOPC
+            node_id="ns=2;folder",
+            browsename="folder",
+            path=f"{node_id}/folder",
+            datatype="",
+            source_timestamp="",
+            value=None,
+            is_variable=False,
+            attributes={},
+        )
+
+
+class _FakeKvStore:
+    """GetCouchbaseKey fixture: even-user keys resolve, odd are
+    missing — both relationships exercised deterministically."""
+
+    def get(self, key):
+        uid = int(key.rsplit(":", 1)[1])
+        if uid % 2 == 0:
+            return f"profile-of-{uid}"
+        raise KeyError(key)
+
+
+class _FakeRemoteFs:
+    """ListSFTP/FetchSFTP fixture: a two-level tree of 20 files with
+    deterministic sizes/mtimes/contents."""
+
+    def listdir(self, path):
+        from ..sources.remote_fs import RemoteEntry
+
+        if path == "/data":
+            yield RemoteEntry(path="/data/sub", size=0, mtime=0.0, is_dir=True)
+            for i in range(10):
+                yield RemoteEntry(path=f"/data/f{i}.log", size=100 + i, mtime=1000.0 + i, is_dir=False)
+        elif path == "/data/sub":
+            for i in range(10, 20):
+                yield RemoteEntry(path=f"/data/sub/f{i}.log", size=100 + i, mtime=1000.0 + i, is_dir=False)
+
+    def read(self, path):
+        return f"content-of-{path}".encode()
+
+
+class _FakeModbusDevice:
+    """Deterministic register map for the graded Modbus entry: value =
+    f(kind, address) so the oracle can pin the exact record. Module
+    level -> picklable into the executor-side client factory."""
+
+    def read(self, kind, address, count, unit_id):
+        if kind == "coil":
+            return [(address + i) % 2 == 0 for i in range(count)]
+        return [(address + i) * 2 for i in range(count)]
 
 
 # ===========================================================================

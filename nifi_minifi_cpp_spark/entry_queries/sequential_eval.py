@@ -1,55 +1,115 @@
-"""Sequential/statistical operators and retrieval evals (r11-r12 close).
-
-Mechanical split of entry_queries.py (r13): registrations 270..289
-in original definition order; no semantic change.
-"""
+"""Sequential/statistical operators and retrieval evals (r11-r12 close)."""
 
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._shared import (  # noqa: F401
-    _register,
-    _t,
-    _REGISTRY,
-    _REGISTRATION_ORDER,
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from ..session import configure
+from ._shared import (
+    _BIGRAM_CTES,
     _cents,
-    _PROCFS_FIXTURE,
-    _FakeOpcServer,
-    _FakeKvStore,
-    _FakeRemoteFs,
-    _FakeModbusDevice,
-    _stage_text_atomic,
-    _stream_events_stage,
-    _pinned_shuffle,
-    _poll_stream_rows,
-    _await_self_termination,
-    _INJECT_N,
-    _INJECT_OFFSET,
-    _with_injected_dups,
-    _dedup_invariant_report,
-    _DEDUP_INVARIANT_ORACLE,
-    _EMBEDDING_DEDUP_ORACLE,
-    _append_host_info_oracle,
-    _language_id_oracle_sql,
-    _GOPHER_STOPWORDS_SQL,
-    _messy_urls,
-    _ZORDER_ORACLE_KEY,
-    _PROFILE_COLS,
-    _PROFILE_ORACLE,
+    _int8_retrieval_ctes,
+    _int8_top10,
+    _register,
     _supplier_part_edges,
-    _bpe_oracle_sql,
-    _kmeans_oracle_sql,
-    _kmeans_quality_oracle_sql,
-    _bpe_tokenize_oracle_sql,
-    _hilbert_oracle_sql,
-    _minhash_seed_constants,
-    _minhash_eval_oracle,
-    _lttb_oracle_sql,
-    _holt_oracle_sql,
-    _zorder_key,
-    _zorder_key_sql,
+    _t,
 )
 
+
+def _lttb_oracle_sql(k: int = 10) -> str:
+    """Unrolled LTTB oracle (the power-iteration pattern: one CTE
+    chain per sequential bucket step, since the pick in bucket j
+    depends on the pick in bucket j-1). Pure integer arithmetic —
+    the engine and DuckDB must agree bit-for-bit."""
+    steps = []
+    for j in range(k):
+        b_lo = f"1 + ({j} * (L - 2)) // {k}"
+        b_hi = f"1 + ({j + 1} * (L - 2)) // {k}"
+        b_hi2 = f"1 + ({j + 2} * (L - 2)) // {k}" if j + 1 < k else "L"
+        prev = f"s{j - 1}" if j else "s0i"
+        steps.append(
+            f"""
+    n{j} AS (
+      SELECT g, count(*) AS c, sum(t) AS nts, sum(y) AS nys
+      FROM idx JOIN lt USING (g)
+      WHERE i >= {b_hi} AND i < {b_hi2} GROUP BY g),
+    s{j} AS (
+      SELECT g, t, y FROM (
+        SELECT c.g, c.t, c.y,
+               row_number() OVER (PARTITION BY c.g ORDER BY
+                 abs(p.pt * (c.y * n.c - n.nys) + c.t * (n.nys - p.py * n.c)
+                     + n.nts * (p.py - c.y)) DESC, c.t) AS rn
+        FROM (SELECT g, t, y, i FROM idx JOIN lt USING (g)) c
+        JOIN (SELECT g, t AS pt, y AS py FROM {prev}) p USING (g)
+        JOIN n{j} n USING (g)
+        JOIN lt USING (g)
+        WHERE c.i >= {b_lo} AND c.i < {b_hi}
+      ) WHERE rn = 1)"""
+        )
+    unions = "\n    UNION ALL ".join(
+        f"SELECT g, {j + 1} AS o, t, y FROM s{j}" for j in range(k)
+    )
+    return f"""
+    WITH h AS (
+      SELECT event_type AS g, epoch_us(ts) // 3600000000 AS t,
+             sum(CAST(round(value * 100) AS BIGINT)) AS y
+      FROM events GROUP BY 1, 2),
+    idx AS (
+      SELECT g, t, y, row_number() OVER (PARTITION BY g ORDER BY t) - 1 AS i
+      FROM h),
+    lt AS (SELECT g, count(*) AS L FROM idx GROUP BY g HAVING count(*) >= {k + 2}),
+    s0i AS (SELECT g, t, y FROM idx JOIN lt USING (g) WHERE i = 0),
+    slast AS (SELECT g, t, y FROM idx JOIN lt USING (g) WHERE i = L - 1),{",".join(steps)}
+    SELECT g AS event_type, CAST(o AS BIGINT) AS pick_order,
+           CAST(t AS BIGINT) AS t_hour, CAST(y AS BIGINT) AS y_cents
+    FROM (
+      SELECT g, 0 AS o, t, y FROM s0i
+      UNION ALL {unions}
+      UNION ALL SELECT g, {k + 1} AS o, t, y FROM slast)
+    """
+
+
+def _holt_oracle_sql(horizon: int = 6) -> str:
+    """Recursive-CTE Holt oracle: the identical integer recursion
+    (alpha = beta = 1/2, explicit floor after each halving) run by
+    DuckDB's WITH RECURSIVE, one row per (group, step)."""
+    return f"""
+    WITH RECURSIVE h AS (
+      SELECT event_type AS g, epoch_us(ts) // 3600000000 AS t,
+             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
+      FROM events GROUP BY 1, 2),
+    idx AS (
+      SELECT g, y, row_number() OVER (PARTITION BY g ORDER BY t) AS i
+      FROM h),
+    lt AS (
+      SELECT g, count(*) - {horizon} AS T FROM idx GROUP BY g
+      HAVING count(*) - {horizon} >= 2),
+    r AS (
+      SELECT a.g, 1 AS i, a.y AS l, b.y - a.y AS b
+      FROM (SELECT g, y FROM idx WHERE i = 1) a
+      JOIN (SELECT g, y FROM idx WHERE i = 2) b USING (g)
+      JOIN lt USING (g)
+      UNION ALL
+      SELECT r.g, r.i + 1,
+             CAST(floor((x.y + r.l + r.b) / 2) AS BIGINT),
+             CAST(floor((CAST(floor((x.y + r.l + r.b) / 2) AS BIGINT)
+                         - r.l + r.b) / 2) AS BIGINT)
+      FROM r
+      JOIN idx x ON x.g = r.g AND x.i = r.i + 1
+      JOIN lt ON lt.g = r.g
+      WHERE r.i + 1 <= lt.T),
+    fin AS (
+      SELECT r.g, r.l, r.b, lt.T FROM r JOIN lt ON lt.g = r.g AND r.i = lt.T),
+    fc AS (
+      SELECT g, s, l + s * b AS f, T
+      FROM fin CROSS JOIN (SELECT unnest(range(1, {horizon + 1})) AS s))
+    SELECT fc.g AS event_type, CAST(s AS BIGINT) AS step,
+           CAST(f AS BIGINT) AS forecast_cents,
+           CAST(a.y AS BIGINT) AS actual_cents,
+           CAST(f - a.y AS BIGINT) AS err_cents
+    FROM fc JOIN idx a ON a.g = fc.g AND a.i = fc.T + fc.s
+    """
 
 
 @_register(
@@ -785,18 +845,8 @@ def interevent_gap_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "kn_bigram_perplexity",
-    r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
-      FROM documents),
-    p2 AS (
-      SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2
-      FROM (SELECT doc_id,
-              unnest(list_transform(range(1, len(t)),
-                                    i -> struct_pack(w1 := t[i], w2 := t[i+1]))) AS bg
-            FROM toks WHERE len(t) >= 2)),
-    big AS (SELECT w1, w2, count(*) AS cb FROM p2 GROUP BY w1, w2),
+    _BIGRAM_CTES
+    + r"""
     lefts AS (SELECT w1, sum(cb) AS cw, count(*) AS n1w1 FROM big GROUP BY w1),
     rights AS (SELECT w2, count(*) AS n1w2 FROM big GROUP BY w2),
     bt AS (SELECT count(*) AS b FROM big),
@@ -1215,41 +1265,8 @@ def poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "ndcg_mrr_retrieval_eval",
-    r"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    d AS (SELECT i AS pos, abs(v[CAST(i + 1 AS INT)]) AS a
-          FROM v, (SELECT unnest(range(64)) AS i) ix),
-    sc AS (SELECT pos, CASE WHEN max(a) > 0 THEN max(a) / 127.0 ELSE 1.0 END AS s
-           FROM d GROUP BY pos),
-    sarr AS (SELECT list(s ORDER BY pos) AS arr FROM sc),
-    r AS (SELECT vec_id,
-            list_transform(range(1, 65),
-              i -> CAST(greatest(-127, least(127,
-                     CAST(round(v[CAST(i AS INT)] / arr[CAST(i AS INT)]) AS INT)))
-                   AS DOUBLE) * arr[CAST(i AS INT)]) AS rv
-          FROM v, sarr),
-    rn AS (SELECT vec_id, rv,
-             sqrt(list_reduce(list_transform(rv, x -> x * x), (a, b) -> a + b)) AS nrm
-           FROM r),
-    qp AS (SELECT a.vec_id AS query_id, b.vec_id AS nid,
-             list_reduce(list_transform(range(1, 65),
-               i -> a.rv[CAST(i AS INT)] * b.rv[CAST(i AS INT)]), (x, y) -> x + y)
-               / (a.nrm * b.nrm) AS s
-           FROM rn a JOIN rn b ON a.vec_id < 20 AND a.vec_id <> b.vec_id),
-    qr AS (SELECT query_id, nid, rk AS p FROM (
-             SELECT query_id, nid,
-                    row_number() OVER (PARTITION BY query_id
-                                       ORDER BY s DESC, nid) AS rk
-             FROM qp) WHERE rk <= 10),
-    ex AS (SELECT query_id, nid, rk FROM (
-             SELECT a.vec_id AS query_id, b.vec_id AS nid,
-                    row_number() OVER (
-                      PARTITION BY a.vec_id
-                      ORDER BY list_cosine_similarity(a.embedding::DOUBLE[],
-                                                      b.embedding::DOUBLE[]) DESC,
-                               b.vec_id) AS rk
-             FROM embeddings a, embeddings b
-             WHERE a.vec_id < 20 AND a.vec_id <> b.vec_id) WHERE rk <= 10),
+    _int8_retrieval_ctes("query_id, nid, rk AS p", "query_id, nid, rk")
+    + r"""
     rl AS (SELECT qr.query_id, qr.p, coalesce(11 - ex.rk, 0) AS rel
            FROM qr LEFT JOIN ex
              ON ex.query_id = qr.query_id AND ex.nid = qr.nid),
@@ -1292,9 +1309,7 @@ def ndcg_mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant. 100 TB shape: the query set is bounded (evals sample
     queries), the corpus legs are one pass each + per-query top-k
     windows, and the grading joins/folds run on 20 x 10 rows."""
-    from pyspark.sql import Window
-
-    from ..analytics.similarity import knn_join_exact, quantize_embeddings_int8
+    from ..analytics.similarity import knn_join_exact
 
     emb = _t(spark, sf_dir, "embeddings")
     rel = knn_join_exact(emb.filter(F.col("vec_id") < 20), emb, k=10).select(
@@ -1302,48 +1317,7 @@ def ndcg_mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("neighbor_id").alias("nid"),
         (11 - F.col("rank")).alias("rel"),
     )
-    deq = quantize_embeddings_int8(emb, return_scales=True).select(
-        "vec_id",
-        F.zip_with(
-            F.col("qvec"), F.col("scales"), lambda qd, s: qd.cast("double") * s
-        ).alias("rv"),
-    )
-    deq = deq.select(
-        "vec_id",
-        "rv",
-        F.sqrt(
-            F.aggregate(
-                F.transform("rv", lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-            )
-        ).alias("nrm"),
-    )
-    qa = F.broadcast(
-        deq.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("rv").alias("ra"),
-            F.col("nrm").alias("na"),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("ra"), F.col("rv"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    scored = (
-        deq.crossJoin(qa)
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("nid"),
-            F.try_divide(dot, F.col("na") * F.col("nrm")).alias("s"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("s"), F.asc("nid"))
-    retrieved = (
-        scored.withColumn("p", F.row_number().over(w))
-        .filter(F.col("p") <= 10)
-        .select("query_id", "nid", "p")
-    )
+    retrieved = _int8_top10(emb, "p")
     graded = retrieved.join(rel, ["query_id", "nid"], "left").select(
         "query_id", "p", F.coalesce(F.col("rel"), F.lit(0)).alias("rel")
     )

@@ -1,56 +1,125 @@
-"""Sketches, temporal statistics, streaming replay (r11 batch 3).
-
-Mechanical split of entry_queries.py (r13): registrations 249..269
-in original definition order; no semantic change.
-"""
+"""Sketches, temporal statistics, streaming replay (r11 batch 3)."""
 
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._shared import (  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from ..session import configure
+from ._shared import (
+    _cents,
+    _drain,
+    _hourly_grid,
+    _near_dup_components,
+    _NEAR_DUP_COMPONENTS_CTES,
     _register,
     _t,
-    _REGISTRY,
-    _REGISTRATION_ORDER,
-    _cents,
-    _PROCFS_FIXTURE,
-    _FakeOpcServer,
-    _FakeKvStore,
-    _FakeRemoteFs,
-    _FakeModbusDevice,
-    _stage_text_atomic,
-    _stream_events_stage,
-    _pinned_shuffle,
-    _poll_stream_rows,
-    _stage_mod_batches,
-    _await_self_termination,
-    _INJECT_N,
-    _INJECT_OFFSET,
-    _with_injected_dups,
-    _dedup_invariant_report,
-    _DEDUP_INVARIANT_ORACLE,
-    _EMBEDDING_DEDUP_ORACLE,
-    _append_host_info_oracle,
-    _language_id_oracle_sql,
-    _GOPHER_STOPWORDS_SQL,
-    _messy_urls,
-    _ZORDER_ORACLE_KEY,
-    _PROFILE_COLS,
-    _PROFILE_ORACLE,
-    _supplier_part_edges,
-    _bpe_oracle_sql,
-    _kmeans_oracle_sql,
-    _kmeans_quality_oracle_sql,
-    _bpe_tokenize_oracle_sql,
-    _hilbert_oracle_sql,
-    _minhash_seed_constants,
-    _minhash_eval_oracle,
-    _lttb_oracle_sql,
-    _holt_oracle_sql,
-    _zorder_key,
-    _zorder_key_sql,
 )
 
+
+def _stage_mod_batches(df, stage: str, n_batches: int = 4, key: str = "event_id") -> None:
+    """Write ``df`` as ``n_batches`` replay files (``batch-kk.parquet``,
+    row membership ``key % n_batches == k``, strictly increasing mtimes
+    so the file-stream source replays them in order) in ONE Spark job
+    (optimization r16): the previous per-batch ``coalesce(1)`` loop
+    re-scanned the input once per batch — 4 scans + 4 single-task write
+    jobs for the 4-batch fixtures. A ``repartition(key % n)`` +
+    ``partitionBy`` write produces exactly one file per batch class in
+    one pass (each class hashes to one task; the writer splits by
+    directory value). Row order WITHIN a batch file is not part of any
+    fixture's semantics (watermarks read the per-batch max event time;
+    sinks are compared as sets).
+
+    Hardening (VERDICT r16 #3 + ADVICE): each batch class must land in
+    EXACTLY one part file — anything that splits task output
+    (maxRecordsPerFile, speculative re-runs) would otherwise silently
+    drop rows from a replay batch, and an EMPTY class would change the
+    replay's batch count (the former empty-class fallback could not
+    actually produce a file: Spark emits no data file for an empty
+    non-zero-partition write). Both now fail loudly; at every driver
+    SF each ``key % n_batches`` class is provably non-empty."""
+    import os as _os
+    import shutil as _shutil
+    import time as _time
+
+    tmp = f"{stage}/_build"
+    (
+        df.withColumn("_b", (F.col(key) % n_batches).cast("int"))
+        .repartition(F.col("_b"))
+        .write.partitionBy("_b")
+        .parquet(tmp)
+    )
+    now = _time.time()
+    for k in range(n_batches):
+        part_dir = f"{tmp}/_b={k}"
+        dst = f"{stage}/batch-{k:02d}.parquet"
+        if not _os.path.isdir(part_dir):
+            raise RuntimeError(
+                f"_stage_mod_batches: batch class {key} % {n_batches} == {k} "
+                "is empty — the replay fixture requires every class to hold "
+                "rows (add data or lower n_batches)"
+            )
+        parts = [f for f in sorted(_os.listdir(part_dir)) if f.endswith(".parquet")]
+        if len(parts) != 1:
+            raise RuntimeError(
+                f"_stage_mod_batches: expected exactly 1 part file for batch "
+                f"class {k}, found {len(parts)} — a split write would "
+                "silently drop rows from the replay batch"
+            )
+        _os.rename(f"{part_dir}/{parts[0]}", dst)
+        _os.utime(dst, (now + k, now + k))
+    _shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _minhash_seed_constants(k: int = 32) -> list[tuple[int, int, int]]:
+    """(seed, a, b) rows for the universal-hash MinHash family
+    h_i(x) = (a_i * md5_28(x) + b_i) mod (2^61 - 1): md5 runs ONCE per
+    shingle and the k components are integer multiply-adds — 32x less
+    hashing than md5-per-seed, same estimator; a/b derive from md5 of
+    the seed index so both engines inline identical literals."""
+    import hashlib as _hl
+
+    rows = []
+    for i in range(k):
+        a = int(_hl.md5(f"A{i}".encode()).hexdigest()[:8], 16) | 1
+        b = int(_hl.md5(f"B{i}".encode()).hexdigest()[:8], 16)
+        rows.append((i, a, b))
+    return rows
+
+
+def _minhash_eval_oracle() -> str:
+    vals = ",\n        ".join(
+        f"({i}, {a}, {b})" for i, a, b in _minhash_seed_constants()
+    )
+    return rf"""
+    WITH ids AS (
+      SELECT doc_id FROM documents WHERE doc_id % 20 = 0),
+    pr AS (
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM ids a JOIN documents b ON b.doc_id = a.doc_id + 1),
+    docs AS (
+      SELECT doc_id, string_split_regex(lower(text), '\s+') AS l
+      FROM documents
+      WHERE doc_id IN (SELECT id_a FROM pr UNION SELECT id_b FROM pr)),
+    sh AS (
+      SELECT doc_id,
+        CASE WHEN len(l) - 2 > 0 THEN
+          list_distinct(list_transform(range(1, CAST(len(l) - 2 AS BIGINT) + 1),
+            i -> array_to_string(list_slice(l, i, i + 2), ' ')))
+        ELSE [array_to_string(l, ' ')] END AS s
+      FROM docs),
+    ex AS (
+      SELECT doc_id, unnest(s) AS g FROM sh),
+    h0 AS (
+      SELECT doc_id, CAST(('0x' || substr(md5(g), 1, 7)) AS BIGINT) AS h0
+      FROM ex),
+    sd AS (SELECT * FROM (VALUES
+        {vals}) AS t(seed, a, b)),
+    hx AS (
+      SELECT h0.doc_id, sd.seed,
+             min((h0.h0 * sd.a + sd.b) % 2305843009213693951) AS h
+      FROM h0 CROSS JOIN sd
+      GROUP BY h0.doc_id, sd.seed),"""
 
 
 @_register(
@@ -101,10 +170,8 @@ def streaming_late_event_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     and deterministically (4 repeat runs, both SFs, hostile config).
     The staging pass is a bounded fixture builder; on a real stream
     the same query runs unchanged."""
-    import os as _os
     import shutil as _shutil
     import tempfile as _tempfile
-    import time as _time
     import uuid as _uuid
 
     configure(spark)
@@ -125,18 +192,11 @@ def streaming_late_event_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n"))
         )
         view = f"stream_late_{_uuid.uuid4().hex[:8]}"
-        with _pinned_shuffle(spark, 4):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(view)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-        try:
-            q.awaitTermination(180)
-        finally:
-            q.stop()
+        _drain(
+            spark,
+            agg.writeStream.format("memory").queryName(view).outputMode("update"),
+            timeout_s=180,
+        )
         final = (
             spark.table(view)
             .select(
@@ -311,29 +371,8 @@ def hll_rollup_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "cluster_representative_policy",
-    r"""
-    WITH RECURSIVE w AS (
-      SELECT doc_id, string_split_regex(lower(text), '\s+') AS l
-      FROM documents WHERE doc_id % 4 = 0),
-    t AS (
-      SELECT doc_id,
-        CASE WHEN len(l) - 2 > 0 THEN
-          list_distinct(list_transform(range(1, CAST(len(l) - 2 AS BIGINT) + 1),
-            i -> array_to_string(list_slice(l, i, i + 2), ' ')))
-        ELSE [array_to_string(l, ' ')] END AS s
-      FROM w),
-    p AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM t a JOIN t b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.s, b.s)) /
-            CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS DOUBLE)
-            >= 0.8),
-    e AS (SELECT id_a AS s, id_b AS d FROM p UNION SELECT id_b, id_a FROM p),
-    reach(n, l) AS (
-      SELECT s, s FROM e
-      UNION
-      SELECT e.d, reach.l FROM e JOIN reach ON e.s = reach.n),
-    comp AS (SELECT n, min(l) AS c FROM reach GROUP BY n),
+    _NEAR_DUP_COMPONENTS_CTES
+    + r"""
     q AS (SELECT comp.n, comp.c, d.n_chars,
                  row_number() OVER (PARTITION BY comp.c
                                     ORDER BY d.n_chars DESC, comp.n ASC) AS rk
@@ -362,15 +401,8 @@ def cluster_representative_policy(spark: SparkSession, sf_dir: str) -> DataFrame
     a (n_chars, -id) struct — no per-cluster sort; the oracle picks
     its winner with an independent window row_number over the
     recursive-CTE closure."""
-    from ..analytics.dedup import allpairs_jaccard_join
-    from ..analytics.graph import connected_components
-
-    configure(spark)
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") % 4 == 0)
-    pairs = allpairs_jaccard_join(docs, threshold=0.8, ngram=3).select(
-        "id_a", "id_b"
-    )
-    comp = connected_components(pairs, src="id_a", dst="id_b")
+    comp = _near_dup_components(docs)
     j = comp.join(
         docs.select(F.col("doc_id").alias("node"), "n_chars"), "node"
     )
@@ -787,16 +819,7 @@ def linear_interpolation_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.temporal import asof_join
 
     ev = _t(spark, sf_dir, "events").where(F.col("user_id") < 20)
-    bounds = ev.groupBy("user_id").agg(
-        F.date_trunc("hour", F.min("ts")).alias("_mn"),
-        F.date_trunc("hour", F.max("ts")).alias("_mx"),
-    )
-    grid = bounds.select(
-        "user_id",
-        F.explode(
-            F.sequence(F.col("_mn"), F.col("_mx"), F.expr("interval 1 hour"))
-        ).alias("ts"),
-    )
+    grid = _hourly_grid(ev)
     obs = ev.select("user_id", "ts", "value")
     prev = asof_join(grid, obs, on="user_id", right_prefix="p_")
     withn = prev.withColumn("nts_key", -F.unix_micros("ts"))
@@ -1657,10 +1680,8 @@ def streaming_outer_join_timeouts(spark: SparkSession, sf_dir: str) -> DataFrame
     appears, the flush trap append-mode sinks inherit. Output is
     per-purchase (n_matches, timed_out); every number must match the
     simulation exactly."""
-    import os as _os
     import shutil as _shutil
     import tempfile as _tempfile
-    import time as _time
     import uuid as _uuid
 
     configure(spark)
@@ -1708,19 +1729,11 @@ def streaming_outer_join_timeouts(spark: SparkSession, sf_dir: str) -> DataFrame
             "left_outer",
         )
         view = f"stream_oj_{_uuid.uuid4().hex[:8]}"
-        with _pinned_shuffle(spark, 4):
-            q = (
-                j.select("pid", "cid")
-                .writeStream.format("memory")
-                .queryName(view)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-        try:
-            q.awaitTermination(240)
-        finally:
-            q.stop()
+        _drain(
+            spark,
+            j.select("pid", "cid").writeStream.format("memory").queryName(view).outputMode("append"),
+            timeout_s=240,
+        )
         sink = spark.table(view)
         return sink.groupBy("pid").agg(
             F.count("cid").cast("long").alias("n_matches"),

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..session import configure, load_table
 from ._shared import (
     _cents,
+    _drain,
     _pinned_shuffle,
     _poll_stream_rows,
     _register,
@@ -412,19 +413,9 @@ def streaming_reservoir_by_source(spark: SparkSession, sf_dir: str) -> DataFrame
     raw = spark.readStream.schema(schema).parquet(stage)
     sampled = reservoir_sample_stream(raw, "source", "doc_id", k=5)
     view = f"stream_rsv_{_uuid.uuid4().hex[:8]}"
-    with _pinned_shuffle(spark, 4):
-        q = (
-            sampled.writeStream.format("memory")
-            .queryName(view)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
     try:
-        if not q.awaitTermination(120):  # timeout => PARTIAL reservoir: fail loudly
-            raise RuntimeError("streaming reservoir did not finish within 120s")
+        _drain(spark, sampled.writeStream.format("memory").queryName(view).outputMode("update"))
     finally:
-        q.stop()
         _shutil.rmtree(stage, ignore_errors=True)
     emitted = spark.table(view)
     # keep each key's final emission: the one with the max n_seen

@@ -1,55 +1,110 @@
-"""Text analysis over documents (language-ID, quality, sampling, web).
-
-Mechanical split of entry_queries.py (r13): registrations 138..174
-in original definition order; no semantic change.
-"""
+"""Text analysis over documents (language-ID, quality, sampling, web)."""
 
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._shared import (  # noqa: F401
-    _register,
-    _t,
-    _REGISTRY,
-    _REGISTRATION_ORDER,
-    _cents,
-    _PROCFS_FIXTURE,
-    _FakeOpcServer,
-    _FakeKvStore,
-    _FakeRemoteFs,
-    _FakeModbusDevice,
-    _stage_text_atomic,
-    _stream_events_stage,
-    _pinned_shuffle,
-    _poll_stream_rows,
-    _await_self_termination,
-    _INJECT_N,
-    _INJECT_OFFSET,
-    _with_injected_dups,
-    _dedup_invariant_report,
-    _DEDUP_INVARIANT_ORACLE,
-    _EMBEDDING_DEDUP_ORACLE,
-    _append_host_info_oracle,
-    _language_id_oracle_sql,
-    _GOPHER_STOPWORDS_SQL,
-    _messy_urls,
-    _ZORDER_ORACLE_KEY,
-    _PROFILE_COLS,
-    _PROFILE_ORACLE,
-    _supplier_part_edges,
-    _bpe_oracle_sql,
-    _kmeans_oracle_sql,
-    _kmeans_quality_oracle_sql,
-    _bpe_tokenize_oracle_sql,
-    _hilbert_oracle_sql,
-    _minhash_seed_constants,
-    _minhash_eval_oracle,
-    _lttb_oracle_sql,
-    _holt_oracle_sql,
-    _zorder_key,
-    _zorder_key_sql,
-)
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from ..analytics import language_id
+from ..session import configure
+from ._shared import _BIGRAM_CTES, _register, _t
+
+
+def _language_id_oracle_sql() -> str:
+    """DuckDB mirror of analytics.text_analysis.language_id: distinct
+    lowercase whitespace tokens, per-language stopword-overlap counts,
+    argmax with ties broken toward the lexicographically greatest lang
+    (Spark's array_max over struct(score, lang) semantics)."""
+    from ..analytics.text_analysis import _LANG_STOPWORDS
+
+    def lit(ws: list[str]) -> str:
+        return "[" + ",".join(f"'{w}'" for w in ws) + "]"
+
+    score_cols = ", ".join(
+        f"len(list_intersect(tk, {lit(ws)})) AS s_{lang}" for lang, ws in _LANG_STOPWORDS.items()
+    )
+    langs_desc = sorted(_LANG_STOPWORDS, reverse=True)
+    case = " ".join(f"WHEN s_{lang} = m THEN '{lang}'" for lang in langs_desc[:-1])
+    return f"""
+WITH toks AS (
+  SELECT list_distinct(list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS tk
+  FROM documents
+), scores AS (
+  SELECT {score_cols},
+         greatest({", ".join("s_" + lang for lang in _LANG_STOPWORDS)}) AS m
+  FROM toks
+), labeled AS (
+  SELECT CASE WHEN m = 0 THEN 'und' {case} ELSE '{langs_desc[-1]}' END AS lang_detected
+  FROM scores
+)
+SELECT lang_detected, count(*) AS count FROM labeled GROUP BY lang_detected
+"""
+
+
+_GOPHER_STOPWORDS_SQL = "['the','and','of','to','a','in','is','that','for','it']"
+
+
+def _messy_urls(docs: DataFrame) -> DataFrame:
+    """Deterministic messy-URL fixture: each document gets one of six
+    real-world URL variants (case, default port, fragment, tracking
+    params, trailing slash, mixed query) of a base resource shared by
+    every doc with the same (source, doc_id % 40) — so canonicalization
+    has genuine collisions to collapse. Mirrored verbatim in the
+    oracle's SQL CASE."""
+    k = (F.col("doc_id") % 40).cast("string")
+    host = F.concat(F.col("source"), F.lit(".example.com"))
+    base = F.concat(F.lit("http://"), host, F.lit("/d/"), k)
+    url = (
+        F.when(F.col("doc_id") % 6 == 0, base)
+        .when(
+            F.col("doc_id") % 6 == 1,
+            F.concat(F.lit("HTTP://"), F.upper(F.col("source")), F.lit(".EXAMPLE.COM:80/d/"), k),
+        )
+        .when(F.col("doc_id") % 6 == 2, F.concat(base, F.lit("/#section-2")))
+        .when(F.col("doc_id") % 6 == 3, F.concat(base, F.lit("?utm_source=feed&utm_campaign=x")))
+        .when(
+            F.col("doc_id") % 6 == 4,
+            F.concat(F.lit("https://"), host, F.lit(":443/d/"), k, F.lit("?gclid=abc123")),
+        )
+        .otherwise(F.concat(base, F.lit("?id="), k, F.lit("&utm_medium=em&ref=2")))
+    )
+    return docs.select(F.col("doc_id"), url.alias("url"))
+
+
+# DuckDB mirror of ``_messy_urls``: the same six URL variants per document.
+_MESSY_URLS_SQL = r"""urls AS (
+      SELECT doc_id,
+        CASE doc_id % 6
+          WHEN 0 THEN 'http://' || source || '.example.com/d/' || (doc_id % 40)
+          WHEN 1 THEN 'HTTP://' || upper(source) || '.EXAMPLE.COM:80/d/' || (doc_id % 40)
+          WHEN 2 THEN 'http://' || source || '.example.com/d/' || (doc_id % 40) || '/#section-2'
+          WHEN 3 THEN 'http://' || source || '.example.com/d/' || (doc_id % 40) || '?utm_source=feed&utm_campaign=x'
+          WHEN 4 THEN 'https://' || source || '.example.com:443/d/' || (doc_id % 40) || '?gclid=abc123'
+          ELSE 'http://' || source || '.example.com/d/' || (doc_id % 40) || '?id=' || (doc_id % 40) || '&utm_medium=em&ref=2'
+        END AS url
+      FROM documents)"""
+
+# DuckDB mirror of analytics.web.canonicalize_url over a ``url`` column.
+_CANONICAL_URL_SQL = r"""(SELECT
+          regexp_replace(h2, '^(https://[^/?#:]*):443$', '\1')
+          || regexp_replace(regexp_replace(rest, '^(/[^?]*[^/?])/+(\?|$)', '\1\2'), '^/+(\?|$)', '/\1')
+         FROM (SELECT
+            regexp_replace(lower(regexp_extract(c4, '^([^:/?#]+://[^/?#]*)', 1)),
+                           '^(http://[^/?#:]*):80$', '\1') AS h2,
+            regexp_replace(c4, '^[^:/?#]+://[^/?#]*', '') AS rest
+           FROM (SELECT pre || regexp_replace(
+                   regexp_replace(
+                     regexp_replace(
+                       regexp_replace(qry,
+                         '(^\?|&)(utm_[A-Za-z0-9]+|gclid|fbclid|msclkid)=[^&]*', '\1', 'g'),
+                       '^\?&+', '?'),
+                     '&&+', '&', 'g'),
+                   '[?&]$', '') AS c4
+            FROM (SELECT
+                regexp_extract(regexp_replace(url, '#.*$', ''), '^([^?]*)', 1) AS pre,
+                regexp_replace(regexp_replace(url, '#.*$', ''), '^[^?]*', '') AS qry)
+           ) t1) t2
+        )"""
 
 
 @_register("language_id_distribution", _language_id_oracle_sql())
@@ -230,10 +285,6 @@ def deterministic_sample_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ===========================================================================
-# public accessors
-# ===========================================================================
-
 @_register(
     "document_chunks_rag",
     r"""
@@ -412,41 +463,12 @@ def source_overlap_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "url_dedup_groups",
-    r"""
-    WITH urls AS (
-      SELECT doc_id,
-        CASE doc_id % 6
-          WHEN 0 THEN 'http://' || source || '.example.com/d/' || (doc_id % 40)
-          WHEN 1 THEN 'HTTP://' || upper(source) || '.EXAMPLE.COM:80/d/' || (doc_id % 40)
-          WHEN 2 THEN 'http://' || source || '.example.com/d/' || (doc_id % 40) || '/#section-2'
-          WHEN 3 THEN 'http://' || source || '.example.com/d/' || (doc_id % 40) || '?utm_source=feed&utm_campaign=x'
-          WHEN 4 THEN 'https://' || source || '.example.com:443/d/' || (doc_id % 40) || '?gclid=abc123'
-          ELSE 'http://' || source || '.example.com/d/' || (doc_id % 40) || '?id=' || (doc_id % 40) || '&utm_medium=em&ref=2'
-        END AS url
-      FROM documents),
+    rf"""
+    WITH {_MESSY_URLS_SQL},
     canon AS (
       SELECT doc_id,
         -- same normalization chain as analytics.web.canonicalize_url
-        (SELECT
-          regexp_replace(h2, '^(https://[^/?#:]*):443$', '\1')
-          || regexp_replace(regexp_replace(rest, '^(/[^?]*[^/?])/+(\?|$)', '\1\2'), '^/+(\?|$)', '/\1')
-         FROM (SELECT
-            regexp_replace(lower(regexp_extract(c4, '^([^:/?#]+://[^/?#]*)', 1)),
-                           '^(http://[^/?#:]*):80$', '\1') AS h2,
-            regexp_replace(c4, '^[^:/?#]+://[^/?#]*', '') AS rest
-           FROM (SELECT pre || regexp_replace(
-                   regexp_replace(
-                     regexp_replace(
-                       regexp_replace(qry,
-                         '(^\?|&)(utm_[A-Za-z0-9]+|gclid|fbclid|msclkid)=[^&]*', '\1', 'g'),
-                       '^\?&+', '?'),
-                     '&&+', '&', 'g'),
-                   '[?&]$', '') AS c4
-            FROM (SELECT
-                regexp_extract(regexp_replace(url, '#.*$', ''), '^([^?]*)', 1) AS pre,
-                regexp_replace(regexp_replace(url, '#.*$', ''), '^[^?]*', '') AS qry)
-           ) t1) t2
-        ) AS canonical_url
+        {_CANONICAL_URL_SQL} AS canonical_url
       FROM urls)
     SELECT canonical_url, CAST(count(*) AS BIGINT) AS n_variants,
            min(doc_id) AS representative_id
@@ -570,18 +592,8 @@ def warc_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "bigram_lm_scores",
-    r"""
-    WITH toks AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '') AS t
-      FROM documents),
-    p2 AS (
-      SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2
-      FROM (SELECT doc_id,
-              unnest(list_transform(range(1, len(t)),
-                                    i -> struct_pack(w1 := t[i], w2 := t[i+1]))) AS bg
-            FROM toks WHERE len(t) >= 2)),
-    big AS (SELECT w1, w2, count(*) AS cb FROM p2 GROUP BY w1, w2),
+    _BIGRAM_CTES
+    + r"""
     lefts AS (SELECT w1, sum(cb) AS cw FROM big GROUP BY w1),
     voc AS (SELECT count(DISTINCT w) AS v
             FROM (SELECT unnest(t) AS w FROM toks)),
@@ -881,40 +893,11 @@ def training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "leakage_safe_split",
-    r"""
-    WITH urls AS (
-      SELECT doc_id,
-        CASE doc_id % 6
-          WHEN 0 THEN 'http://' || source || '.example.com/d/' || (doc_id % 40)
-          WHEN 1 THEN 'HTTP://' || upper(source) || '.EXAMPLE.COM:80/d/' || (doc_id % 40)
-          WHEN 2 THEN 'http://' || source || '.example.com/d/' || (doc_id % 40) || '/#section-2'
-          WHEN 3 THEN 'http://' || source || '.example.com/d/' || (doc_id % 40) || '?utm_source=feed&utm_campaign=x'
-          WHEN 4 THEN 'https://' || source || '.example.com:443/d/' || (doc_id % 40) || '?gclid=abc123'
-          ELSE 'http://' || source || '.example.com/d/' || (doc_id % 40) || '?id=' || (doc_id % 40) || '&utm_medium=em&ref=2'
-        END AS url
-      FROM documents),
+    rf"""
+    WITH {_MESSY_URLS_SQL},
     canon AS (
       SELECT doc_id,
-        (SELECT
-          regexp_replace(h2, '^(https://[^/?#:]*):443$', '\1')
-          || regexp_replace(regexp_replace(rest, '^(/[^?]*[^/?])/+(\?|$)', '\1\2'), '^/+(\?|$)', '/\1')
-         FROM (SELECT
-            regexp_replace(lower(regexp_extract(c4, '^([^:/?#]+://[^/?#]*)', 1)),
-                           '^(http://[^/?#:]*):80$', '\1') AS h2,
-            regexp_replace(c4, '^[^:/?#]+://[^/?#]*', '') AS rest
-           FROM (SELECT pre || regexp_replace(
-                   regexp_replace(
-                     regexp_replace(
-                       regexp_replace(qry,
-                         '(^\?|&)(utm_[A-Za-z0-9]+|gclid|fbclid|msclkid)=[^&]*', '\1', 'g'),
-                       '^\?&+', '?'),
-                     '&&+', '&', 'g'),
-                   '[?&]$', '') AS c4
-            FROM (SELECT
-                regexp_extract(regexp_replace(url, '#.*$', ''), '^([^?]*)', 1) AS pre,
-                regexp_replace(regexp_replace(url, '#.*$', ''), '^[^?]*', '') AS qry)
-           ) t1) t2
-        ) AS g
+        {_CANONICAL_URL_SQL} AS g
       FROM urls),
     assigned AS (
       SELECT doc_id, g,

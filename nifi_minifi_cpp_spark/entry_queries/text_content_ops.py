@@ -1,55 +1,49 @@
-"""Text & content operators, dedup/similarity core, streaming stateful.
-
-Mechanical split of entry_queries.py (r13): registrations 62..97
-in original definition order; no semantic change.
-"""
+"""Text & content operators, dedup/similarity core, streaming stateful."""
 
 from __future__ import annotations
 
-from ._shared import *  # noqa: F401,F403
-from ._shared import (  # noqa: F401
-    _register,
-    _t,
-    _REGISTRY,
-    _REGISTRATION_ORDER,
-    _cents,
-    _PROCFS_FIXTURE,
-    _FakeOpcServer,
-    _FakeKvStore,
-    _FakeRemoteFs,
-    _FakeModbusDevice,
-    _stage_text_atomic,
-    _stream_events_stage,
-    _pinned_shuffle,
-    _poll_stream_rows,
-    _await_self_termination,
-    _INJECT_N,
-    _INJECT_OFFSET,
-    _with_injected_dups,
-    _dedup_invariant_report,
-    _DEDUP_INVARIANT_ORACLE,
-    _EMBEDDING_DEDUP_ORACLE,
-    _append_host_info_oracle,
-    _language_id_oracle_sql,
-    _GOPHER_STOPWORDS_SQL,
-    _messy_urls,
-    _ZORDER_ORACLE_KEY,
-    _PROFILE_COLS,
-    _PROFILE_ORACLE,
-    _supplier_part_edges,
-    _bpe_oracle_sql,
-    _kmeans_oracle_sql,
-    _kmeans_quality_oracle_sql,
-    _bpe_tokenize_oracle_sql,
-    _hilbert_oracle_sql,
-    _minhash_seed_constants,
-    _minhash_eval_oracle,
-    _lttb_oracle_sql,
-    _holt_oracle_sql,
-    _zorder_key,
-    _zorder_key_sql,
-)
+import os
 
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from ..analytics import cosine_topk, knn_join_exact, quality_features
+from ..el import el_string
+from ..model import events_to_flowfiles
+from ..session import configure, load_table
+from ._shared import _drain, _register, _stream_events_stage, _t
+
+
+def _stage_text_atomic(stage: str, build_df) -> None:
+    """Publish a text stage under ``stage`` exactly once, race-safely,
+    REPAIRING torn stages: write to a unique tmp dir, atomic-rename
+    into place. If the rename fails because a previous run crashed
+    mid-publish (stage exists WITHOUT _SUCCESS), the torn dir is
+    removed and the rename retried — the old swallow-everything
+    except-clause served incomplete data forever (review r5)."""
+    import shutil
+    import uuid as _uuid
+
+    done = os.path.join(stage, "_SUCCESS")
+    if os.path.exists(done):
+        return
+    tmp = f"{stage}.tmp-{_uuid.uuid4().hex}"
+    build_df().write.mode("overwrite").text(tmp)
+    try:
+        os.rename(tmp, stage)
+        return
+    except OSError:
+        pass
+    if os.path.exists(done):  # lost the race to a healthy publisher
+        shutil.rmtree(tmp, ignore_errors=True)
+        return
+    shutil.rmtree(stage, ignore_errors=True)  # torn stage: repair
+    try:
+        os.rename(tmp, stage)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
+        if not os.path.exists(done):  # not a benign second race
+            raise
 
 
 # ===========================================================================
@@ -682,22 +676,16 @@ def stateful_bin_packing_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_bin_age_ms=None,  # age flush off -> NoTimeout: no sweep batches
     )
     view = f"bin_pack_{_uuid.uuid4().hex[:8]}"
-    # availableNow trigger (r9, VERDICT r8 #4): drain the staged input,
-    # then the query TERMINATES ITSELF — no poll loop, no q.stop()
-    # interrupting a ProcessingTimeTimeout sweep batch mid-RocksDB-
-    # commit (the source of the transient CANNOT_COMMIT retry noise),
-    # and none of the ~40 wasted sweep epochs the poll window used to
-    # accumulate. The count-threshold flushes all land while draining;
-    # the <8-row remainder stays in state by design.
-    with _pinned_shuffle(spark, 8):  # ~5 correlation keys: 8 state stores, not 32
-        q = (
-            merged.writeStream.format("memory")
-            .queryName(view)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_self_termination(q)
+    # a drain, not a poll loop: none of the ~40 wasted sweep epochs a
+    # poll window accumulates. The count-threshold flushes all land
+    # while draining; the <8-row remainder stays in state by design.
+    # ~5 correlation keys: 8 state stores, not 32.
+    _drain(
+        spark,
+        merged.writeStream.format("memory").queryName(view).outputMode("append"),
+        timeout_s=180,
+        partitions=8,
+    )
     return spark.sql(
         f"""
         SELECT correlation,
@@ -754,16 +742,13 @@ def stateful_defragment_reassembly(spark: SparkSession, sf_dir: str) -> DataFram
         max_buffer_size=100,
     )
     view = f"defrag_{_uuid.uuid4().hex[:8]}"
-    # availableNow + self-termination: see stateful_bin_packing_merge
-    with _pinned_shuffle(spark, 8):  # ~5 defrag keys: 8 state stores, not 32
-        q = (
-            defrag.writeStream.format("memory")
-            .queryName(view)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_self_termination(q)
+    # ~5 defrag keys: 8 state stores, not 32
+    _drain(
+        spark,
+        defrag.writeStream.format("memory").queryName(view).outputMode("append"),
+        timeout_s=180,
+        partitions=8,
+    )
     return spark.sql(
         f"""
         SELECT key,

@@ -1,49 +1,14 @@
-"""Scale utilities: skew handling, bucketing, partition sizing.
+"""Scale utilities: skew handling and bucketing.
 
 The operators stay skew-naive by design (AQE's skew-join splitting
-handles most cases); these helpers cover the cases AQE can't — skewed
-aggregation keys and repeated co-located joins.
+handles most cases); these helpers cover the cases AQE can't — hot
+join keys and repeated co-located joins.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_groupby_agg(
-    df: DataFrame,
-    keys: list[str],
-    aggs: dict[str, tuple[str, str]],
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase aggregation for skewed keys.
-
-    aggs: output_name -> (fn, col) with fn in {sum, count, min, max}
-    (algebraic aggregates that re-combine). Phase 1 aggregates on
-    (key, salt) spreading a hot key over ``salt_buckets`` reducers;
-    phase 2 combines per key.
-    """
-    partial_aggs = []
-    final_aggs = []
-    for out, (fn, col) in aggs.items():
-        if fn == "count":
-            partial_aggs.append(F.count(F.lit(1) if col == "*" else F.col(col)).alias(f"_p_{out}"))
-            final_aggs.append(F.sum(f"_p_{out}").alias(out))
-        elif fn == "sum":
-            partial_aggs.append(F.sum(col).alias(f"_p_{out}"))
-            final_aggs.append(F.sum(f"_p_{out}").alias(out))
-        elif fn == "min":
-            partial_aggs.append(F.min(col).alias(f"_p_{out}"))
-            final_aggs.append(F.min(f"_p_{out}").alias(out))
-        elif fn == "max":
-            partial_aggs.append(F.max(col).alias(f"_p_{out}"))
-            final_aggs.append(F.max(f"_p_{out}").alias(out))
-        else:
-            raise ValueError(f"non-algebraic aggregate {fn!r} cannot be salted")
-    salted = df.withColumn("_salt", (F.rand(seed=7) * salt_buckets).cast("int"))
-    partial = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
-    return partial.groupBy(*keys).agg(*final_aggs)
 
 
 def salted_join(
@@ -82,12 +47,6 @@ def salted_join(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
     )
     return b.join(s, [*keys, "_salt"], how).drop("_salt")
-
-
-def partitions_for_bytes(total_bytes: int, target_mb: int = 128) -> int:
-    """Shuffle-partition sizing rule: one partition per ~target_mb of
-    shuffle data, floor 8 (spill-aware sizing at 100 TB)."""
-    return max(8, total_bytes // (target_mb * 1024 * 1024))
 
 
 def skew_diagnostic(

@@ -399,7 +399,8 @@ def test_multimodal_real_avi_frame_sampling(spark):
     import numpy as np
 
     from nifi_minifi_cpp_spark.analytics import multimodal as mm
-    from nifi_minifi_cpp_spark.analytics.codecs import decode_image, encode_avi_rawdib
+    from nifi_minifi_cpp_spark.analytics.codecs import decode_image
+    from tests.media_fixtures import encode_avi_rawdib
 
     frames = [np.full((6, 9, 3), (i * 16, 7, 255 - i * 16), dtype=np.uint8) for i in range(10)]
     avi = encode_avi_rawdib(frames, fps=5)
@@ -430,7 +431,8 @@ def test_codec_avi_rec_list_grouped_frames():
     silently returning zero frames."""
     import numpy as np
 
-    from nifi_minifi_cpp_spark.analytics.codecs import encode_avi_rawdib, parse_avi
+    from nifi_minifi_cpp_spark.analytics.codecs import parse_avi
+    from tests.media_fixtures import encode_avi_rawdib
 
     frames = [np.full((4, 5, 3), (i * 20, 0, 0), dtype=np.uint8) for i in range(6)]
     avi = encode_avi_rawdib(frames, fps=10)
@@ -481,10 +483,10 @@ def test_codec_mp4_roundtrip_and_sample_table():
     sizes) and every extracted sample is byte-identical to its input
     JPEG."""
     from nifi_minifi_cpp_spark.analytics.codecs import (
-        encode_mp4_mjpeg,
         parse_mp4,
         sample_mp4_frames,
     )
+    from tests.media_fixtures import encode_mp4_mjpeg
 
     jpegs = [
         b"\xff\xd8\xff\xe0" + bytes([i]) * (20 + 3 * i) + b"\xff\xd9" for i in range(8)
@@ -511,10 +513,10 @@ def test_codec_mp4_compressed_codec_refused():
 
     from nifi_minifi_cpp_spark.analytics.codecs import (
         UnsupportedMediaError,
-        encode_mp4_mjpeg,
         parse_mp4,
         sample_mp4_frames,
     )
+    from tests.media_fixtures import encode_mp4_mjpeg
 
     payloads = [b"\x00\x00\x00\x05nalu" + bytes([i]) for i in range(3)]
     mp4 = encode_mp4_mjpeg(payloads, fps=2, width=16, height=16, codec=b"avc1")
@@ -529,7 +531,7 @@ def test_multimodal_real_mp4_frame_sampling(spark):
     """fake=False video sampling dispatches MP4 payloads end-to-end
     through the Spark mapInPandas path."""
     from nifi_minifi_cpp_spark.analytics import multimodal as mm
-    from nifi_minifi_cpp_spark.analytics.codecs import encode_mp4_mjpeg
+    from tests.media_fixtures import encode_mp4_mjpeg
 
     jpegs = [b"\xff\xd8\xff\xe0" + bytes([i]) * 24 + b"\xff\xd9" for i in range(6)]
     mp4 = encode_mp4_mjpeg(jpegs, fps=3, width=8, height=8)
@@ -659,7 +661,7 @@ def test_dedup_invariant_report_detects_broken_dedup(spark, tables):
     """Non-vacuity of the graded invariant oracles: a dedup that drops
     NOTHING must show every injected duplicate surviving and every
     dup pair as a violation — the report can't be satisfied trivially."""
-    from nifi_minifi_cpp_spark.entry_queries import (
+    from nifi_minifi_cpp_spark.entry_queries.dedup_wire_llm import (
         _INJECT_N,
         _dedup_invariant_report,
         _with_injected_dups,
@@ -739,7 +741,7 @@ def _ppm_fixture() -> bytes:
     mean luma = 0.5 exactly."""
     import numpy as np
 
-    from nifi_minifi_cpp_spark.analytics.codecs import encode_ppm
+    from tests.media_fixtures import encode_ppm
 
     arr = np.zeros((2, 4, 3), dtype=np.uint8)
     arr[:, :2, :] = 255
@@ -842,23 +844,6 @@ def test_audio_features_real_path_end_to_end(spark):
     assert row["n_samples"] == 80
     assert row["duration_s"] == pytest.approx(0.01)
     assert row["rms"] == pytest.approx(0.5, abs=1e-6)
-
-
-def test_resize_images_real_path(spark):
-    """Real resize: payload genuinely changes to a PPM of the target
-    size; decode of the resized payload confirms dimensions."""
-    from nifi_minifi_cpp_spark.analytics import multimodal as mm
-    from nifi_minifi_cpp_spark.analytics.codecs import decode_ppm
-
-    media = spark.createDataFrame(
-        [("ppm1", None, bytearray(_ppm_fixture()), "image/x-portable-pixmap", {"origin": "t"})],
-        "media_id string, ref string, payload binary, mime_type string, meta map<string,string>",
-    )
-    row = mm.resize_images(media, width=8, height=6, fake=False).first()
-    arr = decode_ppm(bytes(row["payload"]))
-    assert arr.shape == (6, 8, 3)
-    assert row["meta"]["resized"] == "8x6"
-    assert row["mime_type"] == "image/x-portable-pixmap"
 
 
 def test_pil_gate_unsupported_format():
@@ -1410,10 +1395,11 @@ def test_span_dedup_overlap_any_position(spark):
 
 
 def test_word_spans_overlap_short_text_empty(spark):
-    from nifi_minifi_cpp_spark.analytics.text_analysis import word_spans
+    from nifi_minifi_cpp_spark.analytics.text_analysis import spans_from_words
 
     df = spark.createDataFrame([("a b",), ("",), ("one two three",)], "text string")
-    got = df.select(word_spans(F.col("text"), 3, overlap=True).alias("g")).collect()
+    words = df.select(F.split("text", " ").alias("w"))
+    got = words.select(spans_from_words(F.col("w"), 3, overlap=True).alias("g")).collect()
     assert got[0]["g"] == []          # 2 words < 3-gram -> no spans
     assert got[1]["g"] == []          # empty text -> [''] split -> no 3-gram
     assert got[2]["g"] == ["one two three"]

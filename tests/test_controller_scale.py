@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from nifi_minifi_cpp_spark.plans import FlowController, compile_flow
-from nifi_minifi_cpp_spark.scale import partitions_for_bytes, salted_groupby_agg
 
 
 def _stream_flow_cfg(src_dir: str, sink_name: str, route_value: str) -> str:
@@ -81,33 +80,6 @@ def test_flow_controller_bad_swap_rolls_back(spark, events_dir):
         ctl.await_quiesce()
     finally:
         ctl.stop()
-
-
-def test_salted_groupby_matches_plain(spark, tables):
-    li = tables["lineitem"]
-    plain = {
-        (r["l_returnflag"],): (r["n"], round(r["qty"], 6))
-        for r in li.groupBy("l_returnflag")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("l_quantity").alias("qty"))
-        .collect()
-    }
-    salted = {
-        (r["l_returnflag"],): (r["n"], round(r["qty"], 6))
-        for r in salted_groupby_agg(
-            li, ["l_returnflag"], {"n": ("count", "*"), "qty": ("sum", "l_quantity")}
-        ).collect()
-    }
-    assert salted == plain
-
-
-def test_salted_rejects_non_algebraic(spark, tables):
-    with pytest.raises(ValueError, match="non-algebraic"):
-        salted_groupby_agg(tables["lineitem"], ["l_returnflag"], {"m": ("median", "l_quantity")})
-
-
-def test_partitions_for_bytes():
-    assert partitions_for_bytes(10 * 1024**3) == 80
-    assert partitions_for_bytes(1) == 8
 
 
 def test_skew_diagnostic_flags_hot_key(spark):

@@ -1249,7 +1249,7 @@ def test_stage_text_atomic_repairs_torn_stage(spark, tmp_path):
     must be repaired (removed + republished), not silently served."""
     import os as _os
 
-    from nifi_minifi_cpp_spark.entry_queries import _stage_text_atomic
+    from nifi_minifi_cpp_spark.entry_queries.text_content_ops import _stage_text_atomic
 
     stage = str(tmp_path / "stage")
     _os.makedirs(stage)  # torn: exists, no _SUCCESS

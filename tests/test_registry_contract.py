@@ -10,6 +10,9 @@ int64-vs-float64 typing that Python ``==`` can't see).
 
 from __future__ import annotations
 
+import ast
+import builtins
+import symtable
 import sys
 from pathlib import Path
 
@@ -202,3 +205,66 @@ def test_rotation_ledger_round_is_current():
         f"(never-graded queue + oldest-first backfill) and bump "
         f"ROTATION_LEDGER_ROUND"
     )
+
+
+def _symtable_walk(table):
+    yield table
+    for child in table.get_children():
+        yield from _symtable_walk(child)
+
+
+def test_entry_queries_import_what_they_read():
+    """The package shares code by explicit imports only: no module uses
+    ``import *``; every global a family module reads is bound in that
+    module or is a builtin (otherwise a missing import surfaces only
+    when that query runs); and every top-level name of ``_shared`` is
+    read by two or more families or is registry plumbing (a helper one
+    family reads lives in that family)."""
+    pkg = Path(entry_queries.__file__).parent
+    sources = {p.stem: p.read_text() for p in sorted(pkg.glob("*.py"))}
+    trees = {name: ast.parse(src) for name, src in sources.items()}
+
+    star = sorted(
+        {
+            name
+            for name, tree in trees.items()
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom) and any(a.name == "*" for a in node.names)
+        }
+    )
+    assert not star, f"modules with import *: {star}"
+
+    reads = {}
+    for name, src in sources.items():
+        if name.startswith("_"):
+            continue
+        top = symtable.symtable(src, name, "exec")
+        bound = {
+            s.get_name()
+            for s in top.get_symbols()
+            if s.is_assigned() or s.is_imported() or s.is_namespace()
+        }
+        reads[name] = {
+            s.get_name()
+            for table in _symtable_walk(top)
+            for s in table.get_symbols()
+            if s.is_referenced() and (table is top or s.is_global())
+        }
+        unbound = sorted(n for n in reads[name] - bound if not hasattr(builtins, n))
+        assert not unbound, f"{name} reads names it never binds: {unbound}"
+
+    plumbing = {"QueryFn", "_REGISTRY", "_REGISTRATION_ORDER", "_register"}
+    shared = set()
+    for node in trees["_shared"].body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            shared.add(node.name)
+        elif isinstance(node, ast.Assign):
+            shared.update(t.id for t in node.targets if isinstance(t, ast.Name))
+        elif isinstance(node, ast.AnnAssign):
+            shared.add(node.target.id)
+    readers = {
+        n: sorted(f for f, names in reads.items() if n in names)
+        for n in sorted(shared - plumbing)
+    }
+    lonely = {n: fams for n, fams in readers.items() if len(fams) < 2}
+    assert not lonely, f"_shared names read by fewer than two families: {lonely}"

@@ -900,3 +900,23 @@ def test_streaming_reservoir_merges_across_micro_batches(spark, tmp_path):
     # and the seen-counter is the full union count per key
     seen = {r["key"]: r["n_seen"] for r in emitted.groupBy("key").agg(F.max("n_seen").alias("n_seen")).collect()}
     assert seen == {"a": 40, "b": 20}
+
+
+def test_drain_timeout_raises_and_stops_query(spark, tmp_path):
+    """An availableNow drain that has not finished within its timeout
+    raises TimeoutError and leaves no running query behind: returning
+    would hand the caller a memory table holding only part of the
+    input."""
+    from nifi_minifi_cpp_spark.entry_queries._shared import _drain
+
+    src = str(tmp_path / "in")
+    spark.range(400).repartition(4).write.parquet(src)
+    stream = spark.readStream.schema("id long").option("maxFilesPerTrigger", 1).parquet(src)
+    view = "drain_timeout_probe"
+    with pytest.raises(TimeoutError):
+        _drain(
+            spark,
+            stream.writeStream.format("memory").queryName(view).outputMode("append"),
+            timeout_s=0.001,
+        )
+    assert view not in {q.name for q in spark.streams.active}

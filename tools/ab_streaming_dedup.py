@@ -51,7 +51,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from nifi_minifi_cpp_spark.entry_queries import (
+    from nifi_minifi_cpp_spark.entry_queries._shared import (
         _pinned_shuffle,
         _stream_events_stage,
     )

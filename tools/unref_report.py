@@ -29,6 +29,12 @@ helpers (own > 0) and code only tests reach (tests > 0). ``--all``
 lists every definition; names given on the command line restrict the
 report to those names.
 
+The last line counts duplicated code per package subdirectory
+(``.`` = the package's top-level modules): each file's lines are
+stripped, blank lines and lines starting with ``#`` dropped, and a
+``DUP_WINDOW``-line window counts once if its text appears at two or
+more places in that subdirectory.
+
 Usage: python tools/unref_report.py [--root DIR] [--all] [NAME ...]
 """
 
@@ -41,6 +47,7 @@ import re
 from collections import Counter
 
 PACKAGE = "nifi_minifi_cpp_spark"
+DUP_WINDOW = 8
 
 
 def _py_files(root: str, sub: str) -> list[str]:
@@ -77,6 +84,19 @@ def _definitions(tree: ast.Module) -> list[tuple[str, int, int]]:
             if not node.decorator_list:
                 out.append((node.name, node.lineno, node.end_lineno - node.lineno + 1))
     return out
+
+
+def duplicated_windows(files: list[str], width: int = DUP_WINDOW) -> int:
+    """Distinct ``width``-line windows whose text occurs at two or more
+    places across ``files`` (stripped lines, blank and ``#`` lines dropped)."""
+    seen: Counter = Counter()
+    for path in files:
+        with open(path, encoding="utf-8") as fh:
+            lines = [ln.strip() for ln in fh]
+        lines = [ln for ln in lines if ln and not ln.startswith("#")]
+        for i in range(len(lines) - width + 1):
+            seen["\n".join(lines[i : i + width])] += 1
+    return sum(1 for n in seen.values() if n >= 2)
 
 
 def report(root: str, names: set[str] | None = None, show_all: bool = False) -> list[str]:
@@ -120,6 +140,15 @@ def report(root: str, names: set[str] | None = None, show_all: bool = False) -> 
     lines.append(
         f"{len(rows)} listed ({sum(r[3] for r in rows)} lines); "
         f"{len(dead)} with no reference anywhere ({sum(r[3] for r in dead)} lines)"
+    )
+    by_dir: dict[str, list[str]] = {}
+    for path in areas["pkg"]:
+        rel = os.path.relpath(path, os.path.join(root, PACKAGE))
+        if not rel.startswith(".."):
+            by_dir.setdefault(os.path.dirname(rel) or ".", []).append(path)
+    lines.append(
+        f"duplicated {DUP_WINDOW}-line windows: "
+        + ", ".join(f"{d} {duplicated_windows(fs)}" for d, fs in sorted(by_dir.items()))
     )
     return lines
 
