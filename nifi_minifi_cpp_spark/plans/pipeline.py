@@ -25,6 +25,10 @@ Config shape (YAML or dict):
 
 Multiple connections into one processor funnel (unionByName) —
 Funnel parity (libminifi/include/Funnel.h:27).
+
+Each sink type is defined once, for both kinds of input frame: a batch
+frame is written when the flow compiles, and a stream compiles to an
+unstarted writer that FlowController starts.
 """
 
 from __future__ import annotations
@@ -37,6 +41,7 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from .. import operators as ops
 from ..model import documents_to_flowfiles, events_to_flowfiles
@@ -543,25 +548,6 @@ def _file_stream_source(spark, df, props):
     )
 
 
-@processor("MemorySink")
-def _memory_sink(spark, df, props):
-    """Test/debug sink for streaming flows (results land in a temp
-    view named by ``name``); no-op on batch frames."""
-    return _one(df)
-
-
-@processor("PutFile")
-def _put_file(spark, df, props):
-    """PutFile (PutFile.cpp:75): terminal sink; written eagerly at
-    run() time. Conflict resolution maps to save modes."""
-    mode = {"fail": "errorifexists", "replace": "overwrite", "ignore": "ignore"}.get(
-        props.get("conflict_resolution", "replace"), "overwrite"
-    )
-    fmt = props.get("format", "parquet")
-    df.write.format(fmt).mode(mode).save(props["directory"])
-    return _one(df)
-
-
 # ---------------------------------------------------------------------------
 # sources / transforms over the rest of the engine surface
 # (round 4: every implemented operator is nameable from a flow config)
@@ -798,20 +784,6 @@ def _get_couchbase_key(spark, df, props):
         out = out.localCheckpoint(eager=True)  # one KV get per key across relationships
     ok = F.col("kv_status") == "success"
     return {"success": out.filter(ok), "failure": out.filter(~ok)}
-
-
-@processor("OutputPort")
-def _output_port(spark, df, props):
-    """Site-to-Site output port (RemoteProcessorGroupPort.h): publish
-    the frame into a channel directory with an atomic-rename commit
-    (batch) or the exactly-once parquet sink (streaming via
-    FlowController deferral)."""
-    from .ports import output_port
-
-    if "__rpg_unconfigured__" in props:
-        raise FlowCompileError(props["__rpg_unconfigured__"])
-    output_port(df, props["channel"], checkpoint=props.get("checkpoint"))
-    return _one(df)
 
 
 @processor("InputPort")
@@ -1113,19 +1085,6 @@ def _objectstore_fetch(spark, df, props):
     )
 
 
-def _objectstore_put(spark, df, props):
-    from ..sources import put_object_store
-
-    put_object_store(
-        df,
-        props["url"],
-        fmt=props.get("format", "parquet"),
-        mode=props.get("mode", "append"),
-        partition_by=props.get("partition_by"),
-    )
-    return _one(df)
-
-
 def _objectstore_delete(spark, df, props):
     from ..sources import delete_object_store
 
@@ -1139,9 +1098,6 @@ for _name in ("ListS3", "ListAzureBlobStorage", "ListAzureDataLakeStorage", "Lis
     _PROCESSORS[_name] = _objectstore_list
 for _name in ("FetchS3Object", "FetchAzureBlobStorage", "FetchAzureDataLakeStorage", "FetchGCSObject"):
     _PROCESSORS[_name] = _objectstore_fetch
-_OBJECTSTORE_PUT_TYPES = ("PutS3Object", "PutAzureBlobStorage", "PutAzureDataLakeStorage", "PutGCSObject")
-for _name in _OBJECTSTORE_PUT_TYPES:
-    _PROCESSORS[_name] = _objectstore_put
 for _name in ("DeleteS3Object", "DeleteAzureBlobStorage", "DeleteAzureDataLakeStorage", "DeleteGCSObject"):
     _PROCESSORS[_name] = _objectstore_delete
 
@@ -1204,27 +1160,6 @@ _PROCESSORS["ConsumeMQTT"] = _native_stream_source("mqttlisten", "register_liste
 _PROCESSORS["ConsumeJournald"] = _native_stream_source("journald", "register_listeners")
 
 
-@processor("PublishKafka")
-def _publish_kafka(spark, df, props):
-    """PublishKafka (PublishKafka.cpp:60): FlowFiles -> kafka records
-    -> the kafka sink. ``transport: wire`` (r8) produces executor-side
-    over the stdlib wire client (murmur2 key placement) — no connector
-    jars needed; default stays the connector sink."""
-    from ..streaming.records import flowfiles_to_kafka_records
-
-    records = flowfiles_to_kafka_records(df, topic=props.get("topic"))
-    if not df.isStreaming:
-        if str(props.get("transport", "connector")).lower() == "wire":
-            from ..sources.kafka_wire import publish_kafka_wire_handler
-
-            records.foreachPartition(publish_kafka_wire_handler(props["brokers"]))
-        else:
-            records.write.format("kafka").option(
-                "kafka.bootstrap.servers", props["brokers"]
-            ).save()
-    return _one(df)
-
-
 @processor("QuerySplunkIndexingStatus")
 def _query_splunk_status(spark, df, props):
     """QuerySplunkIndexingStatus (QuerySplunkIndexingStatus.cpp:39):
@@ -1262,25 +1197,150 @@ _PROCESSORS["RunLlamaCppInference"] = _PROCESSORS["RunLlmInference"]
 
 
 # ---------------------------------------------------------------------------
-# handler-style sinks (side-effecting; executor-side foreachPartition).
-# Batch input: the handler runs eagerly at compile. Streaming input:
-# deferred — FlowController wraps the handler in foreachBatch.
+# sinks: one definition per type, for a batch frame and a stream alike.
+# ``define(df, props)`` returns one of the two sink shapes (SURVEY §2.2):
+#   - a format sink: ``df.write`` (saved at compile) or an unstarted
+#     ``df.writeStream``, both built by _format_writer;
+#   - a handler ``(batch_df, epoch_id)``: run at compile with epoch 0,
+#     or wrapped in foreachBatch, whose micro-batch is the exactly-once
+#     barrier.
 # ---------------------------------------------------------------------------
 
-# ptype -> props -> handler(batch_df, epoch_id)
-_SINK_HANDLER_FACTORIES: dict[str, Callable[[dict], Callable]] = {}
+SinkDef = Callable[[DataFrame, dict[str, Any]], Any]
+_SINKS: dict[str, SinkDef] = {}
 
 
-def _handler_sink(name: str, factory: Callable[[dict], Callable]) -> None:
-    _SINK_HANDLER_FACTORIES[name] = factory
+def sink(*names: str):
+    """Register a sink definition under each of ``names``: a processor
+    that writes a batch frame at compile, and the sink-table entry
+    compile_flow turns into an unstarted writer for a stream."""
 
-    @processor(name)
-    def _sink(spark, df, props, _factory=factory):
-        _factory(props)(df, 0)
-        return _one(df)
+    def deco(define: SinkDef) -> SinkDef:
+        def write_batch(spark, df, props):
+            out = define(df, props)
+            if callable(out):
+                out(df, 0)
+            elif out is not None:
+                out.save()
+            return _one(df)
+
+        for name in names:
+            _SINKS[name] = define
+            processor(name)(write_batch)
+        return define
+
+    return deco
 
 
-def _put_tcp_factory(props):
+def _format_writer(
+    df: DataFrame, fmt: str, path: str | None = None, mode: str | None = None,
+    partition_by: list[str] | None = None,
+):
+    """A format sink's writer: ``df.write`` in the batch save ``mode``,
+    or an unstarted ``df.writeStream`` (for a file format, Spark's file
+    sink, whose ``_spark_metadata`` log is the exactly-once commit)."""
+    writer = df.writeStream.format(fmt) if df.isStreaming else df.write.format(fmt).mode(mode)
+    if path is not None:
+        writer = writer.option("path", path)
+    return writer.partitionBy(*partition_by) if partition_by else writer
+
+
+def _stream_writer(out, df: DataFrame, props: dict) -> DataStreamWriter:
+    """A sink's unstarted writer over the stream ``df``, with its
+    checkpoint and trigger cadence."""
+    writer = df.writeStream.foreachBatch(out) if callable(out) else out
+    if props.get("checkpoint"):
+        writer = writer.option("checkpointLocation", props["checkpoint"])
+    if props.get("trigger_period"):
+        # reference 'scheduling period' (TIMER_DRIVEN) on the terminal
+        # processor -> micro-batch trigger cadence
+        from ..streaming.sources import _parse_time_period_ms
+
+        ms = _parse_time_period_ms(props["trigger_period"])
+        writer = writer.trigger(processingTime=f"{ms} milliseconds")
+    return writer
+
+
+@sink("MemorySink")
+def _memory_sink(df, props):
+    """Test/debug sink for streaming flows: results land in a temp view
+    named by ``name``. Nothing to write for a batch frame."""
+    if df.isStreaming:
+        return (
+            df.writeStream.format("memory")
+            .queryName(props["name"])
+            .outputMode(props.get("output_mode", "append"))
+        )
+
+
+@sink("PutFile")
+def _put_file(df, props):
+    """PutFile (PutFile.cpp:75). Conflict resolution maps to batch save
+    modes."""
+    mode = {"fail": "errorifexists", "replace": "overwrite", "ignore": "ignore"}.get(
+        props.get("conflict_resolution", "replace"), "overwrite"
+    )
+    return _format_writer(df, props.get("format", "parquet"), props["directory"], mode)
+
+
+@sink("PutS3Object", "PutAzureBlobStorage", "PutAzureDataLakeStorage", "PutGCSObject")
+def _objectstore_put(df, props):
+    """Put* (PutS3Object.cpp:45): the frame as a dataset under the
+    target prefix; ``partition_by`` gives one directory per value."""
+    return _format_writer(
+        df, props.get("format", "parquet"), props["url"], props.get("mode", "append"),
+        props.get("partition_by"),
+    )
+
+
+@sink("OutputPort")
+def _output_port(df, props):
+    """Site-to-Site output port (RemoteProcessorGroupPort.h): a batch
+    frame commits into the channel with an atomic rename, a stream
+    gets the port's exactly-once parquet sink (plans/ports.py)."""
+    from .ports import output_port, output_port_writer
+
+    if "__rpg_unconfigured__" in props:
+        raise FlowCompileError(props["__rpg_unconfigured__"])
+    if df.isStreaming:
+        return output_port_writer(df, props["channel"], props.get("checkpoint"))
+    return lambda batch, _epoch: output_port(batch, props["channel"])
+
+
+@sink("PublishKafka")
+def _publish_kafka(df, props):
+    """PublishKafka (PublishKafka.cpp:60): FlowFiles -> kafka records.
+    ``transport: wire`` produces executor-side over the stdlib wire
+    client (murmur2 key placement, no connector jars); the default is
+    the connector's kafka sink."""
+    from ..streaming.records import flowfiles_to_kafka_records
+
+    topic = props.get("topic")
+    if str(props.get("transport", "connector")).lower() == "wire":
+        from ..sources.kafka_wire import publish_kafka_wire_handler
+
+        produce = publish_kafka_wire_handler(props["brokers"])
+        return lambda batch, _epoch: (
+            flowfiles_to_kafka_records(batch, topic=topic).foreachPartition(produce)
+        )
+    records = flowfiles_to_kafka_records(df, topic=topic)
+    return _format_writer(records, "kafka").option("kafka.bootstrap.servers", props["brokers"])
+
+
+@sink("PutSQL")
+def _put_sql(df, props):
+    """PutSQL (PutSQL.cpp:37): a write to a catalog table, or to any
+    format/path/JDBC target through the other properties as writer
+    options."""
+    from ..sources import put_sql
+
+    table, mode = props.get("table", ""), props.get("mode", "append")
+    extra = {k: v for k, v in props.items() if k not in ("table", "mode", "checkpoint")}
+    return lambda batch, _epoch: put_sql(batch, table, mode=mode, **extra)
+
+
+@sink("PutTCP")
+def _put_tcp(df, props):
     from ..streaming.sinks import put_tcp_handler
 
     return put_tcp_handler(
@@ -1291,13 +1351,16 @@ def _put_tcp_factory(props):
     )
 
 
-def _put_udp_factory(props):
+@sink("PutUDP")
+def _put_udp(df, props):
     from ..streaming.sinks import put_udp_handler
 
     return put_udp_handler(props["host"], int(props["port"]), content_col=props.get("content_col", "content"))
 
 
-def _loki_factory(props):
+# gRPC Loki variant: same batching/labels contract, injected transport
+@sink("PushGrafanaLokiREST", "PushGrafanaLokiGrpc")
+def _push_loki(df, props):
     from ..streaming.adapters import push_grafana_loki_handler
 
     return push_grafana_loki_handler(
@@ -1309,7 +1372,8 @@ def _loki_factory(props):
     )
 
 
-def _mqtt_factory(props):
+@sink("PublishMQTT")
+def _publish_mqtt(df, props):
     from ..streaming.adapters import publish_mqtt_handler
 
     return publish_mqtt_handler(
@@ -1322,7 +1386,8 @@ def _mqtt_factory(props):
     )
 
 
-def _kinesis_factory(props):
+@sink("PutKinesisStream")
+def _put_kinesis(df, props):
     from ..streaming.adapters import put_kinesis_handler
 
     return put_kinesis_handler(
@@ -1333,7 +1398,8 @@ def _kinesis_factory(props):
     )
 
 
-def _es_factory(props):
+@sink("PostElasticsearch")
+def _post_elasticsearch(df, props):
     from ..streaming.adapters import post_elasticsearch_handler
 
     return post_elasticsearch_handler(
@@ -1346,7 +1412,8 @@ def _es_factory(props):
     )
 
 
-def _put_kv_factory(props):
+@sink("PutCouchbaseKey")
+def _put_kv(df, props):
     from ..sources import put_kv_key
 
     return put_kv_key(
@@ -1356,7 +1423,8 @@ def _put_kv_factory(props):
     )
 
 
-def _put_remote_factory(props):
+@sink("PutSFTP", "PutSmb")
+def _put_remote(df, props):
     from ..sources import put_remote
 
     return put_remote(
@@ -1367,54 +1435,18 @@ def _put_remote_factory(props):
     )
 
 
-_handler_sink("PutTCP", _put_tcp_factory)
-_handler_sink("PutUDP", _put_udp_factory)
-_handler_sink("PushGrafanaLokiREST", _loki_factory)
-# gRPC Loki variant: same batching/labels contract, injected transport
-_handler_sink("PushGrafanaLokiGrpc", _loki_factory)
-_handler_sink("PublishMQTT", _mqtt_factory)
-_handler_sink("PutKinesisStream", _kinesis_factory)
-_handler_sink("PostElasticsearch", _es_factory)
-_handler_sink("PutCouchbaseKey", _put_kv_factory)
-_handler_sink("PutSFTP", _put_remote_factory)
-_handler_sink("PutSmb", _put_remote_factory)
-
-
-@processor("PutSQL")
-def _put_sql(spark, df, props):
-    """PutSQL (PutSQL.cpp:37): eager write to a catalog table, or any
-    format/path/JDBC target via extra writer options."""
-    from ..sources import put_sql
-
-    # 'checkpoint' belongs to the STREAMING path (foreachBatch wiring);
-    # forwarding it here would leak checkpoint=... into batch writer
-    # options (ADVICE r4)
-    extra = {k: v for k, v in props.items() if k not in ("table", "mode", "checkpoint")}
-    put_sql(df, props.get("table", ""), mode=props.get("mode", "append"), **extra)
-    return _one(df)
-
-
 # ---------------------------------------------------------------------------
 # the compiler
 # ---------------------------------------------------------------------------
 
 
-# sink processor types that must defer when their input is a stream
-# (writeStream.start happens in FlowController, not at compile time)
-_STREAMING_SINK_TYPES = (
-    {"PutFile", "MemorySink", "OutputPort", "PublishKafka", "PutSQL"}
-    | set(_OBJECTSTORE_PUT_TYPES)
-    | set(_SINK_HANDLER_FACTORIES)
-)
-
-
 @dataclass
 class CompiledFlow:
-    """Outputs of every (processor, relationship) edge + sink results."""
+    """Outputs of every (processor, relationship) edge, and the
+    unstarted writer of each sink whose input is a stream."""
 
     outputs: dict[str, dict[str, DataFrame]]
-    terminals: dict[str, DataFrame] = field(default_factory=dict)
-    streaming_sinks: dict[str, tuple[DataFrame, str, dict]] = field(default_factory=dict)
+    streaming_sinks: dict[str, DataStreamWriter] = field(default_factory=dict)
     services: "object | None" = None  # ServiceRegistry of the compiled flow
     provenance_reporting: dict | None = None
     _proc_types: dict[str, str] = field(default_factory=dict)
@@ -1465,8 +1497,9 @@ class FlowController:
     C2 applyConfiguration parity, SURVEY §3.1/§3.4:
     /root/reference/libminifi/src/FlowController.cpp:110-171).
 
-    Batch parts of a flow execute at compile (eager sinks); streaming
-    parts become StreamingQuery handles managed here.
+    A flow's batch sinks write when it compiles; its streaming sinks
+    compile to unstarted writers, which start() turns into the
+    StreamingQuery handles managed here.
     """
 
     def __init__(self, spark: SparkSession, config: dict | str):
@@ -1476,71 +1509,18 @@ class FlowController:
         self.queries: list = []
 
     def start(self) -> "FlowController":
+        """Compile the flow, then start its streaming sinks' writers:
+        all of them or, when one fails to start, none."""
         self.flow = compile_flow(self.spark, self.config)
-        for pid, (df, ptype, props) in self.flow.streaming_sinks.items():
-            if ptype == "MemorySink":
-                writer = (
-                    df.writeStream.format("memory")
-                    .queryName(props.get("name", pid))
-                    .outputMode(props.get("output_mode", "append"))
-                )
-            elif ptype == "OutputPort":
-                # site-to-site channel: the parquet sink's metadata log
-                # is the exactly-once transaction; same mixed-mode
-                # guard as the direct output_port path
-                from .ports import check_streaming_channel
-
-                check_streaming_channel(self.spark, props["channel"])
-                writer = (
-                    df.writeStream.format("parquet")
-                    .option("path", props["channel"])
-                    .option("checkpointLocation", props["checkpoint"])
-                )
-            elif ptype == "PublishKafka":
-                from ..streaming.records import flowfiles_to_kafka_records
-
-                records = flowfiles_to_kafka_records(df, topic=props.get("topic"))
-                writer = records.writeStream.format("kafka").option(
-                    "kafka.bootstrap.servers", props["brokers"]
-                )
-                if props.get("checkpoint"):
-                    writer = writer.option("checkpointLocation", props["checkpoint"])
-            elif ptype in _OBJECTSTORE_PUT_TYPES:
-                writer = (
-                    df.writeStream.format(props.get("format", "parquet"))
-                    .option("path", props["url"])
-                    .option("checkpointLocation", props["checkpoint"])
-                )
-            elif ptype == "PutSQL":
-                from ..sources import put_sql
-
-                def _put_sql_batch(bdf, _eid, _props=props):
-                    extra = {k: v for k, v in _props.items() if k not in ("table", "mode", "checkpoint")}
-                    put_sql(bdf, _props.get("table", ""), mode=_props.get("mode", "append"), **extra)
-
-                writer = df.writeStream.foreachBatch(_put_sql_batch)
-                if props.get("checkpoint"):
-                    writer = writer.option("checkpointLocation", props["checkpoint"])
-            elif ptype in _SINK_HANDLER_FACTORIES:
-                # side-effecting sink: the micro-batch is the
-                # exactly-once barrier; the handler runs per epoch
-                writer = df.writeStream.foreachBatch(_SINK_HANDLER_FACTORIES[ptype](props))
-                if props.get("checkpoint"):
-                    writer = writer.option("checkpointLocation", props["checkpoint"])
-            else:  # PutFile
-                writer = (
-                    df.writeStream.format(props.get("format", "parquet"))
-                    .option("path", props["directory"])
-                    .option("checkpointLocation", props["checkpoint"])
-                )
-            if props.get("trigger_period"):
-                # reference 'scheduling period' (TIMER_DRIVEN) on the
-                # terminal processor -> micro-batch trigger cadence
-                from ..streaming.sources import _parse_time_period_ms
-
-                ms = _parse_time_period_ms(props["trigger_period"])
-                writer = writer.trigger(processingTime=f"{ms} milliseconds")
-            self.queries.append(writer.start())
+        started = []
+        try:
+            for writer in self.flow.streaming_sinks.values():
+                started.append(writer.start())
+        except Exception:
+            for q in started:
+                q.stop()
+            raise
+        self.queries.extend(started)
         return self
 
     def await_quiesce(self) -> None:
@@ -1878,7 +1858,7 @@ def compile_flow(spark: SparkSession, config: dict | str) -> CompiledFlow:
         raise FlowCompileError(f"flow has a cycle or unreachable processors: {set(procs) - set(order)}")
 
     outputs: dict[str, dict[str, DataFrame]] = {}
-    streaming_sinks: dict[str, tuple[DataFrame, str, dict]] = {}
+    streaming_sinks: dict[str, DataStreamWriter] = {}
     for pid in order:
         spec = procs[pid]
         ptype = spec["type"]
@@ -1893,10 +1873,10 @@ def compile_flow(spark: SparkSession, config: dict | str) -> CompiledFlow:
             for other in frames[1:]:  # implicit funnel
                 in_df = in_df.unionByName(other, allowMissingColumns=True)
         props = resolve_service_refs(spark, dict(spec.get("properties", {})), services)
-        if ptype in _STREAMING_SINK_TYPES and in_df is not None and in_df.isStreaming:
-            # defer: writeStream.start happens in FlowController
-            streaming_sinks[pid] = (in_df, ptype, props)
-            outputs[pid] = {SUCCESS: in_df}
+        if ptype in _SINKS and in_df is not None and in_df.isStreaming:
+            # the writer starts in FlowController, once every sink compiled
+            streaming_sinks[pid] = _stream_writer(_SINKS[ptype](in_df, props), in_df, props)
+            outputs[pid] = _one(in_df)
             continue
         outputs[pid] = handler(spark, in_df, props)
     return CompiledFlow(

@@ -60,16 +60,16 @@ def _fs_for(df_or_spark, path: str):
     return jvm, fs, jpath
 
 
-def check_streaming_channel(spark: SparkSession, channel_dir: str) -> None:
-    """One-mode-per-channel guard for STREAMING producers: refuse a
-    channel already holding batch ``txn-*`` commits (the parquet sink's
-    ``_spark_metadata`` log would make them invisible to readers).
-    Called by both :func:`output_port` and the FlowController's
-    compiled OutputPort sink — a compiled flow must not bypass the
-    guard (review r5)."""
-    jvm = spark._jvm
-    chan = jvm.org.apache.hadoop.fs.Path(channel_dir)
-    fs = chan.getFileSystem(spark._jsc.hadoopConfiguration())
+def output_port_writer(df: DataFrame, channel_dir: str, checkpoint: str | None):
+    """The streaming port's unstarted writer: the parquet file sink into
+    the channel (its ``_spark_metadata`` log is the exactly-once
+    transaction). Shared by :func:`output_port` and a compiled flow's
+    OutputPort, so neither bypasses the one-mode-per-channel guard: a
+    channel already holding batch ``txn-*`` commits is refused, as the
+    sink log would make them invisible to readers."""
+    if checkpoint is None:
+        raise ValueError("streaming output_port requires a checkpoint dir")
+    jvm, fs, _chan = _fs_for(df, channel_dir)
     txns = fs.globStatus(jvm.org.apache.hadoop.fs.Path(channel_dir, "txn-*"))
     if txns is not None and len(txns) > 0:
         raise ValueError(
@@ -77,6 +77,11 @@ def check_streaming_channel(spark: SparkSession, channel_dir: str) -> None:
             "streaming producer's _spark_metadata log would make them "
             "invisible to readers — use one mode per channel"
         )
+    return (
+        df.writeStream.format("parquet")
+        .option("path", channel_dir)
+        .option("checkpointLocation", checkpoint)
+    )
 
 
 def output_port(df: DataFrame, channel_dir: str, checkpoint: str | None = None):
@@ -91,30 +96,20 @@ def output_port(df: DataFrame, channel_dir: str, checkpoint: str | None = None):
     error instead of a silent torn-batch hazard — use the streaming
     port for those.
     """
-    if not df.isStreaming:
-        # guard BEFORE touching the FS: the clear error must fire even
-        # where the object-store connector jars aren't on the classpath
-        from urllib.parse import urlparse
-
-        scheme = urlparse(channel_dir).scheme.lower()
-        if scheme in _NON_ATOMIC_RENAME_SCHEMES:
-            raise ValueError(
-                f"batch output_port needs atomic rename; '{scheme}' does not "
-                "have it — publish to this channel with the streaming "
-                "output_port (parquet-sink metadata log) instead"
-            )
-    jvm, fs, chan = _fs_for(df, channel_dir)
     if df.isStreaming:
-        if checkpoint is None:
-            raise ValueError("streaming output_port requires a checkpoint dir")
-        check_streaming_channel(df.sparkSession, channel_dir)
-        return (
-            df.writeStream.format("parquet")
-            .option("path", channel_dir)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
+        return output_port_writer(df, channel_dir, checkpoint).start()
+    # guard BEFORE touching the FS: the clear error must fire even
+    # where the object-store connector jars aren't on the classpath
+    from urllib.parse import urlparse
 
+    scheme = urlparse(channel_dir).scheme.lower()
+    if scheme in _NON_ATOMIC_RENAME_SCHEMES:
+        raise ValueError(
+            f"batch output_port needs atomic rename; '{scheme}' does not "
+            "have it — publish to this channel with the streaming "
+            "output_port (parquet-sink metadata log) instead"
+        )
+    jvm, fs, chan = _fs_for(df, channel_dir)
     if fs.exists(jvm.org.apache.hadoop.fs.Path(channel_dir, "_spark_metadata")):
         raise ValueError(
             f"channel {channel_dir} was written by a STREAMING output_port "

@@ -1,5 +1,5 @@
 """Structured Streaming layer: sources, record adapters, stateful
-operators, sinks (SURVEY §2.1-2.2, §2.6, §2.10)."""
+operators, push-style sink handlers (SURVEY §2.1-2.2, §2.6, §2.10)."""
 
 from .adapters import (
     batch_by_count_and_age,
@@ -23,15 +23,10 @@ from .records import (
     parse_syslog,
 )
 from .sinks import (
-    console_sink,
-    foreach_batch_sink,
     http_post_handler,
     http_relationship,
     invoke_http,
     route_invoke_http,
-    kafka_sink,
-    memory_sink,
-    put_file_sink,
     put_tcp_handler,
     put_udp_handler,
 )
@@ -55,13 +50,8 @@ __all__ = [
     "defragment_text_stream",
     "make_bin_packer",
     "make_defragmenter",
-    "put_file_sink",
     "put_udp_handler",
     "put_tcp_handler",
-    "kafka_sink",
-    "console_sink",
-    "memory_sink",
-    "foreach_batch_sink",
     "http_post_handler",
     "http_relationship",
     "invoke_http",

@@ -3,8 +3,8 @@ Kinesis, Elasticsearch.
 
 Each adapter separates the NiFi-parity content — batching boundaries,
 payload shapes, ack bookkeeping — into PURE functions that need no
-network and no Spark, with thin executor-side handlers on top (the same
-``foreach_batch_sink``/``mapInPandas`` pattern as ``invoke_http``).
+network and no Spark, with thin executor-side handlers on top
+(``foreachBatch`` handlers, or ``mapInPandas`` like ``invoke_http``).
 Clients are injected via factories so every semantic is testable with
 fakes; the real clients (requests/boto3/elasticsearch) import lazily.
 

@@ -1,68 +1,20 @@
-"""Streaming sinks (SURVEY §2.2) — writeStream + foreachBatch adapters.
+"""Push-style sinks (SURVEY §2.2): InvokeHTTP and the foreachBatch
+handlers for HTTP POST, PutTCP and PutUDP.
 
-Built-in formats cover PutFile (file formats), PublishKafka (kafka),
-LogAttribute (console). Everything push-style (HTTP, Splunk, Loki,
-MQTT, SQL DML) is a foreachBatch adapter: per micro-batch, partitions
-are processed executor-side; the epoch id gives idempotency keys for
-the reference's session-commit exactly-once analogue
-(ProcessSession.cpp:855-985 -> checkpoint + idempotent sink).
+``invoke_http`` sends one request per row executor-side,
+``route_invoke_http`` splits the result by status class
+(``http_relationship``), and ``build_http_session_factory`` wires
+declared SSL Context / Proxy Configuration services into the transport.
+``http_post_handler``, ``put_tcp_handler`` and ``put_udp_handler``
+return ``(batch_df, epoch_id)`` handlers; under ``foreachBatch`` the
+epoch id gives idempotency keys for the reference's session-commit
+exactly-once analogue (ProcessSession.cpp:855-985 -> checkpoint +
+idempotent sink). The flow's sinks are defined in ``plans/pipeline.py``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
-
-
-def put_file_sink(df: DataFrame, path: str, checkpoint: str, fmt: str = "parquet", **options):
-    """PutFile (PutFile.cpp:75): durable file sink with checkpointing
-    (conflict strategy = the format's append semantics)."""
-    return (
-        df.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .options(**options)
-        .start()
-    )
-
-
-def kafka_sink(df: DataFrame, bootstrap_servers: str, checkpoint: str, topic: str | None = None):
-    """PublishKafka (PublishKafka.cpp:610): expects key/value[/topic]
-    columns (see records.flowfiles_to_kafka_records)."""
-    writer = (
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("checkpointLocation", checkpoint)
-    )
-    if topic:
-        writer = writer.option("topic", topic)
-    return writer.start()
-
-
-def console_sink(df: DataFrame, **options):
-    """LogAttribute (LogAttribute.cpp:124): debug sink."""
-    return df.writeStream.format("console").options(**options).start()
-
-
-def memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
-    """Test sink: query results land in a temp view."""
-    return df.writeStream.format("memory").queryName(name).outputMode(output_mode).start()
-
-
-def foreach_batch_sink(
-    df: DataFrame,
-    handler: Callable[[DataFrame, int], None],
-    checkpoint: str | None = None,
-):
-    """Generic adapter for push-style sinks (InvokeHTTP, PutSplunkHTTP,
-    PushGrafanaLoki, PutSQL, PublishMQTT...): ``handler(batch_df,
-    epoch_id)`` runs once per micro-batch with exactly-once replay
-    protection from the checkpoint."""
-    writer = df.writeStream.foreachBatch(handler)
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 def build_http_session_factory(ssl_conf: dict | None = None, proxy_conf: dict | None = None):

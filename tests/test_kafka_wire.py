@@ -393,6 +393,42 @@ connections:
     assert all(bytes(r["value"]) == b"hello-wire" for r in recs)
 
 
+def test_flow_controller_publish_kafka_wire_stream(spark, broker, tmpdir):
+    """A streaming flow's PublishKafka honours ``transport: wire`` like
+    the batch flow does: FileStreamSource -> PublishKafka under
+    FlowController lands every input row in the broker (the connector
+    sink would need Kafka jars the engine does not ship)."""
+    from nifi_minifi_cpp_spark.plans import FlowController
+
+    broker.create_topic("streamflow", partitions=1)
+    src = os.path.join(tmpdir, "in")
+    spark.createDataFrame(
+        [(f"u{i}", f"msg-{i}") for i in range(7)], "uuid string, content string"
+    ).write.parquet(src)
+    cfg = {
+        "processors": [
+            {"id": "src", "type": "FileStreamSource",
+             "properties": {"path": src, "schema": "uuid string, content string"}},
+            {"id": "pub", "type": "PublishKafka",
+             "properties": {"brokers": broker.bootstrap, "topic": "streamflow", "transport": "wire",
+                            "checkpoint": os.path.join(tmpdir, "ck")}},
+        ],
+        "connections": [{"source": "src", "destination": "pub"}],
+    }
+    ctl = FlowController(spark, cfg).start()
+    try:
+        ctl.await_quiesce()
+    finally:
+        ctl.stop()
+    cli = MiniKafkaClient(broker.bootstrap)
+    try:
+        recs, hw = cli.fetch("streamflow", 0, 0)
+    finally:
+        cli.close()
+    assert hw == 7
+    assert sorted(bytes(r["value"]) for r in recs) == sorted(b"msg-%d" % i for i in range(7))
+
+
 def test_compressed_batch_roundtrips_and_named_zstd_error():
     """r9 gzip + r10 snappy/lz4 + r13 zstd (pure-Python RFC 8878
     decoder): every codec the reference consumes

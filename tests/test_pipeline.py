@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nifi_minifi_cpp_spark.plans import FlowCompileError, compile_flow, registered_processors
+from nifi_minifi_cpp_spark.plans.pipeline import _SINKS
 
 FLOW_YAML = """
 processors:
@@ -1028,6 +1029,125 @@ def test_streaming_flow_defers_objectstore_put_and_putsql(spark, tmp_path):
         ctl.stop()
     assert spark.read.parquet(out_url).count() == 1
     assert spark.read.parquet(str(tmp_path / "sqlout")).count() == 1
+
+
+def _stream_src(spark, tmp_path, rows, schema) -> dict:
+    """A FileStreamSource processor over ``rows`` staged as parquet."""
+    src = str(tmp_path / "in")
+    spark.createDataFrame(rows, schema).write.parquet(src)
+    return {"id": "src", "type": "FileStreamSource", "properties": {"path": src, "schema": schema}}
+
+
+def test_streaming_objectstore_put_partition_by(spark, tmp_path):
+    """A streaming object-store put lays out ``partition_by`` like the
+    batch put: one ``filename=<v>`` directory per value."""
+    import os as _os
+
+    from nifi_minifi_cpp_spark.plans.pipeline import FlowController
+
+    sink = tmp_path / "sink"
+    cfg = {
+        "processors": [
+            _stream_src(spark, tmp_path, [("a.txt", "x"), ("b.txt", "y")], "filename string, content string"),
+            {"id": "put", "type": "PutS3Object",
+             "properties": {"url": f"file://{sink}", "checkpoint": str(tmp_path / "ck"),
+                            "partition_by": ["filename"]}},
+        ],
+        "connections": [{"source": "src", "destination": "put"}],
+    }
+    ctl = FlowController(spark, cfg).start()
+    try:
+        ctl.await_quiesce()
+    finally:
+        ctl.stop()
+    assert sorted(e for e in _os.listdir(sink) if not e.startswith(("_", "."))) == [
+        "filename=a.txt", "filename=b.txt",
+    ]
+
+
+@pytest.mark.parametrize("bad_first", [True, False])
+def test_flow_controller_start_is_all_or_nothing(spark, tmp_path, bad_first):
+    """When one streaming sink fails to start, FlowController.start
+    stops the queries it already started before re-raising, whichever
+    order the sinks are listed in."""
+    import os as _os
+
+    from nifi_minifi_cpp_spark.plans.pipeline import FlowController
+
+    view = f"all_or_nothing_{int(bad_first)}_{_os.getpid()}"
+    bad = {"id": "put", "type": "PutFile",
+           "properties": {"directory": str(tmp_path / "out"), "format": "no_such_format",
+                          "checkpoint": str(tmp_path / "ck")}}
+    mem = {"id": "mem", "type": "MemorySink", "properties": {"name": view}}
+    sinks = [bad, mem] if bad_first else [mem, bad]
+    cfg = {
+        "processors": [_stream_src(spark, tmp_path, [(1, "a")], "id long, v string"), *sinks],
+        "connections": [{"source": "src", "destination": s["id"]} for s in sinks],
+    }
+    before = {q.id for q in spark.streams.active}
+    ctl = FlowController(spark, cfg)
+    try:
+        with pytest.raises(Exception, match="no_such_format"):
+            ctl.start()
+        assert ctl.queries == []
+        assert {q.id for q in spark.streams.active} <= before
+    finally:
+        for q in spark.streams.active:
+            if q.id not in before:
+                q.stop()
+
+
+def _minimal_sink_props(ptype: str, tmp) -> dict:
+    """Smallest properties each sink type compiles with; client
+    factories are fakes that compiling never calls."""
+    def fake():
+        raise AssertionError("a sink client was built at compile time")
+
+    store = {"url": f"file://{tmp}/store", "checkpoint": f"{tmp}/ck"}
+    remote = {"client_factory": fake}
+    loki = {"url": "http://localhost:9"}
+    return {
+        "MemorySink": {"name": "sink_table"},
+        "OutputPort": {"channel": f"{tmp}/chan", "checkpoint": f"{tmp}/ck"},
+        "PostElasticsearch": {"hosts": "http://localhost:9"},
+        "PublishKafka": {"brokers": "localhost:9", "topic": "t"},
+        "PublishMQTT": {"topic": "t", "client_factory": fake},
+        "PushGrafanaLokiGrpc": loki,
+        "PushGrafanaLokiREST": loki,
+        "PutAzureBlobStorage": store,
+        "PutAzureDataLakeStorage": store,
+        "PutCouchbaseKey": remote,
+        "PutFile": {"directory": f"{tmp}/out", "checkpoint": f"{tmp}/ck"},
+        "PutGCSObject": store,
+        "PutKinesisStream": {"stream_name": "s", "client_factory": fake},
+        "PutS3Object": store,
+        "PutSFTP": remote,
+        "PutSQL": {"table": "t"},
+        "PutSmb": remote,
+        "PutTCP": {"host": "localhost", "port": 9},
+        "PutUDP": {"host": "localhost", "port": 9},
+    }[ptype]
+
+
+@pytest.mark.parametrize("ptype", sorted(_SINKS))
+def test_every_sink_type_defers_on_a_stream(spark, tmp_path, ptype):
+    """Every entry of the sink table compiles a streaming input to an
+    unstarted writer in ``streaming_sinks``; compiling starts no query."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    cfg = {
+        "processors": [
+            _stream_src(spark, tmp_path, [("u1", "c1", {"k": "v"})],
+                        "uuid string, content string, attributes map<string,string>"),
+            {"id": "sink", "type": ptype, "properties": _minimal_sink_props(ptype, tmp_path)},
+        ],
+        "connections": [{"source": "src", "destination": "sink"}],
+    }
+    before = {q.id for q in spark.streams.active}
+    flow = compile_flow(spark, cfg)
+    assert isinstance(flow.streaming_sinks["sink"], DataStreamWriter)
+    assert flow.df("sink").isStreaming
+    assert {q.id for q in spark.streams.active} == before
 
 
 def test_fetch_file_relationships_single_read(spark, tmp_path):

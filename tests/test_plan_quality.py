@@ -566,7 +566,8 @@ def test_plan_audit_tracks_registry_in_lockstep():
     missing = registered - audited
     assert not missing, (
         f"queries registered without a PLAN_AUDIT row (run "
-        f"tools/plan_audit.py): {sorted(missing)}"
+        f"tools/plan_audit.py and copy its stamped file over "
+        f"PLAN_AUDIT.json): {sorted(missing)}"
     )
     assert audit["violations"] == []
 

@@ -33,7 +33,7 @@ def _write_events_parquet(spark, sf_dir, outdir):
 
 
 def _run_to_memory(df, name, output_mode="append"):
-    q = st.memory_sink(df, name, output_mode)
+    q = df.writeStream.format("memory").queryName(name).outputMode(output_mode).start()
     q.processAllAvailable()
     q.stop()
 

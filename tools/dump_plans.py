@@ -1,7 +1,8 @@
 """Dump ``explain("formatted")`` for a set of registered queries to
-``plans/$SPARK_GRAFT_PLAN_DIR/<query>_<tag>.txt`` (default ``r17``) —
-the optimization round's before/after plan artifacts (the judge checks
-plan claims against these files).
+``plans/$SPARK_GRAFT_PLAN_DIR/<query>_<tag>.txt``, the before/after plan
+artifacts that back a plan claim. With ``SPARK_GRAFT_PLAN_DIR`` unset
+the files go to the ignored ``.plan_out/plans/`` (before and after
+side by side), so a run never overwrites a committed plan directory.
 
 Usage: python tools/dump_plans.py <tag> <query1,query2,...> [sf_dir]
        python tools/dump_plans.py before all   # every registered query
@@ -25,11 +26,9 @@ def main() -> None:
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.001"
     qs = entry.queries()
     names = sorted(qs) if names_arg == "all" else [n for n in names_arg.split(",") if n]
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("SPARK_GRAFT_PLAN_DIR", "r17"),
-    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    plan_dir = os.environ.get("SPARK_GRAFT_PLAN_DIR")
+    out_dir = os.path.join(root, "plans", plan_dir) if plan_dir else os.path.join(root, ".plan_out", "plans")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump-plans", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
     spark.sparkContext.setLogLevel("ERROR")

@@ -9,8 +9,11 @@ executed plan is checked for the two anti-patterns the engine bans —
   Python crossing must be Arrow-batched (ArrowEvalPython / MapInPandas
   / FlatMapGroupsInPandas are allowed).
 
-Writes PLAN_AUDIT.json ({query: {cartesian, row_python, exchanges,
-python_nodes}}) and exits non-zero on any violation. Queries whose
+Writes ``.plan_out/PLAN_AUDIT-<UTC stamp>.json`` ({query: {cartesian,
+row_python, exchanges, python_nodes}}), prints its path, and exits
+non-zero on any violation. A run never overwrites the committed
+PLAN_AUDIT.json that the plan-quality tests read; to commit a new
+audit, copy the stamped file over it. Queries whose
 construction needs live fixtures (sockets, subprocesses) still build —
 the audit only PLANS (no .collect()), so it stays cheap.
 
@@ -22,6 +25,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -59,9 +63,12 @@ def main() -> None:
         if cartesian or row_python:
             violations.append(name)
             print(f"VIOLATION {name}: cartesian={cartesian} row_python={row_python}")
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLAN_AUDIT.json")
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".plan_out")
+    os.makedirs(out_dir, exist_ok=True)
+    out = os.path.join(out_dir, f"PLAN_AUDIT-{time.strftime('%Y%m%dT%H%M%SZ', time.gmtime())}.json")
     with open(out, "w") as f:
         json.dump({"sf_dir": SF_DIR, "violations": violations, "queries": report}, f, indent=1)
+    print(f"# audit: {out}")
     ok = len(report) - len(violations)
     print(f"\n{ok}/{len(report)} clean; violations: {violations or 'none'}")
     sys.exit(1 if violations else 0)

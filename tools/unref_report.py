@@ -17,6 +17,8 @@ References are counted per area, each column separately:
 
     own    the definition's own module (its def line excluded)
     pkg    other modules of the package, plus ``__spark_entry__.py``
+    init   re-exports: a package ``__init__.py``'s top-level imports and
+           its ``__all__`` strings (its other mentions count in pkg)
     tests  ``tests/``
     tools  ``tools/``
     perf   ``perfbench/``
@@ -25,7 +27,8 @@ References are counted per area, each column separately:
 
 By default the report lists definitions with no reference in pkg,
 tools, perf, bench or readme: dead code (own 0, tests 0), module-private
-helpers (own > 0) and code only tests reach (tests > 0). ``--all``
+helpers (own > 0), code only tests reach (tests > 0) and code reached
+only through a re-export (init > 0). ``--all``
 lists every definition; names given on the command line restrict the
 report to those names.
 
@@ -76,6 +79,18 @@ def _mentions(tree: ast.AST) -> Counter:
     return seen
 
 
+def _reexports(tree: ast.Module) -> Counter:
+    """Names a package ``__init__.py`` re-exports: its top-level
+    imported names and the strings of its ``__all__``."""
+    seen: Counter = Counter()
+    for node in tree.body:
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            seen.update(a.name.rsplit(".", 1)[-1] for a in node.names)
+        elif isinstance(node, ast.Assign) and any(getattr(t, "id", None) == "__all__" for t in node.targets):
+            seen.update(c.value for c in ast.walk(node.value) if isinstance(c, ast.Constant))
+    return seen
+
+
 def _definitions(tree: ast.Module) -> list[tuple[str, int, int]]:
     """Undecorated module-level (name, first line, line count)."""
     out = []
@@ -113,6 +128,9 @@ def report(root: str, names: set[str] | None = None, show_all: bool = False) -> 
             with open(path, encoding="utf-8") as fh:
                 parsed[path] = ast.parse(fh.read(), path)
     mentions = {path: _mentions(tree) for path, tree in parsed.items()}
+    init = {p: _reexports(parsed[p]) for p in areas["pkg"] if os.path.basename(p) == "__init__.py"}
+    for path, reexported in init.items():
+        mentions[path] -= reexported
     readme = ""
     if os.path.exists(os.path.join(root, "README.md")):
         with open(os.path.join(root, "README.md"), encoding="utf-8") as fh:
@@ -126,12 +144,13 @@ def report(root: str, names: set[str] | None = None, show_all: bool = False) -> 
             counts = {"own": mentions[module][name]}
             for area, files in areas.items():
                 counts[area] = sum(mentions[p][name] for p in files if p != module)
+            counts["init"] = sum(c[name] for p, c in init.items() if p != module)
             counts["readme"] = len(re.findall(rf"\b{re.escape(name)}\b", readme))
             if show_all or names or not any(counts[a] for a in ("pkg", "tools", "perf", "bench", "readme")):
                 rel = os.path.relpath(module, root)
                 rows.append((rel, line, name, n_lines, counts))
 
-    cols = ("own", "pkg", "tests", "tools", "perf", "bench", "readme")
+    cols = ("own", "pkg", "init", "tests", "tools", "perf", "bench", "readme")
     lines = [f"{'definition':<64} {'lines':>5} " + " ".join(f"{c:>6}" for c in cols)]
     for rel, line, name, n_lines, counts in rows:
         where = f"{rel}:{line} {name}"
