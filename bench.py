@@ -15,6 +15,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from nifi_minifi_cpp_spark.metrics import codegen_compiles
 from nifi_minifi_cpp_spark.session import get_spark
 
 
@@ -217,11 +218,18 @@ def main():
     except Exception:
         pass
 
-    def run_once(fn) -> float:
+    # Janino compiles per sample (codegen-cache misses), read outside the
+    # timed region: a sweep-2+ sample that still compiles shows a
+    # generated-class working set larger than the session's cache
+    compile_runs: dict[str, list[int]] = {}
+
+    def run_once(fn) -> tuple[float, int]:
+        compiled, _ = codegen_compiles(spark)
         start = time.perf_counter()
         df = fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - start, 3)
+        elapsed = round(time.perf_counter() - start, 3)
+        return elapsed, codegen_compiles(spark)[0] - compiled
 
     def median(vals: list[float]) -> float:
         import statistics
@@ -249,7 +257,7 @@ def main():
             # are best-effort: a fixture that can't re-run in the same
             # session degrades the entry to fewer samples.
             try:
-                elapsed = run_once(fn)
+                elapsed, compiles = run_once(fn)
             except Exception as exc:  # noqa: BLE001 — record and continue
                 if sweep == 0:
                     errors[name] = f"{type(exc).__name__}: {exc}"[:500]
@@ -262,6 +270,7 @@ def main():
                     )
                 continue
             raw_runs.setdefault(name, []).append(elapsed)
+            compile_runs.setdefault(name, []).append(compiles)
         print(f"# --- sweep {sweep + 1}/{n_runs} complete ---", file=sys.stderr)
 
     for name, runs in raw_runs.items():
@@ -279,6 +288,7 @@ def main():
         "aggregation": f"per-query median of {n_runs} sweep-spaced samples",
         "queries": timings,
         "runs": raw_runs,
+        "codegen_compiles": compile_runs,
         "regressed": regressed,
         "errors": errors,
         "sf": sf,

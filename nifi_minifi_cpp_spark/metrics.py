@@ -8,6 +8,8 @@ TransferredBytes and onTrigger runtimes
 Spark-first equivalents:
 - batch: the Observation API — metrics piggyback on the job that
   computes the result, zero extra passes;
+- code generation: ``codegen_compiles``, the JVM's Janino compile
+  count and time, read by the tests and by ``bench.py`` per query;
 - streaming: the query's per-batch progress dicts
   (``StreamingQuery.recentProgress``: rows/sec, batch durations, state
   store sizes) held in a ``FlowMetricsLog`` — the QueryMetrics /
@@ -69,6 +71,21 @@ def with_transfer_metrics(
         size.alias("transferred_bytes"),
     )
     return observed, TransferMetrics(name, obs)
+
+
+def codegen_compiles(spark) -> tuple[int, float]:
+    """Janino compiles so far in this JVM: ``(count, total_ms)``.
+
+    Spark counts a compile only on a miss of its generated-class cache
+    (``spark.sql.codegen.cache.maxEntries``, sized in ``session.py``), so
+    the difference of two reads is the classes compiled in between, by
+    the driver and, in local mode, by the executors that share its JVM.
+    Both counters are JVM-wide: another query running at the same time
+    adds its compiles too."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    total_ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return int(count), total_ns / 1e6
 
 
 @dataclass

@@ -1286,7 +1286,9 @@ def _put_file(df, props):
 @sink("PutS3Object", "PutAzureBlobStorage", "PutAzureDataLakeStorage", "PutGCSObject")
 def _objectstore_put(df, props):
     """Put* (PutS3Object.cpp:45): the frame as a dataset under the
-    target prefix; ``partition_by`` gives one directory per value."""
+    target prefix; ``partition_by`` gives one directory per value.
+    ``sources.objectstore.put_object_store`` saves this writer outside
+    a flow."""
     return _format_writer(
         df, props.get("format", "parquet"), props["url"], props.get("mode", "append"),
         props.get("partition_by"),

@@ -84,7 +84,6 @@ def put_object_store(
     fmt: str = "parquet",
     mode: str = "append",
     partition_by: list[str] | None = None,
-    **options,
 ) -> None:
     """Put* (PutS3Object.cpp:45): the dataset write. The reference
     puts one object per FlowFile through the provider SDK; the
@@ -92,11 +91,12 @@ def put_object_store(
     target prefix (executors write shards directly against the store
     via the FS connector — multipart upload, retries, and committer
     semantics included). One-object-per-row layouts are a
-    ``partitionBy`` away."""
-    writer = df.write.format(fmt).mode(mode).options(**options)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(url)
+    ``partitionBy`` away. The write is the flow's Put* sink
+    (``plans/pipeline.py``), saved now."""
+    from ..plans.pipeline import _objectstore_put
+
+    props = {"url": url, "format": fmt, "mode": mode, "partition_by": partition_by}
+    _objectstore_put(df, props).save()
 
 
 def delete_object_store(spark: SparkSession, url: str, recursive: bool = False) -> bool:
